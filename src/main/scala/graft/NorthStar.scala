@@ -740,12 +740,10 @@ object NorthStar {
       ManifestSink.statsAppend(
         ev.repartitionByRange(8, col("event_id")),
         tmp, None, Seq("event_id", "value"))
-      ManifestSink.deleteWhere(s, tmp, ManifestSink.SkipPredicate
-        .NumRange("event_id", (3 * n / 8).toDouble,
-          (4 * n / 8 - 1).toDouble))
-      ManifestSink.updateWhere(s, tmp, ManifestSink.SkipPredicate
-        .NumRange("event_id", (6 * n / 8).toDouble,
-          (7 * n / 8 - 1).toDouble),
+      ManifestSink.deleteWhere(s, tmp,
+        col("event_id").between(3 * n / 8, 4 * n / 8 - 1))
+      ManifestSink.updateWhere(s, tmp,
+        col("event_id").between(6 * n / 8, 7 * n / 8 - 1),
         Map("value" -> -col("value")))
       ManifestSink.readBack(s, tmp)
         .groupBy(col("event_type"))
@@ -855,7 +853,7 @@ object NorthStar {
     }),
 
     // GDPR-shaped content redaction through copy-on-write: PII-planted
-    // documents ingested with stats, then ONE updateWhereExpr whose
+    // documents ingested with stats, then ONE updateWhere whose
     // predicate is the PII scan itself (piiTotal > 0 — an arbitrary
     // Column, not a stats predicate: content-addressed maintenance has
     // no min/max to prune on, but the per-file match-count pass still
@@ -873,7 +871,7 @@ object NorthStar {
       ManifestSink.statsAppend(
         aug.repartitionByRange(4, col("doc_id")),
         tmp, None, Seq("doc_id"))
-      ManifestSink.updateWhereExpr(s, tmp,
+      ManifestSink.updateWhere(s, tmp,
         Pii.piiTotal(col("text")) > 0,
         Map("text" -> Pii.redact(col("text"))))
       ManifestSink.readBack(s, tmp)
@@ -913,8 +911,8 @@ object NorthStar {
       ManifestSink.mergeInto(s, tmp, src, "event_id",
         statsCols = Seq("event_id", "value"))
       // delete one id slab
-      ManifestSink.deleteWhere(s, tmp, SkipPredicate.NumRange(
-        "event_id", (3 * n / 8).toDouble, (4 * n / 8 - 1).toDouble))
+      ManifestSink.deleteWhere(s, tmp,
+        col("event_id").between(3 * n / 8, 4 * n / 8 - 1))
       // Z-order the debris left by merge + delete
       ManifestSink.optimize(s, tmp, targetBytes = 1L << 18,
         zorderBy = Seq("event_id", "value"), zorderBits = 4)
@@ -1727,7 +1725,7 @@ object NorthStar {
       ManifestSink.statsAppend(
         ev.repartitionByRange(8, col("event_id")),
         tmp, None, Seq("event_id"))
-      ManifestSink.deleteWhereExprMor(s, tmp,
+      ManifestSink.deleteWhereMor(s, tmp,
         pmod(col("event_id"), lit(9L)) === 0)
       val tbl = "graft_q145_" + java.util.UUID.randomUUID()
         .toString.replace("-", "").take(8)
@@ -1762,10 +1760,10 @@ object NorthStar {
           ev.where(pmod(col("event_id"), lit(12L)) === i).coalesce(2),
           tmp, None, Seq("event_id"))
       }
-      ManifestSink.deleteWhereExprMor(s, tmp,
+      ManifestSink.deleteWhereMor(s, tmp,
         pmod(col("event_id"), lit(9L)) === 0)          // v12 (dv-only)
       ManifestSink.checkpoint(s, tmp)                  // 12.checkpoint
-      ManifestSink.deleteWhereExprMor(s, tmp,
+      ManifestSink.deleteWhereMor(s, tmp,
         pmod(col("event_id"), lit(11L)) === 0)         // v13, past it
       def agg(df: org.apache.spark.sql.DataFrame, phase: String) =
         df.groupBy(col("event_type"))
@@ -1798,9 +1796,9 @@ object NorthStar {
       ManifestSink.statsAppend(
         ev.repartitionByRange(8, col("event_id")),
         tmp, None, Seq("event_id"))
-      ManifestSink.deleteWhereExprMor(s, tmp,
+      ManifestSink.deleteWhereMor(s, tmp,
         pmod(col("event_id"), lit(2L)) === 0 && col("event_id") < half)
-      ManifestSink.deleteWhereExprMor(s, tmp,
+      ManifestSink.deleteWhereMor(s, tmp,
         pmod(col("event_id"), lit(101L)) === 0 &&
           col("event_id") >= half)
       ManifestSink.purge(s, tmp, minLiveFraction = 0.8)
@@ -1831,7 +1829,7 @@ object NorthStar {
           ev.where(pmod(col("event_id"), lit(3L)) === i).coalesce(2),
           tmp, None, Seq("event_id"))
       }
-      ManifestSink.deleteWhereExprMor(s, tmp,
+      ManifestSink.deleteWhereMor(s, tmp,
         pmod(col("event_id"), lit(5L)) === 0)          // v3 (dv-only)
       val qn = "graft_q148_" + java.util.UUID.randomUUID()
         .toString.replace("-", "").take(8)
@@ -1911,12 +1909,10 @@ object NorthStar {
       ManifestSink.statsAppend(
         ev.repartitionByRange(8, col("event_id")),
         tmp, None, Seq("event_id", "value"))
-      ManifestSink.deleteWhere(s, tmp, ManifestSink.SkipPredicate
-        .NumRange("event_id", (n / 8).toDouble,
-          (2 * n / 8 - 1).toDouble))
-      ManifestSink.updateWhere(s, tmp, ManifestSink.SkipPredicate
-        .NumRange("event_id", (6 * n / 8).toDouble,
-          (7 * n / 8 - 1).toDouble),
+      ManifestSink.deleteWhere(s, tmp,
+        col("event_id").between(n / 8, 2 * n / 8 - 1))
+      ManifestSink.updateWhere(s, tmp,
+        col("event_id").between(6 * n / 8, 7 * n / 8 - 1),
         Map("value" -> -col("value")))
       ManifestSink.readChangesBetween(s, tmp, 0L)
         .groupBy(col("_commit_version").cast("long").as("version"),
@@ -2010,10 +2006,9 @@ object NorthStar {
       ManifestSink.statsAppend(
         ev.repartitionByRange(8, col("event_id")),
         tmp, None, Seq("event_id", "value"))
-      ManifestSink.deleteWhereMor(s, tmp, ManifestSink.SkipPredicate
-        .NumRange("event_id", (3 * n / 8).toDouble,
-          (4 * n / 8 - 1).toDouble))
-      ManifestSink.updateWhereExprMor(s, tmp,
+      ManifestSink.deleteWhereMor(s, tmp,
+        col("event_id").between(3 * n / 8, 4 * n / 8 - 1))
+      ManifestSink.updateWhereMor(s, tmp,
         pmod(col("event_id"), lit(7L)) === 0,
         Map("value" -> -col("value")))
       ManifestSink.readBack(s, tmp)
@@ -2123,14 +2118,12 @@ object NorthStar {
           tmp, None, Seq("event_id"))
       // the bad delete: wipes [0, 2n/3) — two of the three slabs
       ManifestSink.deleteWhere(s, tmp,
-        ManifestSink.SkipPredicate.NumRange("event_id",
-          0, (2 * n / 3 - 1).toDouble))
+        col("event_id").between(0L, 2 * n / 3 - 1))
       // undo it: metadata-only commit of v2's file set as the new head
       ManifestSink.restore(s, tmp, 2L)
       // the intended, targeted delete lands on the restored state
       ManifestSink.deleteWhere(s, tmp,
-        ManifestSink.SkipPredicate.NumRange("event_id",
-          (n / 3).toDouble, (n / 3 + n / 10).toDouble))
+        col("event_id").between(n / 3, n / 3 + n / 10))
       ManifestSink.readBack(s, tmp)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),

@@ -786,8 +786,7 @@ object Stress {
       }
       val t0 = System.nanoTime()
       val gone = ManifestSink.deleteWhere(spark, dest,
-        ManifestSink.SkipPredicate.NumRange("doc_id",
-          7.0 * per + 10, 8.0 * per - 10))
+        col("doc_id").between(7L * per + 10, 8L * per - 10))
       println(f"STRESS cow_delete               " +
         f"${(System.nanoTime() - t0) / 1e9}%8.2f s  deleted=$gone")
       val t1 = System.nanoTime()
@@ -832,12 +831,12 @@ object Stress {
       build(destCow); build(destMor)
       val pred = pmod(col("doc_id"), lit(7L)) === 0
       val t0 = System.nanoTime()
-      val goneCow = ManifestSink.deleteWhereExpr(spark, destCow, pred)
+      val goneCow = ManifestSink.deleteWhere(spark, destCow, pred)
       println(f"STRESS mor_ladder_cow_delete    " +
         f"${(System.nanoTime() - t0) / 1e9}%8.2f s  deleted=$goneCow " +
         f"(rewrites ~all $batches files)")
       val t1 = System.nanoTime()
-      val goneMor = ManifestSink.deleteWhereExprMor(spark, destMor, pred)
+      val goneMor = ManifestSink.deleteWhereMor(spark, destMor, pred)
       println(f"STRESS mor_ladder_mor_delete    " +
         f"${(System.nanoTime() - t1) / 1e9}%8.2f s  deleted=$goneMor " +
         f"(tombstones only, 0 rewrites)")
@@ -955,7 +954,7 @@ object Stress {
         }
       val destPlain = s"$root/plain"; val destDv = s"$root/dv"
       build(destPlain); build(destDv)
-      val gone = ManifestSink.deleteWhereExprMor(spark, destDv,
+      val gone = ManifestSink.deleteWhereMor(spark, destDv,
         pmod(col("doc_id"), lit(100L)) === 0) // ~1%, every file hit
       def findScan(p: org.apache.spark.sql.execution.SparkPlan)
           : Option[Boolean] = p match {
@@ -1016,8 +1015,8 @@ object Stress {
       build(destP); build(destO)
       val slab = col("doc_id") >= 7 * per && col("doc_id") < 12 * per &&
         pmod(col("doc_id"), lit(5L)) < 3
-      val goneP = ManifestSink.deleteWhereExprMor(spark, destP, slab)
-      val goneO = ManifestSink.deleteWhereExprMor(spark, destO, slab)
+      val goneP = ManifestSink.deleteWhereMor(spark, destP, slab)
+      val goneO = ManifestSink.deleteWhereMor(spark, destO, slab)
       require(goneP == goneO)
       val t0 = System.nanoTime()
       val nDv = ManifestSink.readBack(spark, destP).count()
@@ -1685,7 +1684,6 @@ object Stress {
     // parity is asserted row-for-row against the equivalent
     // expression over the base frame.
     if (enabled("dmlwide")) {
-      import ManifestSink.SkipPredicate
       val root = java.nio.file.Files
         .createTempDirectory("stress_dmlw_").toString
       val dest = s"$root/t"
@@ -1706,8 +1704,7 @@ object Stress {
         Thread.sleep(500); jobs.set(0)
         val t0 = System.nanoTime()
         val n = ManifestSink.updateWhere(spark, dest,
-          SkipPredicate.NumRange("id", 0, hi.toDouble),
-          Map("v" -> -col("v")))
+          col("id").between(0L, hi), Map("v" -> -col("v")))
         val dt = (System.nanoTime() - t0) / 1e9
         Thread.sleep(500)
         (dt, jobs.get(), n)

@@ -104,6 +104,19 @@ object ManifestSink extends Ingest.DestinationSink {
   private def stagingDir(destPath: String, writeId: String): Path =
     new Path(stagingRoot(destPath), writeId)
 
+  /** True — with a `graft.<kind>.skipped_pending_attempts` metric —
+    * when a staged attempt is pending under `destPath`: every commit
+    * path refuses to run over one ([[recover]] first).
+    */
+  private def pendingAttempt(fs: FileSystem, destPath: String,
+      kind: String): Boolean = {
+    val sroot = stagingRoot(destPath)
+    val pending = fs.exists(sroot) && fs.listStatus(sroot).nonEmpty
+    if (pending) println(
+      s"METRIC graft.$kind.skipped_pending_attempts=1 dest=$destPath")
+    pending
+  }
+
   /** Pin a frame once for a multi-pass maintenance verb: executor
     * block storage by default (fast, but a lost executor restarts the
     * whole verb — never corrupts, the commit is atomic), or RELIABLE
@@ -791,18 +804,21 @@ object ManifestSink extends Ingest.DestinationSink {
     val targets: Seq[String] = effectiveTargetsOf(fs, mfs)
     lazy val dvs: Map[String, Seq[(String, Long)]] =
       effectiveDvsOf(fs, mfs)
-    private lazy val stats = fileStatsOf(fs, mfs)
+    private[ManifestSink] lazy val stats = fileStatsOf(fs, mfs)
     private lazy val blooms = bloomIndexOf(org.apache.spark.sql.SparkSession.active, destPath, fs, mfs)
     private lazy val posC = bloomPosCache()
+    /** logical → physical names of renamed columns (empty if none). */
+    private[ManifestSink] lazy val mapping: Map[String, String] =
+      mappingOf(schemaOpt)
     /** Files (from `from`) that may contain a row matching `pred` per
-      * the manifest stats and bloom filters — the [[readBackWherePred]]
-      * decision, exposed for filter-pushdown listing.
+      * the manifest stats and bloom filters — the one file filter of
+      * the pruned reads, the SQL scan's listing and the DML verbs.
       */
     def prune(from: Seq[String], pred: SkipPredicate): Seq[String] = {
-      // stats/bloom keys are PHYSICAL; SQL filters arrive logical
-      val pPhys = mapPredCols(pred, mappingOf(schemaOpt))
+      // stats/bloom keys are PHYSICAL; predicates arrive logical
+      val pPhys = mapPredCols(pred, mapping)
       from.filter(t => mayMatchFile(stats, t, pPhys) &&
-        bloomMayMatchFile(blooms, posC, t, pPhys))
+        blooms.mayMatch(posC, t, pPhys))
     }
     /** Columns the snapshot records skipping stats for — what a SQL
       * DML rewrite passes as `statsCols` to keep coverage.
@@ -824,6 +840,17 @@ object ManifestSink extends Ingest.DestinationSink {
       * None = fall back to a footer sweep.
       */
     lazy val schemaOpt: Option[StructType] = effectiveSchemaOf(fs, mfs)
+    /** The data-file schema the SQL relation and the DML pruning
+      * resolve against: the log's, or — only for logs without usable
+      * `schemaj` lines — a mergeSchema footer sweep over the committed
+      * files (a Spark job).
+      */
+    lazy val dataSchema: StructType =
+      if (targets.isEmpty) StructType(Nil)
+      else schemaOpt.getOrElse(SparkSession.active.read
+        .option("mergeSchema", "true")
+        .parquet(targets.map(t => new Path(destPath, t).toString): _*)
+        .schema)
   }
 
   /** Resolve a [[SnapshotHandle]] at the head, at `versionAsOf`, or at
@@ -1790,12 +1817,22 @@ object ManifestSink extends Ingest.DestinationSink {
       }
     commitRes match {
       case Some(_) =>
-        val (updated, deleted) = counts()
-        val inserted = nSrc - updated
-        println(s"METRIC graft.merge_full_sync.updated=$updated " +
-          s"inserted=$inserted deleted=$deleted " +
-          s"snapshot_version=${baseVersion + 1} dest=$destPath")
-        MergeOutcome.Merged(updated, inserted, deleted)
+        // the commit is durable: a failed count must not turn it into
+        // an exception (a retry would commit a second version) — the
+        // outcome reports -1 counts and the metric line flags it
+        scala.util.Try(counts()) match {
+          case scala.util.Success((updated, deleted)) =>
+            val inserted = nSrc - updated
+            println(s"METRIC graft.merge_full_sync.updated=$updated " +
+              s"inserted=$inserted deleted=$deleted " +
+              s"snapshot_version=${baseVersion + 1} dest=$destPath")
+            MergeOutcome.Merged(updated, inserted, deleted)
+          case scala.util.Failure(e) =>
+            println(s"METRIC graft.merge_full_sync.counts_failed=1 " +
+              s"error=${e.getClass.getSimpleName} " +
+              s"snapshot_version=${baseVersion + 1} dest=$destPath")
+            MergeOutcome.Merged(-1L, -1L, -1L)
+        }
       case None =>
         counts() // drain the background job before returning
         println(s"METRIC graft.merge_full_sync.aborted_log_advanced=1 " +
@@ -1878,11 +1915,8 @@ object ManifestSink extends Ingest.DestinationSink {
       s"[graft] mergeSync: source keys must be unique — " +
         s"$nSrc rows over $nKeys distinct '$keyCol' values")
     val sroot = stagingRoot(destPath)
-    if (fs.exists(sroot) && fs.listStatus(sroot).nonEmpty) {
-      println(s"METRIC graft.merge_sync.skipped_pending_attempts=1 " +
-        s"dest=$destPath")
+    if (pendingAttempt(fs, destPath, "merge_sync"))
       return MergeOutcome.Skipped
-    }
     if (!fs.exists(dest) || manifests(fs, destPath).isEmpty) {
       if (nSrc == 0) return MergeOutcome.NoChange("empty source+table")
       if (statsCols.nonEmpty || bloomCols.nonEmpty)
@@ -2338,8 +2372,7 @@ object ManifestSink extends Ingest.DestinationSink {
             val dvRels = dvL.map(_._2).distinct
             val totalDv = dvL.map(_._3).sum
             val dvDf = spark.read
-              .schema("name STRING, pos BIGINT") // fixed sidecar schema:
-              // skips the per-read footer-inference job
+              .schema(DvSidecarSchema)
               .parquet(dvRels.map(r => new Path(dest, r).toString): _*)
               .select(col("name").as("__graft_fn"),
                 col("pos").as("__graft_pos"))
@@ -2394,11 +2427,7 @@ object ManifestSink extends Ingest.DestinationSink {
     // recover would delete files the snapshot still references. Run
     // recover + finishCommit first; compaction is maintenance, not a
     // correctness step, so skipping is always safe.
-    val sroot = stagingRoot(destPath)
-    if (fs.exists(sroot) && fs.listStatus(sroot).nonEmpty) {
-      println(s"METRIC graft.compact.skipped_pending_attempts=1 dest=$destPath")
-      return
-    }
+    if (pendingAttempt(fs, destPath, "compact")) return
     val lp = logPath(destPath)
     // sweep stale .tmp_* debris from crashed commits/compactions (never
     // readable — manifests() filters on the .manifest suffix — but junk
@@ -2487,12 +2516,7 @@ object ManifestSink extends Ingest.DestinationSink {
     // exists from before the log commit until finishCommit, and this
     // check runs AFTER the log capture, so a commit visible in the
     // captured listing with no pending marker is ledger-final.
-    val sroot = stagingRoot(destPath)
-    if (fs.exists(sroot) && fs.listStatus(sroot).nonEmpty) {
-      println(s"METRIC graft.checkpoint.skipped_pending_attempts=1 " +
-        s"dest=$destPath")
-      return -1L
-    }
+    if (pendingAttempt(fs, destPath, "checkpoint")) return -1L
     // resolve the effective state THROUGH the prior checkpoint, so each
     // checkpoint costs O(tail), not O(versions)
     val mfs = resolvedLog(fs, destPath)
@@ -2573,6 +2597,10 @@ object ManifestSink extends Ingest.DestinationSink {
 
   private val DvDir = "_dv"
   private val CdfDir = "_cdf"
+  /** Fixed schema of a dv sidecar: reading under it skips the per-read
+    * footer-inference job.
+    */
+  private[graft] val DvSidecarSchema = "name STRING, pos BIGINT"
 
   /** Enable the CHANGE DATA FEED for COPY-ON-WRITE commits on this
     * table (Delta's `delta.enableChangeDataFeed` property): from now
@@ -2796,8 +2824,7 @@ object ManifestSink extends Ingest.DestinationSink {
       val dvRels = relevant.values.flatten.map(_._1).toSeq.distinct
       val totalDv = relevant.values.flatten.map(_._2).sum
       val dvDf = spark.read
-        .schema("name STRING, pos BIGINT") // fixed sidecar schema: skips
-        // the per-read footer-inference job
+        .schema(DvSidecarSchema)
         .parquet(dvRels.map(r => new Path(dest, r).toString): _*)
         .select(col("name").as("__graft_fn"),
           col("pos").as("__graft_pos"))
@@ -3071,7 +3098,9 @@ object ManifestSink extends Ingest.DestinationSink {
         if (present.isEmpty) None
         else if (kind == "num") {
           val ds = present.map(_.toDouble)
-          Some((if (isMin) ds.min else ds.max).toString)
+          // a NaN bound stays NaN: unknown to every consumer
+          Some((if (ds.exists(_.isNaN)) Double.NaN
+            else if (isMin) ds.min else ds.max).toString)
         } else Some(present.reduce((a, b) =>
           if ((utf8Cmp(a, b) <= 0) == isMin) a else b))
       }
@@ -3894,9 +3923,10 @@ object ManifestSink extends Ingest.DestinationSink {
           }
         }))
 
-    /** Can the file's filter rule out `pred`? Mirrors the inline
-      * semantics: only equality conjuncts consult it; absent filters
-      * and non-equality predicates answer true.
+    /** Can the file's filter rule out `pred`? Only equality conjuncts
+      * consult it (`StrEq` — the residual casts the column to string
+      * exactly as the build did, so numeric keys work too); absent
+      * filters and non-equality predicates answer true.
       */
     def mayMatch(posCache: scala.collection.mutable.Map[
         (String, Int, Int), Array[Int]], t: String,
@@ -4302,16 +4332,6 @@ object ManifestSink extends Ingest.DestinationSink {
       out
     }
 
-  /** Can the file's bloom rule out `pred`? Only an equality conjunct
-    * consults it (`StrEq` — the residual casts the column to string
-    * exactly as the build did, so numeric keys work too); everything
-    * else, and files without a filter for the column, answer true.
-    */
-  private def bloomMayMatchFile(blooms: BloomIndex,
-      posCache: scala.collection.mutable.Map[(String, Int, Int),
-        Array[Int]], t: String, pred: SkipPredicate): Boolean =
-    blooms.mayMatch(posCache, t, pred)
-
   private def bloomPosCache()
       : scala.collection.mutable.Map[(String, Int, Int), Array[Int]] =
     scala.collection.mutable.Map.empty
@@ -4383,11 +4403,8 @@ object ManifestSink extends Ingest.DestinationSink {
       // one here against a single column's stats would be wrong
       case SkipPredicate.And(_) | SkipPredicate.Or(_) => false
       case SkipPredicate.NumRange(_, lo, hi) =>
-        st.kind == "num" && noNulls && ((st.min, st.max) match {
-          case (Some(mn), Some(mx)) =>
-            mn.toDouble >= lo && mx.toDouble <= hi
-          case _ => false
-        })
+        st.kind == "num" && noNulls &&
+          numBounds(st).exists { case (mn, mx) => mn >= lo && mx <= hi }
       case SkipPredicate.StrRange(_, lo, hi) =>
         // a truncated max (maxTrunc) proves no upper bound; a truncated
         // min is still a valid lower bound for mn >= lo (a UTF-8 prefix
@@ -4448,9 +4465,10 @@ object ManifestSink extends Ingest.DestinationSink {
       case SkipPredicate.NumRange(_, lo, hi) =>
         if (st.kind != "num") true
         else (st.min, st.max) match {
-          case (Some(mn), Some(mx)) => mx.toDouble >= lo && mn.toDouble <= hi
-          case _                    => !allNull // unknown bounds: only an
-          // all-null file is provably rowless under a value predicate
+          case (Some(_), Some(_)) =>
+            numBounds(st).forall { case (mn, mx) => mx >= lo && mn <= hi }
+          case _ => !allNull // unknown bounds: only an all-null file is
+          // provably rowless under a value predicate
         }
       case SkipPredicate.StrRange(_, lo, hi) =>
         if (st.kind != "str") true
@@ -4476,6 +4494,18 @@ object ManifestSink extends Ingest.DestinationSink {
         st.nulls < 0 || st.rows < 0 || st.nulls < st.rows
     }
   }
+
+  /** Numeric bounds of `st`; None when absent or NaN. Spark sorts NaN
+    * above every number (and `NaN > x` holds), so a min/max aggregate
+    * that met one bounds nothing a range compare may rely on.
+    */
+  private def numBounds(st: ColStats): Option[(Double, Double)] =
+    (st.min, st.max) match {
+      case (Some(mn), Some(mx)) =>
+        val (lo, hi) = (mn.toDouble, mx.toDouble)
+        if (lo.isNaN || hi.isNaN) None else Some((lo, hi))
+      case _ => None
+    }
 
   /** The exact row filter `pred` stands for (applied as the residual on
     * the pruned read, and definitionally on the full read).
@@ -4564,27 +4594,18 @@ object ManifestSink extends Ingest.DestinationSink {
     */
   def readBackWherePred(spark: SparkSession, destPath: String,
       pred: SkipPredicate): DataFrame = {
-    val dest = new Path(destPath)
-    val fs = fsOf(spark, dest)
-    val mfs = resolvedLog(fs, destPath)
-    val targets = effectiveTargetsOf(fs, mfs)
+    val fs = fsOf(spark, new Path(destPath))
+    val snap = new SnapshotHandle(fs, destPath, resolvedLog(fs, destPath))
+    val targets = snap.targets
     if (targets.isEmpty) return spark.emptyDataFrame
-    val stats = fileStatsOf(fs, mfs)
-    val blooms = bloomIndexOf(spark, destPath, fs, mfs)
-    val posC = bloomPosCache()
-    // COLUMN MAPPING: stats/bloom keys are physical; the residual row
-    // filter below stays logical
-    val pPhys = mapPredCols(pred, mappingFor(fs, mfs))
-    val keep = targets.filter(t => mayMatchFile(stats, t, pPhys) &&
-      bloomMayMatchFile(blooms, posC, t, pPhys))
+    val keep = snap.prune(targets, pred)
     println(s"METRIC graft.skipping.files_total=${targets.length} " +
       s"files_read=${keep.length} col=${pred.column} dest=$destPath")
     if (keep.isEmpty)
       return readBack(spark, destPath).where(lit(false))
     // deletion vectors apply to the kept files (stats bounds may cover
     // deleted rows — pruning stays conservative-correct either way)
-    readFilesDv(spark, destPath, keep, effectiveDvsOf(fs, mfs))
-      .where(residual(pred))
+    readFilesDv(spark, destPath, keep, snap.dvs).where(residual(pred))
   }
 
   /** HYBRID metadata/scan COUNT (Delta's partial aggregate pushdown):
@@ -4624,7 +4645,7 @@ object ManifestSink extends Ingest.DestinationSink {
       // either way) but cannot take metadata credit: its recorded row
       // count includes tombstoned rows
       if (!mayMatchFile(stats, t, pPhys) ||
-          !bloomMayMatchFile(blooms, posC, t, pPhys)) skipped += 1
+          !blooms.mayMatch(posC, t, pPhys)) skipped += 1
       else rowsOf(t) match {
         case Some(r) if mustMatchFile(stats, t, pPhys) &&
             !dvs.contains(t) => credited += r
@@ -4698,12 +4719,7 @@ object ManifestSink extends Ingest.DestinationSink {
     val dest = new Path(destPath)
     val fs = fsOf(spark, dest)
     if (!fs.exists(dest)) return 0L
-    val sroot = stagingRoot(destPath)
-    if (fs.exists(sroot) && fs.listStatus(sroot).nonEmpty) {
-      println(s"METRIC graft.optimize.skipped_pending_attempts=1 " +
-        s"dest=$destPath")
-      return 0L
-    }
+    if (pendingAttempt(fs, destPath, "optimize")) return 0L
     // capture the log ONCE: every piece of the snapshot (survivors, stats,
     // version) derives from this one listing, and the commit below aborts
     // if the log advanced past it — a concurrent append landing during the
@@ -5090,47 +5106,60 @@ object ManifestSink extends Ingest.DestinationSink {
     repacked.size.toLong
   }
 
+  /** The DML candidate files of `cond` over a captured snapshot, and
+    * the pruning predicate they came from: the conjuncts of `cond` the
+    * stats/bloom metadata can decide, converted as the SQL scan
+    * converts its pushed filters, against the schema the SQL relation
+    * uses. `cond` stays the row filter, so pruning only drops files
+    * with no matching row; with nothing convertible (or a schema that
+    * does not resolve) every live file is a candidate.
+    */
+  private def dmlCandidates(spark: SparkSession, snap: SnapshotHandle,
+      cond: Column, kind: String): (Seq[String], Option[SkipPredicate]) = {
+    val skip = scala.util.Try(snap.dataSchema).toOption.flatMap(s =>
+      graft.sources.GraftFilterConversion
+        .fromColumn(spark, stripPhysical(s), cond))
+    val candidates = skip.fold(snap.targets)(snap.prune(snap.targets, _))
+    println(s"METRIC graft.$kind.files_total=${snap.targets.length} " +
+      s"candidates=${candidates.length} " +
+      s"col=${skip.fold("<expr>")(_.column)} dest=${snap.destPath}")
+    (candidates, skip)
+  }
+
   /** COPY-ON-WRITE DELETE (Delta's `DELETE WHERE`): remove every row
-    * matching `pred`, rewriting ONLY the files whose skipping stats say
-    * they may contain one — at 100 TB a selective delete (GDPR erasure,
-    * a bad batch's id range, a contaminated shard) touches the handful
-    * of files the metadata names, not the table. Files the stats
-    * exclude are carried untouched, manifest AND bytes; a candidate
-    * whose rows all match is dropped without a write; a candidate with
-    * no actual match (stats false positive) is left untouched by the
-    * per-file match count. Commits as ONE atomic snapshot under the
-    * same captured-log / abort-if-advanced discipline as [[optimize]];
-    * replaced files stay on disk for in-flight readers until
-    * [[vacuum]]. Returns the number of rows deleted.
+    * matching `cond`, rewriting ONLY the files that may contain one —
+    * at 100 TB a selective delete (GDPR erasure, a bad batch's id
+    * range, a contaminated shard) touches the handful of files the
+    * metadata names, not the table. Candidates prune through the
+    * skipping stats and blooms by the part of `cond` they can decide
+    * ([[dmlCandidates]]); the rest of `cond` (regexes, UDF-free
+    * expressions over several columns, subqueries) only filters rows.
+    * Files the stats exclude are carried untouched, manifest AND
+    * bytes; a candidate whose rows all match is dropped without a
+    * write; a candidate with no actual match (stats false positive) is
+    * left untouched by the per-file match count. Commits as ONE atomic
+    * snapshot under the same captured-log / abort-if-advanced
+    * discipline as [[optimize]]; replaced files stay on disk for
+    * in-flight readers until [[vacuum]]. Returns the number of rows
+    * deleted.
     *
-    * `pred.column` must be a DATA column of the candidate files (the
+    * `cond` must reference DATA columns of the candidate files (the
     * partition directory column is not stored in the data; a
     * partition-predicate delete wants a metadata-only drop, not this
-    * path). Candidates missing the column under `mergeSchema` read it
+    * path). Candidates missing a column under `mergeSchema` read it
     * as null — never matched, so schema evolution degrades to
     * untouched, not to data loss.
     */
   def deleteWhere(spark: SparkSession, destPath: String,
-      pred: SkipPredicate): Long =
-    rewriteWhere(spark, destPath, Left(pred), None)
-
-  /** [[deleteWhere]] with an ARBITRARY row predicate (any `Column` —
-    * regexes, UDF-free expressions over several columns): no stats
-    * pruning (every file is a candidate), but the per-file match-count
-    * pass still limits the rewrite to files that actually contain a
-    * match. Use the `SkipPredicate` form whenever the predicate fits
-    * its algebra — at 100 TB the candidate pruning IS the feature.
-    */
-  def deleteWhereExpr(spark: SparkSession, destPath: String,
-      cond: org.apache.spark.sql.Column): Long =
-    rewriteWhere(spark, destPath, Right(cond), None)
+      cond: Column): Long =
+    rewriteWhere(spark, destPath, cond, None)
 
   /** MERGE-ON-READ DELETE (Delta's deletion vectors): mark matching
     * rows deleted by committing per-file position tombstones instead of
-    * rewriting the matched files. Candidate files prune through the
-    * skipping stats exactly like [[deleteWhere]]; the one distributed
-    * pass computes the LIVE matching positions (existing tombstones
-    * applied first, so counts stay exact and re-deleting is a no-op),
+    * rewriting the matched files. Candidate files prune exactly like
+    * [[deleteWhere]]'s; the one distributed pass computes the LIVE
+    * matching positions (existing tombstones applied first, so counts
+    * stay exact and re-deleting is a no-op),
     * writes them as ONE sidecar parquet under `_dv/`, and commits an
     * incremental manifest of `dv` lines — total write cost
     * O(deleted rows), not O(matched files' bytes). The copy-on-write
@@ -5143,49 +5172,19 @@ object ManifestSink extends Ingest.DestinationSink {
     * deleted.
     */
   def deleteWhereMor(spark: SparkSession, destPath: String,
-      pred: SkipPredicate): Long =
-    morDelete(spark, destPath, Left(pred))
-
-  /** [[deleteWhereMor]] with an arbitrary `Column` predicate — no
-    * stats pruning (every file is scanned for matches), but the commit
-    * still costs O(deleted rows), the content-addressed GDPR shape.
-    */
-  def deleteWhereExprMor(spark: SparkSession, destPath: String,
-      cond: org.apache.spark.sql.Column): Long =
-    morDelete(spark, destPath, Right(cond))
-
-  private def morDelete(spark: SparkSession, destPath: String,
-      pred: Either[SkipPredicate, org.apache.spark.sql.Column]): Long = {
+      cond: Column): Long = {
     val dest = new Path(destPath)
     val fs = fsOf(spark, dest)
     if (!fs.exists(dest)) return 0L
     val sroot = stagingRoot(destPath)
-    if (fs.exists(sroot) && fs.listStatus(sroot).nonEmpty) {
-      println(s"METRIC graft.mor.skipped_pending_attempts=1 " +
-        s"dest=$destPath")
-      return 0L
-    }
+    if (pendingAttempt(fs, destPath, "mor")) return 0L
     val old = resolvedLog(fs, destPath)
     val baseVersion = old.map(_.getName.takeWhile(_.isDigit).toLong)
       .maxOption.getOrElse(-1L)
-    val targets = effectiveTargetsOf(fs, old)
-    if (targets.isEmpty) return 0L
-    val stats = fileStatsOf(fs, old)
-    val dvs = effectiveDvsOf(fs, old)
-    val (candidates, m, colLabel) = pred match {
-      case Left(p) =>
-        val blooms = bloomIndexOf(spark, destPath, fs, old)
-        val posC = bloomPosCache()
-        // COLUMN MAPPING: prune with a physically-named copy; the
-        // residual row filter stays logical
-        val pPhys = mapPredCols(p, mappingFor(fs, old))
-        (targets.filter(t => mayMatchFile(stats, t, pPhys) &&
-          bloomMayMatchFile(blooms, posC, t, pPhys)), residual(p),
-          p.column)
-      case Right(c) => (targets, c, "<expr>")
-    }
-    println(s"METRIC graft.mor.files_total=${targets.length} " +
-      s"candidates=${candidates.length} col=$colLabel dest=$destPath")
+    val snap = new SnapshotHandle(fs, destPath, old)
+    if (snap.targets.isEmpty) return 0L
+    val dvs = snap.dvs
+    val (candidates, _) = dmlCandidates(spark, snap, cond, "mor")
     if (candidates.isEmpty) return 0L
 
     // ONE distributed pass: live matching positions (existing dvs
@@ -5193,7 +5192,7 @@ object ManifestSink extends Ingest.DestinationSink {
     // LAZY pin, the per-file count action right below materializes it
     val delFrame = readFilesDvMeta(spark, destPath, candidates, dvs)
     val newDv = delFrame
-      .where(coalesce(bindOuter(delFrame, m), lit(false)))
+      .where(coalesce(bindOuter(delFrame, cond), lit(false)))
       .select(col("__graft_fn").as("name"), col("__graft_pos").as("pos"))
       .localCheckpoint(false)
     // per-file tombstone counts: bounded by the candidate file count
@@ -5279,7 +5278,7 @@ object ManifestSink extends Ingest.DestinationSink {
   }
 
   /** MERGE-ON-READ UPDATE (Delta's DV-backed `UPDATE`): every row
-    * matching `pred` is tombstoned in place (one dv sidecar, like
+    * matching `cond` is tombstoned in place (one dv sidecar, like
     * [[deleteWhereMor]]) and its updated version — `set` expressions
     * evaluated against the OLD row, so swaps are well-defined —
     * appends as fresh stats-bearing files, BOTH in ONE incremental
@@ -5287,7 +5286,7 @@ object ManifestSink extends Ingest.DestinationSink {
     * touches every file commits O(updated rows), where [[updateWhere]]
     * (copy-on-write) rewrites the whole table; the next
     * [[optimize]]/rewrite of each file materializes its tombstones.
-    * Candidate files prune through the skipping stats; existing dvs
+    * Candidate files prune like [[deleteWhere]]'s; existing dvs
     * apply before matching so re-running is idempotent on the visible
     * rows. For a partitioned destination pass `partitionField` (the
     * same contract as [[mergeInto]]) so updated rows land in their
@@ -5295,42 +5294,19 @@ object ManifestSink extends Ingest.DestinationSink {
     * column the table already records stats on. Returns rows updated.
     */
   def updateWhereMor(spark: SparkSession, destPath: String,
-      pred: SkipPredicate, set: Map[String, org.apache.spark.sql.Column],
+      cond: Column, set: Map[String, Column],
       partitionField: Option[String] = None): Long = {
     require(set.nonEmpty, "[graft] updateWhereMor: empty SET")
-    morUpdate(spark, destPath, Left(pred), set, partitionField)
-  }
-
-  /** [[updateWhereMor]] with an arbitrary `Column` predicate — the
-    * content-addressed GDPR/redaction shape at O(changed rows) write
-    * cost: no stats pruning (every file is scanned for matches), but
-    * nothing is rewritten either way.
-    */
-  def updateWhereExprMor(spark: SparkSession, destPath: String,
-      cond: org.apache.spark.sql.Column,
-      set: Map[String, org.apache.spark.sql.Column],
-      partitionField: Option[String] = None): Long = {
-    require(set.nonEmpty, "[graft] updateWhereExprMor: empty SET")
-    morUpdate(spark, destPath, Right(cond), set, partitionField)
-  }
-
-  private def morUpdate(spark: SparkSession, destPath: String,
-      pred: Either[SkipPredicate, org.apache.spark.sql.Column],
-      set: Map[String, org.apache.spark.sql.Column],
-      partitionField: Option[String]): Long = {
     val dest = new Path(destPath)
     val fs = fsOf(spark, dest)
     if (!fs.exists(dest)) return 0L
     val sroot = stagingRoot(destPath)
-    if (fs.exists(sroot) && fs.listStatus(sroot).nonEmpty) {
-      println(s"METRIC graft.mor.skipped_pending_attempts=1 " +
-        s"dest=$destPath")
-      return 0L
-    }
+    if (pendingAttempt(fs, destPath, "mor")) return 0L
     val old = resolvedLog(fs, destPath)
     val baseVersion = old.map(_.getName.takeWhile(_.isDigit).toLong)
       .maxOption.getOrElse(-1L)
-    val targets = effectiveTargetsOf(fs, old)
+    val snap = new SnapshotHandle(fs, destPath, old)
+    val targets = snap.targets
     if (targets.isEmpty) return 0L
     // A partitioned destination stores the partition column in the
     // DIRECTORY NAME, not the data files — candidate files here are
@@ -5388,24 +5364,12 @@ object ManifestSink extends Ingest.DestinationSink {
       autoPdate.values.map(_._2.isDefined).toSet.size <= 1,
       s"[graft] updateWhereMor: $destPath mixes day-only and " +
         "date/hour partition dirs — repair the layout first")
-    val stats = fileStatsOf(fs, old)
-    val dvs = effectiveDvsOf(fs, old)
-    // COLUMN MAPPING: prune with a physically-named copy of the
-    // predicate; appended rows stage under physical names
-    val cmap = mappingFor(fs, old)
+    val stats = snap.stats
+    val dvs = snap.dvs
+    // COLUMN MAPPING: appended rows stage under physical names
+    val cmap = snap.mapping
     val p2l = cmap.map(_.swap)
-    val (candidates, m, colLabel) = pred match {
-      case Left(p) =>
-        val blooms = bloomIndexOf(spark, destPath, fs, old)
-        val posC = bloomPosCache()
-        val pPhys = mapPredCols(p, cmap)
-        (targets.filter(t => mayMatchFile(stats, t, pPhys) &&
-          bloomMayMatchFile(blooms, posC, t, pPhys)), residual(p),
-          p.column)
-      case Right(c) => (targets, c, "<expr>")
-    }
-    println(s"METRIC graft.mor.files_total=${targets.length} " +
-      s"candidates=${candidates.length} col=$colLabel dest=$destPath")
+    val (candidates, _) = dmlCandidates(spark, snap, cond, "mor")
     if (candidates.isEmpty) return 0L
 
     // ONE distributed pass: live matching rows WITH their positions —
@@ -5414,7 +5378,7 @@ object ManifestSink extends Ingest.DestinationSink {
     val updFrame =
       readFilesDvMeta(spark, destPath, candidates, dvs, withBase = false)
     val matched = updFrame
-      .where(coalesce(bindOuter(updFrame, m), lit(false)))
+      .where(coalesce(bindOuter(updFrame, cond), lit(false)))
       .localCheckpoint(false) // lazy: the count below materializes it
     val perName: Map[String, Long] = matched
       .groupBy(col("__graft_fn")).agg(count(lit(1)).as("n")).collect()
@@ -5586,21 +5550,8 @@ object ManifestSink extends Ingest.DestinationSink {
     total
   }
 
-  /** [[updateWhere]] with an arbitrary `Column` predicate — the
-    * content-addressed maintenance shape (e.g. redact every document
-    * whose text matches a PII pattern). Same trade as
-    * [[deleteWhereExpr]]: no stats pruning, match-counting still bounds
-    * the rewrite set.
-    */
-  def updateWhereExpr(spark: SparkSession, destPath: String,
-      cond: org.apache.spark.sql.Column,
-      set: Map[String, org.apache.spark.sql.Column]): Long = {
-    require(set.nonEmpty, "[graft] updateWhereExpr: empty SET")
-    rewriteWhere(spark, destPath, Right(cond), Some(set))
-  }
-
   /** COPY-ON-WRITE UPDATE (Delta's `UPDATE SET ... WHERE`): for every
-    * row matching `pred`, replace each column in `set` with its new
+    * row matching `cond`, replace each column in `set` with its new
     * expression (evaluated against the OLD row — a swap
     * `a -> col("b"), b -> col("a")` is well-defined); non-matching rows
     * and stats-excluded files ride through byte-identical. Same
@@ -5610,10 +5561,9 @@ object ManifestSink extends Ingest.DestinationSink {
     * Returns the number of rows updated.
     */
   def updateWhere(spark: SparkSession, destPath: String,
-      pred: SkipPredicate, set: Map[String, org.apache.spark.sql.Column])
-      : Long = {
+      cond: Column, set: Map[String, Column]): Long = {
     require(set.nonEmpty, "[graft] updateWhere: empty SET")
-    rewriteWhere(spark, destPath, Left(pred), Some(set))
+    rewriteWhere(spark, destPath, cond, Some(set))
   }
 
   /** TARGETED DV MATERIALIZATION (Delta's `REORG TABLE … APPLY
@@ -5645,11 +5595,7 @@ object ManifestSink extends Ingest.DestinationSink {
     val fs = fsOf(spark, dest)
     if (!fs.exists(dest)) return 0L
     val sroot = stagingRoot(destPath)
-    if (fs.exists(sroot) && fs.listStatus(sroot).nonEmpty) {
-      println(s"METRIC graft.purge.skipped_pending_attempts=1 " +
-        s"dest=$destPath")
-      return 0L
-    }
+    if (pendingAttempt(fs, destPath, "purge")) return 0L
     val old = resolvedLog(fs, destPath)
     val baseVersion = old.map(vOfP).maxOption.getOrElse(-1L)
     val targets = effectiveTargetsOf(fs, old)
@@ -5791,50 +5737,32 @@ object ManifestSink extends Ingest.DestinationSink {
   }
 
   /** Shared copy-on-write core. `set == None` deletes matching rows;
-    * `Some(exprs)` rewrites them in place. A `Left` predicate prunes
-    * candidates through the skipping stats; a `Right` arbitrary column
-    * reads every file in the match-count pass.
+    * `Some(exprs)` rewrites them in place.
     */
   private def rewriteWhere(spark: SparkSession, destPath: String,
-      pred: Either[SkipPredicate, org.apache.spark.sql.Column],
-      set: Option[Map[String, org.apache.spark.sql.Column]]): Long = {
+      cond: Column, set: Option[Map[String, Column]]): Long = {
     val dest = new Path(destPath)
     val fs = fsOf(spark, dest)
     if (!fs.exists(dest)) return 0L
     val sroot = stagingRoot(destPath)
-    if (fs.exists(sroot) && fs.listStatus(sroot).nonEmpty) {
-      println(s"METRIC graft.rewrite.skipped_pending_attempts=1 " +
-        s"dest=$destPath")
-      return 0L
-    }
+    if (pendingAttempt(fs, destPath, "rewrite")) return 0L
     // capture the log ONCE — every piece of the snapshot derives from
     // this listing and the commit aborts if it advanced (same protocol
     // as optimize; concurrent appends are supported, not lost)
     val old = resolvedLog(fs, destPath)
     val baseVersion = old.map(_.getName.takeWhile(_.isDigit).toLong)
       .maxOption.getOrElse(-1L)
-    val targets = effectiveTargetsOf(fs, old)
+    val snap = new SnapshotHandle(fs, destPath, old)
+    val targets = snap.targets
     if (targets.isEmpty) return 0L
-    val stats = fileStatsOf(fs, old)
+    val stats = snap.stats
     val statsByTgt: Map[String, Seq[String]] =
       stats.keys.groupBy(_._1).map { case (t, ks) =>
         t -> ks.map(_._2).toSeq.sorted }
-    // COLUMN MAPPING: stats/bloom keys are physical — the PRUNE
-    // consults a translated copy; the residual row filter stays
-    // logical (the frames surface logical names)
-    val cmap = mappingFor(fs, old)
-    val (candidates, m, colLabel) = pred match {
-      case Left(p) =>
-        val blooms = bloomIndexOf(spark, destPath, fs, old)
-        val posC = bloomPosCache()
-        val pPhys = mapPredCols(p, cmap)
-        (targets.filter(t => mayMatchFile(stats, t, pPhys) &&
-          bloomMayMatchFile(blooms, posC, t, pPhys)), residual(p),
-          p.column)
-      case Right(c) => (targets, c, "<expr>")
-    }
-    println(s"METRIC graft.rewrite.files_total=${targets.length} " +
-      s"candidates=${candidates.length} col=$colLabel dest=$destPath")
+    // COLUMN MAPPING: rewritten files stage under physical names; the
+    // row filter stays logical (the frames surface logical names)
+    val cmap = snap.mapping
+    val (candidates, skip) = dmlCandidates(spark, snap, cond, "rewrite")
     if (candidates.isEmpty) return 0L
 
     // ONE distributed pass: per-candidate matched/total LIVE row counts
@@ -5842,16 +5770,16 @@ object ManifestSink extends Ingest.DestinationSink {
     // neither match nor count toward the fully-matched drop test; no
     // basePath — rewrites re-write data columns only; a file missing the
     // predicate column reads it as null = never matched)
-    val dvs = effectiveDvsOf(fs, old)
+    val dvs = snap.dvs
     val relOfName: Map[String, String] =
       candidates.map(rel => fileNameOf(rel) -> rel).toMap
-    val hasSub = condHasSubquery(m)
+    val hasSub = condHasSubquery(cond)
     val countFrame =
       readFilesDvMeta(spark, destPath, candidates, dvs, withBase = false)
     val matchedOf: Map[String, (Long, Long)] =
       if (!hasSub)
         countFrame
-          .select(col("__graft_fn").as("__f"), m.as("__m"))
+          .select(col("__graft_fn").as("__f"), cond.as("__m"))
           .groupBy(col("__f"))
           .agg(sum(when(col("__m"), 1L).otherwise(0L)).as("matched"),
             count(lit(1)).as("rows"))
@@ -5868,7 +5796,7 @@ object ManifestSink extends Ingest.DestinationSink {
         // metadata purge/countWhere already trust), so the second
         // counting scan only runs for stats-less legacy files
         val mat: Map[String, Long] = countFrame
-          .where(coalesce(bindOuter(countFrame, m), lit(false)))
+          .where(coalesce(bindOuter(countFrame, cond), lit(false)))
           .groupBy(col("__graft_fn").as("__f"))
           .agg(count(lit(1)).as("matched"))
           .collect()
@@ -5925,7 +5853,7 @@ object ManifestSink extends Ingest.DestinationSink {
           readFilesDvMeta(spark, destPath, touched, dvs,
             withBase = false)
         val live = liveFrame
-          .where(coalesce(bindOuter(liveFrame, m), lit(false)))
+          .where(coalesce(bindOuter(liveFrame, cond), lit(false)))
           .drop("__graft_fn", "__graft_pos")
         val frame = set match {
           case None =>
@@ -5958,10 +5886,10 @@ object ManifestSink extends Ingest.DestinationSink {
         val src = readFilesDvMeta(spark, destPath, rewrites, dvs,
           withBase = false).drop("__graft_pos")
         val dataCols = src.columns.filterNot(_ == "__graft_fn")
-        val mB = bindOuter(src, m)
+        val mB = bindOuter(src, cond)
         val out = set match {
           // null predicate values are NOT matches: a three-valued
-          // where(!m) would silently delete null-column rows
+          // where(!cond) would silently delete null-column rows
           case None => src.where(!coalesce(mB, lit(false)))
           case Some(exprs) =>
             exprs.foreach { case (c, _) =>
@@ -6059,17 +5987,17 @@ object ManifestSink extends Ingest.DestinationSink {
     val carriedBlooms =
       bloomCarryLines(fs, old, targets.filterNot(replaced))
     // a concurrent pure append absorbs iff its files' stats PROVE the
-    // predicate excludes them (a file with no stats is a conflict) —
-    // the write-serializable outcome of delete-after-append; arbitrary
-    // Column predicates can prove nothing and abort as before
-    val absorbOk: Seq[Path] => Boolean = pred match {
-      case Left(p) => newMfs => {
+    // pruning predicate excludes them (a file with no stats is a
+    // conflict) — the write-serializable outcome of delete-after-append;
+    // a condition with no convertible part proves nothing and aborts
+    val absorbOk: Seq[Path] => Boolean = skip match {
+      case Some(p) => newMfs => {
         val absorbStats = fileStatsOf(fs, newMfs)
         val pPhys = mapPredCols(p, cmap)
         newMfs.flatMap(readManifest(fs, _)._2)
           .forall(t => !mayMatchFile(absorbStats, t, pPhys))
       }
-      case Right(_) => _ => false
+      case None => _ => false
     }
     onBeforeRewriteCommit()
     if (!commitSnapshot(spark, destPath, writeId, staging, baseVersion,
@@ -6687,7 +6615,10 @@ object ManifestSink extends Ingest.DestinationSink {
     def applied: Boolean
   }
   object MergeOutcome {
-    /** Committed: a new snapshot version carries the batch. */
+    /** Committed: a new snapshot version carries the batch. Counts of
+      * -1 mean the commit landed but its counting job failed
+      * ([[mergeFullSync]]).
+      */
     final case class Merged(updatedKeys: Long, insertedRows: Long,
         deletedKeys: Long) extends MergeOutcome {
       def counts: (Long, Long, Long) =
@@ -6779,11 +6710,8 @@ object ManifestSink extends Ingest.DestinationSink {
       return MergeOutcome.Merged(0L, nUps, 0L)
     }
     val sroot = stagingRoot(destPath)
-    if (fs.exists(sroot) && fs.listStatus(sroot).nonEmpty) {
-      println(s"METRIC graft.merge.skipped_pending_attempts=1 " +
-        s"dest=$destPath")
+    if (pendingAttempt(fs, destPath, "merge"))
       return MergeOutcome.Skipped
-    }
     val baseVersion = old.map(_.getName.takeWhile(_.isDigit).toLong)
       .maxOption.getOrElse(-1L)
     val stats = fileStatsOf(fs, old)
@@ -7425,9 +7353,9 @@ object ManifestSink extends Ingest.DestinationSink {
     if (unbounded.exists(st =>
         !(st.nulls >= 0 && st.rows >= 0 && st.nulls == st.rows)))
       return None
-    if (bounded.isEmpty) None
-    else Some((bounded.map(_.min.get.toDouble).min,
-      bounded.map(_.max.get.toDouble).max))
+    val nums = bounded.map(numBounds)
+    if (bounded.isEmpty || nums.exists(_.isEmpty)) None // NaN: scan
+    else Some((nums.flatten.map(_._1).min, nums.flatten.map(_._2).max))
   }
 
   /** Null count of `column` from stats alone; None when any file lacks
@@ -7510,11 +7438,7 @@ object ManifestSink extends Ingest.DestinationSink {
     val fs = fsOf(spark, dest)
     if (!fs.exists(dest)) return 0L
     val sroot = stagingRoot(destPath)
-    if (fs.exists(sroot) && fs.listStatus(sroot).nonEmpty) {
-      println(s"METRIC graft.dropparts.skipped_pending_attempts=1 " +
-        s"dest=$destPath")
-      return 0L
-    }
+    if (pendingAttempt(fs, destPath, "dropparts")) return 0L
     val old = resolvedLog(fs, destPath)
     val baseVersion = old.map(_.getName.takeWhile(_.isDigit).toLong)
       .maxOption.getOrElse(-1L)
@@ -7986,12 +7910,7 @@ object ManifestSink extends Ingest.DestinationSink {
     val dest = new Path(destPath)
     val fs = fsOf(spark, dest)
     if (!fs.exists(dest)) return Nil
-    val sroot = stagingRoot(destPath)
-    if (fs.exists(sroot) && fs.listStatus(sroot).nonEmpty) {
-      println(s"METRIC graft.vacuum.skipped_pending_attempts=1 " +
-        s"dest=$destPath")
-      return Nil
-    }
+    if (pendingAttempt(fs, destPath, "vacuum")) return Nil
     val (allMfs, allCks) = logListing(fs, destPath)
     val referenced = (allMfs ++ allCks)
       .flatMap { mf =>

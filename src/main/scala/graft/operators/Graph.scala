@@ -21,17 +21,19 @@ object Graph {
     * edges on `src` (both sides hash-partitioned on `src` — the edge
     * relation is repartitioned ONCE and the partitioning is reused every
     * round), one `groupBy(dst)` sum with map-side partial aggregation,
-    * and ONE driver scalar (the dangling-node mass — nodes with no
-    * out-edges donate their rank uniformly, the standard stochastic-
-    * matrix fix; without it rank mass drains and the vector no longer
-    * sums to 1). Lineage is cut with `localCheckpoint` every
-    * `checkpointEvery` rounds, the [[Dedup.connectedComponents]]
-    * discipline — an unbounded iteration would otherwise compound the
-    * plan and recompute every prior round at each action. The default
-    * is EVERY round: the per-round dangling scalar is an action, so a
-    * longer cadence re-runs the edge join O(cadence²) times per window
-    * for both the scalar and the eventual checkpoint — measured 35 s →
-    * 11 s at cadence 4 → 1 on an 8-round 500k-edge ladder.
+    * and the dangling-node mass (nodes with no out-edges donate their
+    * rank uniformly, the standard stochastic-matrix fix; without it
+    * rank mass drains and the vector no longer sums to 1) computed IN
+    * the plan: a one-row aggregate broadcast-joined on a constant key,
+    * so a round costs exactly one action and no driver scalar. Lineage
+    * is cut with `localCheckpoint` every `checkpointEvery` rounds, the
+    * [[Dedup.connectedComponents]] discipline — an unbounded iteration
+    * would otherwise compound the plan and recompute every prior round
+    * at each action. The default is EVERY round. A round references
+    * the previous ranks twice (the dangling aggregate and the
+    * contributions), so each uncheckpointed round DOUBLES the plan:
+    * `checkpointEvery = k > 1` plans and recomputes up to 2^k copies
+    * of the window's first round — keep k small.
     *
     * `edges` rows are taken as given (pre-`distinct` them for the
     * unweighted classic; repeated edges act as weights). Nodes are

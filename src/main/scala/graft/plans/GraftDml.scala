@@ -3,17 +3,17 @@ package graft.plans
 import org.apache.spark.sql.{AnalysisException, Column, Row, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedAttribute, UnresolvedFieldName, UnresolvedRelation, UnresolvedTable}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast, EqualTo, Expression, NamedExpression, SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast, EqualTo, EvalMode, Expression, NamedExpression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{LongType, TimestampType}
+import org.apache.spark.sql.types.{DataType, LongType, TimestampType}
 
 import graft.ingest.ManifestSink
-import graft.sources.{GraftDataSource, GraftFileIndex}
+import graft.sources.{GraftDataSource, GraftFileIndex, GraftFilterConversion}
 
 /** SQL DML over manifest tables — `DELETE FROM` / `UPDATE` /
   * `MERGE INTO` routed to the lakehouse write paths, so the SQL surface
@@ -38,9 +38,12 @@ import graft.sources.{GraftDataSource, GraftFileIndex}
   * Execution cost follows the session's `spark.graft.dml.mor` flag
   * (default true): merge-on-read commits O(changed rows) deletion
   * vectors / sidecar rewrites; `false` selects copy-on-write
-  * (`deleteWhere`/`updateWhere` rewrite matched files). Skipping stats
-  * carry through automatically: rewrites re-derive stats for every
-  * column the snapshot already records ([[SnapshotHandle.statsColumns]]).
+  * (`deleteWhere`/`updateWhere` rewrite matched files). Either way the
+  * WHERE clause prunes candidate files by the manifest stats and
+  * blooms, converted as the SQL scan converts its pushed filters.
+  * Skipping stats carry through automatically: rewrites re-derive stats
+  * for every column the snapshot already records
+  * ([[SnapshotHandle.statsColumns]]).
   *
   * Unsupported (loud `AnalysisException`, never silent): predicates on
   * directory-derived partition columns (the data files do not carry
@@ -268,12 +271,11 @@ class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
               fail(s"UPDATE of partition column '$name' — partition " +
                 "values live in the directory layout; use the Scala " +
                 "API with partitionField")
-            name -> byName(a.value)
+            name -> byName(storeAssign(a.value, a.key.dataType, name))
           }.toMap
           GraftUpdateCommand(g.dest,
             cond.map(byName).getOrElse(lit(true)), set,
-            cond.map(_.sql).getOrElse("true"), g.refreshTable,
-            partitioned = g.partitionCols.nonEmpty)
+            cond.map(_.sql).getOrElse("true"), g.refreshTable)
       }
 
     case m: MergeIntoTable if m.resolved =>
@@ -631,7 +633,38 @@ class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
       case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
       case other => other.mapChildren(go)
     }
-    Bridge.column(go(e))
+    // SQL BETWEEN resolves to a `With` block that cannot outlive its
+    // attributes — inline it while they are still resolved
+    val flat = GraftFilterConversion.inlineWith(e)
+    if (flat.exists(_.isInstanceOf[
+        org.apache.spark.sql.catalyst.expressions.With]))
+      fail(s"non-deterministic BETWEEN input in ${e.sql} is not " +
+        "supported on graft tables")
+    Bridge.column(go(flat))
+  }
+
+  /** `v` cast to its column's type under the session's store-assignment
+    * policy, as Spark's own UPDATE does (a DECIMAL literal into a DOUBLE
+    * column must not write DECIMAL files into the table): ANSI (the
+    * default) and STRICT refuse an unsafe pair here and raise on
+    * overflow at run time; LEGACY casts as the session does.
+    */
+  private def storeAssign(v: Expression, to: DataType,
+      name: String): Expression = {
+    import org.apache.spark.sql.internal.SQLConf.StoreAssignmentPolicy._
+    val policy = conf.storeAssignmentPolicy
+    val ok = policy match {
+      case ANSI   => Cast.canANSIStoreAssign(v.dataType, to)
+      case STRICT => Cast.canUpCast(v.dataType, to)
+      case _      => true
+    }
+    if (!ok) fail(s"UPDATE SET $name: cannot assign " +
+      s"${v.dataType.simpleString} to a ${to.simpleString} column " +
+      s"under spark.sql.storeAssignmentPolicy=$policy")
+    val tz = Some(conf.sessionLocalTimeZone)
+    if (v.dataType == to) v
+    else if (policy == LEGACY) Cast(v, to, tz)
+    else Cast(v, to, tz, EvalMode.ANSI)
   }
 
   private def noSubquery(e: Expression, stmt: String): Unit =
@@ -804,8 +837,8 @@ case class GraftDeleteCommand(dest: String, cond: Column, condSql: String,
   override def run(spark: SparkSession): Seq[Row] = {
     val mor = spark.conf.get("spark.graft.dml.mor", "true").toBoolean
     val n =
-      if (mor) ManifestSink.deleteWhereExprMor(spark, dest, cond)
-      else ManifestSink.deleteWhereExpr(spark, dest, cond)
+      if (mor) ManifestSink.deleteWhereMor(spark, dest, cond)
+      else ManifestSink.deleteWhere(spark, dest, cond)
     GraftDml.refreshAfterDml(spark, refreshTable)
     Seq(Row(n))
   }
@@ -815,7 +848,7 @@ case class GraftDeleteCommand(dest: String, cond: Column, condSql: String,
 
 /** `UPDATE t SET ... WHERE ...` → sidecar-rewrite mor update (default)
   * or copy-on-write. On a PARTITIONED layout the mor path keeps each
-  * updated row in its source file's partition (`updateWhereExprMor`
+  * updated row in its source file's partition (`updateWhereMor`
   * derives the value from the directory name — the partition column
   * is not assignable through SQL, so rows never move), keeping the
   * write O(changed rows) on the common date-partitioned CDC table.
@@ -823,16 +856,15 @@ case class GraftDeleteCommand(dest: String, cond: Column, condSql: String,
   */
 case class GraftUpdateCommand(dest: String, cond: Column,
     set: Map[String, Column], condSql: String,
-    refreshTable: Option[String], partitioned: Boolean = false)
+    refreshTable: Option[String])
     extends LeafRunnableCommand {
   override val output: Seq[Attribute] =
     Seq(AttributeReference("updated_rows", LongType, nullable = false)())
   override def run(spark: SparkSession): Seq[Row] = {
     val morFlag = spark.conf.get("spark.graft.dml.mor", "true").toBoolean
     val n =
-      if (morFlag)
-        ManifestSink.updateWhereExprMor(spark, dest, cond, set)
-      else ManifestSink.updateWhereExpr(spark, dest, cond, set)
+      if (morFlag) ManifestSink.updateWhereMor(spark, dest, cond, set)
+      else ManifestSink.updateWhere(spark, dest, cond, set)
     GraftDml.refreshAfterDml(spark, refreshTable)
     Seq(Row(n))
   }

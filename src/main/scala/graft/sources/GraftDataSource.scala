@@ -192,11 +192,7 @@ object GraftDataSource {
     // every committed file runs only for pre-schema-line logs. At
     // 100k files that sweep is a distributed job per relation
     // resolution; the log read is free.
-    val dataSchema: StructType =
-      if (handle.targets.isEmpty) StructType(Nil)
-      else handle.schemaOpt.getOrElse(
-        spark.read.option("mergeSchema", "true")
-          .parquet(index.inputFiles.toIndexedSeq: _*).schema)
+    val dataSchema: StructType = handle.dataSchema
     // COLUMN MAPPING: the relation surfaces LOGICAL names; the
     // FileFormat requests the PHYSICAL (file) names per column and
     // translates pushed-down filters (GraftParquetFileFormat.toPhys /
@@ -399,6 +395,65 @@ private[graft] object GraftFilterConversion {
     if (converted.isEmpty) None
     else if (converted.length == 1) Some(converted.head)
     else Some(And(converted))
+  }
+
+  /** The stats-decidable part of a DML row filter: `cond` analyzed
+    * against `schema` (a filter over an empty `LocalRelation` —
+    * analysis only, no job), constant-folded and split into conjuncts
+    * for [[toSkipPredicate]]. `cond` implies the result, so it only
+    * ever drops files with no matching row. Conjuncts carrying a
+    * subquery are left out (only the statement can resolve them); a
+    * condition that does not analyze converts to None and the row
+    * filter reports the error.
+    */
+  def fromColumn(spark: SparkSession, schema: StructType,
+      cond: org.apache.spark.sql.Column): Option[SkipPredicate] = {
+    import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+    import org.apache.spark.sql.catalyst.optimizer.{ConstantFolding, UnwrapCastInBinaryComparison}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+    import org.apache.spark.sql.graftbridge.Bridge
+    val parts = conjuncts(Bridge.expression(cond))
+    val kept = parts.filterNot(_.exists(_.isInstanceOf[SubqueryExpression]))
+    if (kept.isEmpty) return None
+    val rel = LocalRelation(
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema))
+    val analyzed =
+      try Bridge.dataFrame(spark, rel)
+        .where(if (kept.length == parts.length) cond
+          else Bridge.column(kept.reduce(CAnd)))
+        .queryExecution.analyzed
+      catch { case scala.util.control.NonFatal(_) => return None }
+    analyzed match {
+      case f: Filter =>
+        val folded = UnwrapCastInBinaryComparison(ConstantFolding(
+          f.copy(condition = inlineWith(f.condition))))
+        folded match {
+          case Filter(c, _) => toSkipPredicate(conjuncts(c))
+          case _ => None
+        }
+      case _ => None
+    }
+  }
+
+  private def conjuncts(e: Expression): Seq[Expression] = e match {
+    case CAnd(l, r) => conjuncts(l) ++ conjuncts(r)
+    case other => Seq(other)
+  }
+
+  /** `e` with its common-expression `With` blocks inlined (SQL
+    * `BETWEEN` resolves to one) — the plain comparisons the conversion
+    * matches, and a predicate the DML router can drop to column names,
+    * since a `With` re-derives its definitions' types and fails once
+    * its attributes are unresolved. A `With` over a non-deterministic
+    * definition stays (inlining would evaluate it twice).
+    */
+  def inlineWith(e: Expression): Expression = {
+    import org.apache.spark.sql.catalyst.expressions.{CommonExpressionRef, With}
+    e.transformUp {
+      case With(child, defs) if defs.forall(_.child.deterministic) =>
+        val byId = defs.map(d => d.id -> d.child).toMap
+        child.transform { case r: CommonExpressionRef => byId(r.id) }
+    }
   }
 
   private def numLit(v: Any): Option[Double] = v match {
@@ -754,8 +809,7 @@ object GraftParquetFileFormat {
         if (i < 0) rel else rel.substring(i + 1)
       }
       val byFile = spark.read
-        .schema("name STRING, pos BIGINT") // fixed sidecar schema: skips
-        // the per-read footer-inference job
+        .schema(ManifestSink.DvSidecarSchema)
         .parquet(sidecars: _*)
         .select("name", "pos")
         .where(org.apache.spark.sql.functions.col("name")

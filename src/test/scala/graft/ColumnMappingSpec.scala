@@ -179,12 +179,12 @@ class ColumnMappingSpec extends SparkSpec {
     ManifestSink.renameColumn(spark, dir, "n", "score")
     // COW delete on the renamed column
     val del = ManifestSink.deleteWhere(spark, dir,
-      SkipPredicate.NumRange("score", 0, 25))
+      col("score").between(0, 25))
     assert(del === 2L) // rows 1, 2
     assert(ManifestSink.readBack(spark, dir).count() === 8L)
     // MOR update of the renamed column
     ManifestSink.updateWhereMor(spark, dir,
-      SkipPredicate.NumRange("score", 95, 105),
+      col("score").between(95, 105),
       Map("score" -> lit(999L)))
     val updated = ManifestSink.readBack(spark, dir)
       .where(col("id") === 10L).select("score").as[Long].head()
@@ -213,7 +213,7 @@ class ColumnMappingSpec extends SparkSpec {
     ManifestSink.statsAppend(Seq((3L, "c")).toDF("id", "val2"),
       dir, None, Seq("id"))
     ManifestSink.deleteWhere(spark, dir,
-      SkipPredicate.NumRange("id", 2, 2))
+      col("id").between(2, 2))
     val feed = ManifestSink.readChangesBetween(spark, dir, 0L)
     assert(feed.columns.contains("val2") && !feed.columns.contains("v"))
     val rows = feed.select("id", "val2", "_change_type")
@@ -516,7 +516,7 @@ class ColumnMappingSpec extends SparkSpec {
       Seq("id", "body"))
     // tombstone 15 of 20 rows — live fraction 0.25 < 0.9 → victim
     assert(ManifestSink.deleteWhereMor(spark, dir,
-      SkipPredicate.NumRange("id", 1, 15)) === 15L)
+      col("id").between(1, 15)) === 15L)
     ManifestSink.renameColumn(spark, dir, "body", "text")
     assert(ManifestSink.purge(spark, dir, minLiveFraction = 0.9) === 1L)
     // the rewritten file must carry the PHYSICAL name — a purge that

@@ -475,7 +475,7 @@ class GraftDmlSpec extends SparkSpec {
       .pipe(df => ManifestSink.statsAppend(df, dest, None, Seq("id")))
     (10L until 20L).map(i => (i, i * 1.0)).toDF("id", "v").coalesce(1)
       .pipe(df => ManifestSink.statsAppend(df, dest, None, Seq("id")))
-    ManifestSink.deleteWhereExprMor(spark, dest, col("id") < 5)
+    ManifestSink.deleteWhereMor(spark, dest, col("id") < 5)
     spark.sql(s"CREATE TABLE $tbl USING graft LOCATION '$dest'")
     try {
       assert(spark.sql(s"SELECT count(*) FROM $tbl VERSION AS OF 0")
@@ -1426,6 +1426,199 @@ class GraftDmlSpec extends SparkSpec {
     assert(ManifestSink.mergeFullSync(spark, dest, src, "id") ==
       ManifestSink.MergeOutcome.Merged(15L, 5L, 6L))
     assert(ManifestSink.readBack(spark, dest).count() == 20L)
+  }
+
+  test("mergeFullSync: a count that fails after the durable commit " +
+      "returns Merged with -1 counts and a flagged metric, and commits " +
+      "exactly one version") {
+    val dest = s"${tmpDir("fsync_cnt_")}/t"
+    (0L until 20L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1)
+      .pipe(df => ManifestSink.statsAppend(df, dest, None, Seq("id")))
+    // the overlapped count reads the OLD live file, the commit only the
+    // source: losing that file fails the count alone
+    val victim = ManifestSink.readBack(spark, dest).inputFiles.head
+    assert(new java.io.File(new java.net.URI(victim)).delete())
+    val versions = ManifestSink.history(spark, dest).count()
+    val src = (5L until 25L).map(i => (i, s"n$i")).toDF("id", "v")
+    val out = new java.io.ByteArrayOutputStream()
+    val res = Console.withOut(out)(
+      ManifestSink.mergeFullSync(spark, dest, src, "id"))
+    assert(res == ManifestSink.MergeOutcome.Merged(-1L, -1L, -1L))
+    assert(out.toString("UTF-8")
+      .contains("METRIC graft.merge_full_sync.counts_failed=1"), out)
+    assert(ManifestSink.history(spark, dest).count() == versions + 1)
+    assert(ManifestSink.readBack(spark, dest).orderBy("id")
+      .select("v").as[String].collect().toSeq ==
+      (5 until 25).map(i => s"n$i"))
+  }
+
+  test("BETWEEN in SQL DELETE/UPDATE (WHERE and SET), mor and cow: " +
+      "the runtime-replaceable form reaches the router inlined") {
+    for (mor <- Seq("true", "false")) {
+      val (dest, tbl) = freshTable("dml_btw_")
+      (0L until 100L).map(i => (i, i * 1.0)).toDF("id", "v").coalesce(2)
+        .pipe(df => ManifestSink.statsAppend(df, dest, None, Seq("id")))
+      spark.sql(s"CREATE TABLE $tbl USING graft LOCATION '$dest'")
+      spark.conf.set("spark.graft.dml.mor", mor)
+      try {
+        assert(spark.sql(s"DELETE FROM $tbl WHERE id BETWEEN 10 AND 19")
+          .head.getLong(0) == 10L, s"mor=$mor")
+        assert(spark.sql(s"UPDATE $tbl SET v = IF(v BETWEEN 20 AND 24, " +
+          "500.0, -500.0) WHERE id BETWEEN 15 AND 29").head.getLong(0) ==
+          10L, s"mor=$mor")
+        assert(spark.table(tbl).count() == 90L)
+        assert(spark.table(tbl).where("v = 500.0").select("id").as[Long]
+          .collect().sorted.toSeq == (20L until 25L), s"mor=$mor")
+        assert(spark.table(tbl).where("v = -500.0").select("id").as[Long]
+          .collect().sorted.toSeq == (25L until 30L), s"mor=$mor")
+        assert(spark.table(tbl).schema("v").dataType ==
+          org.apache.spark.sql.types.DoubleType, s"mor=$mor")
+        // inlining would evaluate a non-deterministic input twice
+        val e = intercept[AnalysisException](spark.sql(
+          s"DELETE FROM $tbl WHERE rand() BETWEEN 0.2 AND 0.4"))
+        assert(e.getMessage.contains("non-deterministic"), e.getMessage)
+      } finally {
+        spark.conf.unset("spark.graft.dml.mor")
+        spark.sql(s"DROP TABLE $tbl")
+      }
+    }
+  }
+
+  /** `(files_total, candidates)` from the DML verb's METRIC line. */
+  private def dmlCandidates(mor: Boolean)(stmt: => Long): (Long, Int, Int) = {
+    val out = new java.io.ByteArrayOutputStream()
+    val n = Console.withOut(out)(stmt)
+    val kind = if (mor) "mor" else "rewrite"
+    val re = s"""METRIC graft\\.$kind\\.files_total=(\\d+) candidates=(\\d+)""".r
+    val m = re.findFirstMatchIn(out.toString("UTF-8")).getOrElse(
+      fail(s"no graft.$kind candidates line in:\n$out"))
+    (n, m.group(1).toInt, m.group(2).toInt)
+  }
+
+  test("SQL DELETE/UPDATE prune candidates by stats like SQL reads " +
+      "(mor and cow); a predicate that does not convert keeps every " +
+      "file a candidate and returns the same counts") {
+    val conv = "id >= 120 AND id <= 229 AND other = 'x'"
+    val noConv = "CAST(id AS STRING) RLIKE '^(1[2-9]|2[0-2])[0-9]$' " +
+      "AND other RLIKE '^x$'"
+    for (mor <- Seq(true, false); delete <- Seq(true, false);
+         (where, want) <- Seq(conv -> 2, noConv -> 4)) {
+      val (dest, tbl) = freshTable("dml_prune_")
+      // four files clustered on id: [0,100), [100,200), [200,300), ...
+      for (b <- 0 until 4)
+        (b * 100L until b * 100L + 100L)
+          .map(i => (i, if (i % 2 == 0) "x" else "y", i * 1.0))
+          .toDF("id", "other", "v").coalesce(1)
+          .pipe(df => ManifestSink.statsAppend(df, dest, None, Seq("id")))
+      spark.sql(s"CREATE TABLE $tbl USING graft LOCATION '$dest'")
+      spark.conf.set("spark.graft.dml.mor", mor.toString)
+      val what = s"mor=$mor delete=$delete where=$where"
+      try {
+        val (n, total, cands) = dmlCandidates(mor) {
+          spark.sql(
+            if (delete) s"DELETE FROM $tbl WHERE $where"
+            else s"UPDATE $tbl SET v = -1.0 WHERE $where").head.getLong(0)
+        }
+        assert(n == 55L, what)
+        assert(total == 4 && cands == want, s"$what: $total/$cands")
+        val left = spark.table(tbl)
+        if (delete) assert(left.count() == 345L, what)
+        else assert(left.where("v = -1.0").count() == 55L, what)
+      } finally {
+        spark.conf.unset("spark.graft.dml.mor")
+        spark.sql(s"DROP TABLE $tbl")
+      }
+    }
+  }
+
+  test("a NaN in a stats column bounds nothing: its file stays a " +
+      "candidate, so SQL DELETE/UPDATE (mor and cow) and reads match " +
+      "the unpruned filter") {
+    // Spark sorts NaN above every number, so the file's max is NaN;
+    // `v > 8` holds for NaN, BETWEEN does not
+    for (mor <- Seq(true, false); delete <- Seq(true, false);
+         (where, want) <- Seq("v BETWEEN 5 AND 8" -> 1L, "v > 8" -> 3L)) {
+      val (dest, tbl) = freshTable("dml_nan_")
+      for (rows <- Seq(Seq(0L -> 1.0, 1L -> 7.0, 2L -> Double.NaN),
+                       Seq(3L -> 10.0, 4L -> 11.0),
+                       Seq(5L -> 2.0, 6L -> 3.0)))
+        rows.toDF("id", "v").coalesce(1)
+          .pipe(df => ManifestSink.statsAppend(df, dest, None, Seq("v")))
+      spark.sql(s"CREATE TABLE $tbl USING graft LOCATION '$dest'")
+      spark.conf.set("spark.graft.dml.mor", mor.toString)
+      val what = s"mor=$mor delete=$delete where=$where"
+      try {
+        assert(spark.sql(s"SELECT count(*) FROM $tbl WHERE $where")
+          .head.getLong(0) == want, what)
+        val n = spark.sql(
+          if (delete) s"DELETE FROM $tbl WHERE $where"
+          else s"UPDATE $tbl SET id = -1 WHERE $where").head.getLong(0)
+        assert(n == want, what)
+        if (delete) assert(spark.table(tbl).count() == 7L - want, what)
+        else assert(spark.table(tbl).where("id = -1").count() == want, what)
+      } finally {
+        spark.conf.unset("spark.graft.dml.mor")
+        spark.sql(s"DROP TABLE $tbl")
+      }
+    }
+  }
+
+  test("DML on a log without schema lines prunes by stats against the " +
+      "footer-swept schema the SQL relation uses (mor and cow)") {
+    for (mor <- Seq(true, false)) {
+      val dest = s"${tmpDir("dml_noschemaj_")}/t"
+      for (b <- 0 until 4)
+        (b * 100L until b * 100L + 100L).map(i => (i, i * 1.0))
+          .toDF("id", "v").coalesce(1)
+          .pipe(df => ManifestSink.statsAppend(df, dest, None, Seq("id")))
+      new java.io.File(s"$dest/_log").listFiles()
+        .filter(_.getName.endsWith(".manifest")).foreach { mf =>
+          val kept = new java.util.ArrayList[String]()
+          java.nio.file.Files.readAllLines(mf.toPath).forEach(l =>
+            if (!l.startsWith("schemaj\t")) kept.add(l))
+          java.nio.file.Files.write(mf.toPath, kept)
+        }
+      ManifestSink.invalidateMfCache()
+      assert(ManifestSink.snapshotHandle(spark, dest).schemaOpt.isEmpty)
+      val cond = col("id").between(120, 229)
+      val (n, total, cands) = dmlCandidates(mor) {
+        if (mor) ManifestSink.deleteWhereMor(spark, dest, cond)
+        else ManifestSink.deleteWhere(spark, dest, cond)
+      }
+      assert(n == 110L && total == 4 && cands == 2, s"mor=$mor: $n $total/$cands")
+      assert(ManifestSink.readBack(spark, dest).count() == 290L)
+    }
+  }
+
+  test("UPDATE SET follows the store-assignment policy: an unsafe type " +
+      "pair is refused, an overflow raises even with ANSI mode off " +
+      "(mor and cow), and the table is left as it was") {
+    for (mor <- Seq("true", "false")) {
+      val (dest, tbl) = freshTable("dml_assign_")
+      (0L until 10L).map(i => (i, i.toInt)).toDF("id", "n").coalesce(1)
+        .pipe(df => ManifestSink.statsAppend(df, dest, None, Seq("id")))
+      spark.sql(s"CREATE TABLE $tbl USING graft LOCATION '$dest'")
+      spark.conf.set("spark.graft.dml.mor", mor)
+      spark.conf.set("spark.sql.ansi.enabled", "false")
+      try {
+        val e = intercept[AnalysisException](
+          spark.sql(s"UPDATE $tbl SET id = 'abc' WHERE id = 3"))
+        assert(e.getMessage.contains("storeAssignmentPolicy"), e.getMessage)
+        intercept[Exception](
+          spark.sql(s"UPDATE $tbl SET n = 3000000000 WHERE id = 3")
+            .collect())
+        assert(spark.table(tbl).orderBy("id").select("n").as[Int]
+          .collect().toSeq == (0 until 10), s"mor=$mor")
+        // a safe widening still applies
+        assert(spark.sql(s"UPDATE $tbl SET id = 100 WHERE n = 3")
+          .head.getLong(0) == 1L, s"mor=$mor")
+        assert(spark.table(tbl).where("id = 100").count() == 1L)
+      } finally {
+        spark.conf.unset("spark.graft.dml.mor")
+        spark.conf.unset("spark.sql.ansi.enabled")
+        spark.sql(s"DROP TABLE $tbl")
+      }
+    }
   }
 
   private implicit class Piper[A](a: A) {

@@ -32,9 +32,9 @@ class GraftDvScanSpec extends SparkSpec {
         dest, None, statsCols = Seq("id"), bloomCols = Seq("key"))
     // dvs on files 0 and 1; file 2 stays dv-less
     assert(ManifestSink.deleteWhereMor(spark, dest,
-      SkipPredicate.NumRange("id", 40, 59)) == 20L)
+      col("id").between(40, 59)) == 20L)
     assert(ManifestSink.deleteWhereMor(spark, dest,
-      SkipPredicate.NumRange("id", 150, 154)) == 5L)
+      col("id").between(150, 154)) == 5L)
   }
 
   test("a dv'd table scans COLUMNAR: the rewrite restores batch " +
@@ -111,7 +111,7 @@ class GraftDvScanSpec extends SparkSpec {
     ManifestSink.statsAppend(df.repartition(3, col("id")), dest,
       Some("ts"), statsCols = Seq("id"))
     assert(ManifestSink.deleteWhereMor(spark, dest,
-      SkipPredicate.NumRange("id", 0, 9)) == 10L)
+      col("id").between(0, 9)) == 10L)
 
     val all = spark.read.format("graft").load(dest)
     assert(all.count() == 80L)
@@ -177,7 +177,7 @@ class GraftDvScanSpec extends SparkSpec {
       (0L until 100L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1),
       dest, None, statsCols = Seq("id"))
     assert(ManifestSink.deleteWhereMor(spark, dest,
-      SkipPredicate.NumRange("id", 0, 9)) == 10L)
+      col("id").between(0, 9)) == 10L)
     val v0 = spark.read.format("graft").option("versionAsOf", "0")
       .load(dest)
     assert(v0.count() == 100L)

@@ -43,7 +43,7 @@ class GraftSqlSpec extends SparkSpec {
     assert(ManifestSink.optimize(spark, dest, targetBytes = 1L << 20) > 0)
     // live deletion vectors on top
     assert(ManifestSink.deleteWhereMor(spark, dest,
-      SkipPredicate.NumRange("id", 50, 149)) == 100L)
+      col("id").between(50, 149)) == 100L)
 
     val viaScala = ManifestSink.readBack(spark, dest)
       .orderBy("id").collect().toSeq
@@ -222,9 +222,9 @@ class GraftSqlSpec extends SparkSpec {
           .toDF("id", "v").coalesce(1),
         dest, None, statsCols = Seq("id"))
     assert(ManifestSink.deleteWhereMor(spark, dest,
-      SkipPredicate.NumRange("id", 40, 59)) == 20L)
+      col("id").between(40, 59)) == 20L)
     assert(ManifestSink.deleteWhereMor(spark, dest,
-      SkipPredicate.NumRange("id", 150, 150)) == 1L)
+      col("id").between(150, 150)) == 1L)
 
     val broadcastRows = spark.read.format("graft").load(dest)
       .orderBy("id").collect().toSeq

@@ -72,6 +72,24 @@ class GraphSpec extends SparkSpec {
     assert((0L until 50L).filter(got.contains).forall(h => got(h) < celeb))
   }
 
+  test("checkpointEvery = 2: the uncheckpointed round in each window " +
+      "still matches the reference and the every-round cadence") {
+    // node 5 is dangling; node 4 has no in-flow
+    val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 1L), (4L, 3L),
+      (4L, 5L))
+    val e = edges.toDF("src", "dst")
+    val every = run(edges, 7)
+    val two = Graph.pageRank(e, 7, checkpointEvery = 2)
+      .as[(Long, Double)].collect().toMap
+    val want = refPageRank(edges, 7)
+    assert(two.keySet == want.keySet)
+    two.foreach { case (v, r) =>
+      assert(math.abs(r - want(v)) < 1e-12, v)
+      assert(math.abs(r - every(v)) < 1e-12, v)
+    }
+    assert(math.abs(two.values.sum - 1.0) < 1e-9)
+  }
+
   private def refPpr(edges: Seq[(Long, Long)], seeds: Set[Long],
       iters: Int, d: Double = 0.85): Map[Long, Double] = {
     val nodes = (edges.map(_._1) ++ edges.map(_._2)).distinct.sorted

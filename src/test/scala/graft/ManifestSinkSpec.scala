@@ -894,7 +894,7 @@ class ManifestSinkSpec extends SparkSpec {
         values = Seq("2026-01-01")))
     assert(e.getMessage.contains("layout"), e.getMessage)
     // keep-partition mor UPDATE: rows stay in their hour directories
-    assert(ManifestSink.updateWhereExprMor(spark, dest,
+    assert(ManifestSink.updateWhereMor(spark, dest,
       col("id") === 9000L, Map("v" -> lit("upd"))) == 1L)
     val updated = ManifestSink.readBack(spark, dest)
       .where("v = 'upd'")
@@ -1066,7 +1066,7 @@ class ManifestSinkSpec extends SparkSpec {
           .coalesce(1), dest, None, Seq("id"))
     try {
       assert(ManifestSink.deleteWhere(spark, dest,
-        ManifestSink.SkipPredicate.NumRange("id", 100, 149)) == 50L)
+        col("id").between(100, 149)) == 50L)
     } finally ManifestSink.onBeforeRewriteCommit = () => ()
     val after = ManifestSink.readBack(spark, dest)
     assert(after.count() == 360)
@@ -1083,12 +1083,37 @@ class ManifestSinkSpec extends SparkSpec {
         Seq((210L, "dup")).toDF("id", "v"), dest, None, Seq("id"))
     try {
       assert(ManifestSink.deleteWhere(spark, dest,
-        ManifestSink.SkipPredicate.NumRange("id", 200, 249)) == 0L)
+        col("id").between(200, 249)) == 0L)
     } finally ManifestSink.onBeforeRewriteCommit = () => ()
     assert(ManifestSink.readBack(spark, dest).count() == 361)
     // retry sees both generations and deletes them all
     assert(ManifestSink.deleteWhere(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 200, 249)) == 51L)
+      col("id").between(200, 249)) == 51L)
+
+    // a Column predicate absorbs by its convertible conjuncts: the
+    // regex proves nothing, the id range proves the append disjoint
+    ManifestSink.onBeforeRewriteCommit = () =>
+      ManifestSink.statsAppend(
+        (1100L until 1105L).map(i => (i, s"n$i")).toDF("id", "v")
+          .coalesce(1), dest, None, Seq("id"))
+    try {
+      assert(ManifestSink.deleteWhere(spark, dest,
+        col("id").between(300, 349) && col("v").rlike("^v3[0-4]")) == 50L)
+    } finally ManifestSink.onBeforeRewriteCommit = () => ()
+    assert(ManifestSink.readBack(spark, dest).count() == 265)
+    // with nothing convertible the same kind of append cannot be
+    // proven disjoint: the delete aborts, the retry applies
+    ManifestSink.onBeforeRewriteCommit = () =>
+      ManifestSink.statsAppend(
+        (1200L until 1205L).map(i => (i, s"n$i")).toDF("id", "v")
+          .coalesce(1), dest, None, Seq("id"))
+    try {
+      assert(ManifestSink.deleteWhere(spark, dest,
+        col("v").rlike("^v35[0-4]$")) == 0L)
+    } finally ManifestSink.onBeforeRewriteCommit = () => ()
+    assert(ManifestSink.readBack(spark, dest).count() == 270)
+    assert(ManifestSink.deleteWhere(spark, dest,
+      col("v").rlike("^v35[0-4]$")) == 5L)
 
     // merge absorbs an append outside its key envelope
     ManifestSink.onBeforeRewriteCommit = () =>
@@ -1215,20 +1240,20 @@ class ManifestSinkSpec extends SparkSpec {
     ManifestSink.onBeforeRewriteCommit = () =>
       commitDvManually(dest, fileWith200, (210L until 220L))
     val gone = try ManifestSink.deleteWhere(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 200, 249))
+      col("id").between(200, 249))
     finally ManifestSink.onBeforeRewriteCommit = () => ()
     assert(gone == 0L, "dv on a rewritten file must abort the snapshot")
     assert(ManifestSink.readBack(spark, dest).count() ==
       400 + 50000 - 10 - 10)
     assert(ManifestSink.deleteWhere(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 200, 249)) == 40L)
+      col("id").between(200, 249)) == 40L)
 
     // ...and a COW delete absorbs a dv OUTSIDE its rewrite set
     val delTotal = 400 + 50000 - 10 - 10 - 40
     ManifestSink.onBeforeRewriteCommit = () =>
       commitDvManually(dest, bigRel, (2000L until 2010L))
     val gone2 = try ManifestSink.deleteWhere(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 0, 49))
+      col("id").between(0, 49))
     finally ManifestSink.onBeforeRewriteCommit = () => ()
     assert(gone2 == 50L,
       "dv on an untouched file must absorb, not abort")
@@ -1428,7 +1453,7 @@ class ManifestSinkSpec extends SparkSpec {
             val visible = visibleNow
             val expect = visible.filter(id => id >= lo && id <= lo + 9)
             val gone = ManifestSink.deleteWhere(spark, dest,
-              ManifestSink.SkipPredicate.NumRange("id", lo, lo + 9))
+              col("id").between(lo, lo + 9))
             if (pending.nonEmpty || expect.isEmpty)
               assert(gone == 0L,
                 s"schedule $i op#$k: delete must refuse/no-op, got $gone")
@@ -1498,7 +1523,7 @@ class ManifestSinkSpec extends SparkSpec {
             val lo = (k * 11 % 40).toDouble
             val expect = visibleNow.filter(id => id >= lo && id <= lo + 4)
             val gone = ManifestSink.deleteWhereMor(spark, dest,
-              ManifestSink.SkipPredicate.NumRange("id", lo, lo + 4))
+              col("id").between(lo, lo + 4))
             if (pending.nonEmpty || expect.isEmpty)
               assert(gone == 0L,
                 s"schedule $i op#$k: mor delete must refuse/no-op, " +
@@ -1558,7 +1583,7 @@ class ManifestSinkSpec extends SparkSpec {
     // partial delete inside file [100,199]: 61 rows go, the other four
     // stats-bearing files are untouched BYTES (same paths)
     assert(ManifestSink.deleteWhere(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 120, 180)) == 61L)
+      col("id").between(120, 180)) == 61L)
     val after1 = ManifestSink.readBack(spark, dest)
     assert(after1.count() == 503 - 61)
     assert(after1.where(col("id").between(120, 180)).count() == 0)
@@ -1575,7 +1600,7 @@ class ManifestSinkSpec extends SparkSpec {
 
     // whole-file delete: [200,299] drops its file entirely — no rewrite
     assert(ManifestSink.deleteWhere(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 200, 299)) == 100L)
+      col("id").between(200, 299)) == 100L)
     val after2 = ManifestSink.readBack(spark, dest)
     assert(after2.count() == 342)
     assert(after2.inputFiles.length == 5)
@@ -1583,9 +1608,9 @@ class ManifestSinkSpec extends SparkSpec {
     // no-match predicates: out-of-stats → zero candidates; in-stats
     // no-hit column → zero matched; both leave the log version alone
     assert(ManifestSink.deleteWhere(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 50000, 60000)) == 0L)
+      col("id").between(50000, 60000)) == 0L)
     assert(ManifestSink.deleteWhere(spark, dest,
-      ManifestSink.SkipPredicate.StrEq("v", "nope")) == 0L)
+      col("v") === "nope") == 0L)
     assert(ManifestSink.readBack(spark, dest).count() == 342)
 
     // vacuum sweeps the replaced generations once compact has dropped
@@ -1613,7 +1638,7 @@ class ManifestSinkSpec extends SparkSpec {
     // swap semantics: id and w exchange values in [300, 399] — only
     // well-defined if every SET expression sees the OLD row
     assert(ManifestSink.updateWhere(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 300, 399),
+      col("id").between(300, 399),
       Map("id" -> col("w"), "w" -> col("id"))) == 100L)
     val got = ManifestSink.readBack(spark, dest)
     assert(got.count() == 400)
@@ -1633,7 +1658,7 @@ class ManifestSinkSpec extends SparkSpec {
 
     // value update with a constant; matched count is rows actually hit
     assert(ManifestSink.updateWhere(spark, dest,
-      ManifestSink.SkipPredicate.StrEq("v", "v0"),
+      col("v") === "v0",
       Map("v" -> lit("patched"))) == 1L)
     assert(ManifestSink.readBack(spark, dest)
       .where(col("v") === "patched").count() == 1)
@@ -1641,7 +1666,7 @@ class ManifestSinkSpec extends SparkSpec {
     // SET on a missing column fails loudly
     intercept[IllegalArgumentException] {
       ManifestSink.updateWhere(spark, dest,
-        ManifestSink.SkipPredicate.NumRange("id", 0, 1),
+        col("id").between(0, 1),
         Map("nope" -> lit(1)))
     }
 
@@ -1653,7 +1678,7 @@ class ManifestSinkSpec extends SparkSpec {
         Seq((5000L, 5000L, "late")).toDF("id", "w", "v"), dest, None)
     try {
       assert(ManifestSink.updateWhere(spark, dest,
-        ManifestSink.SkipPredicate.NumRange("id", 0, 10),
+        col("id").between(0, 10),
         Map("v" -> lit("x"))) == 0L)
     } finally ManifestSink.onBeforeRewriteCommit = () => ()
     val afterAbort = ManifestSink.readBack(spark, dest)
@@ -1661,7 +1686,7 @@ class ManifestSinkSpec extends SparkSpec {
     assert(afterAbort.where(col("v") === "late").count() == 1)
     assert(afterAbort.where(col("v") === "x").count() == 0)
     assert(ManifestSink.updateWhere(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 0, 10),
+      col("id").between(0, 10),
       Map("v" -> lit("x"))) == 11L)
     assert(ManifestSink.readBack(spark, dest)
       .where(col("v") === "x").count() == 11)
@@ -2071,14 +2096,14 @@ class ManifestSinkSpec extends SparkSpec {
           .toDF("id", "v").coalesce(1),
         dest, None, statsCols = Seq("id"))
     val before = ManifestSink.readBack(spark, dest).inputFiles.toSet
-    assert(ManifestSink.updateWhereExpr(spark, dest,
+    assert(ManifestSink.updateWhere(spark, dest,
       col("v").contains("secret"),
       Map("v" -> lit("<REDACTED>"))) == 1L)
     val got = ManifestSink.readBack(spark, dest)
     assert(got.where(col("v") === "<REDACTED>").count() == 1)
     assert(got.where(col("v").contains("secret")).count() == 0)
     assert(got.inputFiles.toSet.intersect(before).size == 2)
-    assert(ManifestSink.deleteWhereExpr(spark, dest,
+    assert(ManifestSink.deleteWhere(spark, dest,
       col("v").endsWith("14")) == 1L)
     assert(ManifestSink.readBack(spark, dest).count() == 29)
   }
@@ -2447,7 +2472,7 @@ class ManifestSinkSpec extends SparkSpec {
           .toDF("id", "v").coalesce(1),
         dest, None, statsCols = Seq("id"))
     ManifestSink.deleteWhere(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 0, 14))
+      col("id").between(0, 14))
     assert(ManifestSink.readBack(spark, dest).count() == 15)
 
     val v2 = ManifestSink.readVersion(spark, dest, 2L)
@@ -2532,7 +2557,7 @@ class ManifestSinkSpec extends SparkSpec {
 
     // v4: tombstone 10 rows inside file 1 — zero data files rewritten
     assert(ManifestSink.deleteWhereMor(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 150, 159)) == 10L)
+      col("id").between(150, 159)) == 10L)
     assert(ManifestSink.readBack(spark, dest).count() == 390)
     assert(ManifestSink.readBack(spark, dest)
       .where(col("id").between(150, 159)).count() == 0)
@@ -2540,10 +2565,10 @@ class ManifestSinkSpec extends SparkSpec {
     assert(filesBefore.subsetOf(dataFilesOnDisk()))
     // re-deleting the same range is a live no-op (positions disjoint)
     assert(ManifestSink.deleteWhereMor(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 150, 159)) == 0L)
+      col("id").between(150, 159)) == 0L)
     // a second dv on the SAME file accumulates
     assert(ManifestSink.deleteWhereMor(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 120, 124)) == 5L)
+      col("id").between(120, 124)) == 5L)
     assert(ManifestSink.readBack(spark, dest).count() == 385)
 
     // stats-prune parity: skipping reads apply tombstones
@@ -2584,9 +2609,9 @@ class ManifestSinkSpec extends SparkSpec {
           .toDF("id", "v").coalesce(1),
         destCow, None, statsCols = Seq("id"))
     ManifestSink.deleteWhere(spark, destCow,
-      ManifestSink.SkipPredicate.NumRange("id", 150, 159))
+      col("id").between(150, 159))
     ManifestSink.deleteWhere(spark, destCow,
-      ManifestSink.SkipPredicate.NumRange("id", 120, 124))
+      col("id").between(120, 124))
     assert(ManifestSink.readBack(spark, dest)
         .as[(Long, String)].collect().toSeq.sorted ==
       ManifestSink.readBack(spark, destCow)
@@ -2595,7 +2620,7 @@ class ManifestSinkSpec extends SparkSpec {
     // a COW delete ON TOP of tombstones materializes them for the files
     // it rewrites and carries the rest
     assert(ManifestSink.deleteWhere(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 125, 129)) == 5L)
+      col("id").between(125, 129)) == 5L)
     assert(ManifestSink.readBack(spark, dest).count() == 380)
     assert(ManifestSink.readBack(spark, dest)
       .where(col("id").between(120, 159)).count() == 20)
@@ -2605,7 +2630,7 @@ class ManifestSinkSpec extends SparkSpec {
     // packed file's stats from written data, not the metadata merge
     // that would count the deleted rows
     assert(ManifestSink.deleteWhereMor(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 250, 254)) == 5L)
+      col("id").between(250, 254)) == 5L)
     assert(ManifestSink.optimize(spark, dest,
       targetBytes = 1L << 30) > 0L)
     assert(ManifestSink.readBack(spark, dest).count() == 375)
@@ -2702,14 +2727,14 @@ class ManifestSinkSpec extends SparkSpec {
       s"$root/wh/.staging_tm/deadbeef00000000")
     fs.mkdirs(stale)
     assert(ManifestSink.deleteWhereMor(spark, destMor,
-      ManifestSink.SkipPredicate.NumRange("id", 1, 2)) == 0L)
+      col("id").between(1, 2)) == 0L)
     fs.delete(stale.getParent, true)
     ManifestSink.onBeforeRewriteCommit = () =>
       ManifestSink.append(Seq((9999L, "late")).toDF("id", "v"),
         destMor, None)
     try {
       assert(ManifestSink.deleteWhereMor(spark, destMor,
-        ManifestSink.SkipPredicate.NumRange("id", 1, 2)) == 0L)
+        col("id").between(1, 2)) == 0L)
     } finally ManifestSink.onBeforeRewriteCommit = () => ()
     // the concurrent append survived, the aborted dv left no debris
     val after = ManifestSink.readBack(spark, destMor)
@@ -2717,7 +2742,7 @@ class ManifestSinkSpec extends SparkSpec {
     assert(after.where(col("id").between(1, 2)).count() == 2)
     // retry lands
     assert(ManifestSink.deleteWhereMor(spark, destMor,
-      ManifestSink.SkipPredicate.NumRange("id", 1, 2)) == 2L)
+      col("id").between(1, 2)) == 2L)
     assert(ManifestSink.readBack(spark, destMor)
       .where(col("id").between(1, 2)).count() == 0)
   }
@@ -2740,9 +2765,9 @@ class ManifestSinkSpec extends SparkSpec {
     // the table, MOR commits one dv sidecar + the 58 updated rows
     val pred7 = pmod(col("id"), lit(7L)) === 0
     val setV = Map("v" -> concat(col("v"), lit("!")))
-    val nMor = ManifestSink.updateWhereExprMor(spark, destMor,
+    val nMor = ManifestSink.updateWhereMor(spark, destMor,
       pred7, setV)
-    val nCow = ManifestSink.updateWhereExpr(spark, destCow, pred7, setV)
+    val nCow = ManifestSink.updateWhere(spark, destCow, pred7, setV)
     assert(nMor == nCow && nMor == 58L)
     // zero rewrites: every original file still committed under mor
     assert(morFiles.subsetOf(
@@ -2760,9 +2785,9 @@ class ManifestSinkSpec extends SparkSpec {
     val swap = Map("v" -> concat(lit("w="), col("w")),
       "w" -> (col("id") * 10))
     assert(ManifestSink.updateWhereMor(spark, destMor,
-      ManifestSink.SkipPredicate.NumRange("id", 10, 11), swap) == 2L)
+      col("id").between(10, 11), swap) == 2L)
     assert(ManifestSink.updateWhere(spark, destCow,
-      ManifestSink.SkipPredicate.NumRange("id", 10, 11), swap) == 2L)
+      col("id").between(10, 11), swap) == 2L)
     assert(stateOf(destMor) == stateOf(destCow))
     assert(ManifestSink.readBack(spark, destMor)
       .where(col("id") === 10L).as[(Long, String, Long)].head() ==
@@ -2770,9 +2795,9 @@ class ManifestSinkSpec extends SparkSpec {
 
     // live-row semantics: a second scattered pass matches the UPDATED
     // rows (ids unchanged), tombstones them, appends fresh versions
-    assert(ManifestSink.updateWhereExprMor(spark, destMor,
+    assert(ManifestSink.updateWhereMor(spark, destMor,
       pred7, setV) == 58L)
-    assert(ManifestSink.updateWhereExpr(spark, destCow,
+    assert(ManifestSink.updateWhere(spark, destCow,
       pred7, setV) == 58L)
     assert(ManifestSink.readBack(spark, destMor).count() == 400)
     assert(ManifestSink.readBack(spark, destMor)
@@ -2793,7 +2818,7 @@ class ManifestSinkSpec extends SparkSpec {
     // guards: SET column outside the file schema refuses
     val err = intercept[IllegalArgumentException] {
       ManifestSink.updateWhereMor(spark, destMor,
-        ManifestSink.SkipPredicate.NumRange("id", 0, 1),
+        col("id").between(0, 1),
         Map("nope" -> lit(1)))
     }
     assert(err.getMessage.contains("not in file schema"))
@@ -2818,9 +2843,9 @@ class ManifestSinkSpec extends SparkSpec {
       .repartitionByRange(4, col("id"))
     ManifestSink.statsAppend(base, dest, None, Seq("id")) // v0
     assert(ManifestSink.deleteWhereMor(spark, dest,
-      NumRange("id", 150, 159)) == 10L) // v1
+      col("id").between(150, 159)) == 10L) // v1
     assert(ManifestSink.updateWhereMor(spark, dest,
-      NumRange("id", 10, 11),
+      col("id").between(10, 11),
       Map("v" -> concat(col("v"), lit("U")))) == 2L) // v2
     ManifestSink.append(
       (400L until 420L).map(i => (i, s"v$i")).toDF("id", "v"),
@@ -2872,7 +2897,7 @@ class ManifestSinkSpec extends SparkSpec {
 
     // a COW rewrite in range refuses loudly; a range before it works
     assert(ManifestSink.deleteWhere(spark, dest,
-      NumRange("id", 200, 209)) == 10L) // v6: content-changing snapshot
+      col("id").between(200, 209)) == 10L) // v6: content-changing snapshot
     val err = intercept[IllegalArgumentException] {
       ManifestSink.readChangesBetween(spark, dest, 0L)
     }
@@ -2891,7 +2916,7 @@ class ManifestSinkSpec extends SparkSpec {
         .repartitionByRange(2, col("id")),
       dest, None, Seq("id"), bloomCols = Seq("key"))
     assert(ManifestSink.deleteWhereMor(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 0, 4)) == 5L)
+      col("id").between(0, 4)) == 5L)
     ManifestSink.enableChangeFeed(spark, dest)
     val d = ManifestSink.detail(spark, dest).head()
     assert(d.getLong(0) == 1L)                  // version
@@ -2938,7 +2963,7 @@ class ManifestSinkSpec extends SparkSpec {
         .toDF("id", "ts").coalesce(1),
       dest, Some("ts"), Seq("id"))
     assert(ManifestSink.deleteWhereMor(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 2, 2)) == 1L)
+      col("id").between(2, 2)) == 1L)
     val parts = ManifestSink.partitions(spark, dest)
       .as[(String, Long, Option[Long])].collect().toSeq
     assert(parts.map(_._1) == Seq(
@@ -2972,7 +2997,7 @@ class ManifestSinkSpec extends SparkSpec {
       dest, None, Seq("id")) // v0
     // a COW delete BEFORE enabling: nothing was captured — refuse
     assert(ManifestSink.deleteWhere(spark, dest,
-      NumRange("id", 0, 9)) == 10L) // v1
+      col("id").between(0, 9)) == 10L) // v1
     val err = intercept[IllegalArgumentException] {
       ManifestSink.readChangesBetween(spark, dest, 0L)
     }
@@ -2980,9 +3005,9 @@ class ManifestSinkSpec extends SparkSpec {
 
     ManifestSink.enableChangeFeed(spark, dest)
     assert(ManifestSink.deleteWhere(spark, dest,
-      NumRange("id", 10, 19)) == 10L) // v2: delete + sidecar
+      col("id").between(10, 19)) == 10L) // v2: delete + sidecar
     assert(ManifestSink.updateWhere(spark, dest,
-      NumRange("id", 20, 21),
+      col("id").between(20, 21),
       Map("v" -> concat(col("v"), lit("U")))) == 2L) // v3
     assert(ManifestSink.mergeInto(spark, dest,
       Seq((30L, "M"), (1000L, "N")).toDF("id", "v"), "id",
@@ -3100,7 +3125,7 @@ class ManifestSinkSpec extends SparkSpec {
     // a narrow COW delete after it lands a small sidecar of its own;
     // the feed reads both layouts in one range
     assert(ManifestSink.deleteWhere(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 1000, 1004)) == 5L) // v2
+      col("id").between(1000, 1004)) == 5L) // v2
     val both = ManifestSink.readChangesBetween(spark, dest, 0L)
     assert(both.where(col("_commit_version") === 2L &&
       col("_change_type") === "delete").count() == 5L)
@@ -3181,7 +3206,7 @@ class ManifestSinkSpec extends SparkSpec {
 
     // UPDATE keeps each row's partition (generic carry)
     assert(ManifestSink.updateWhereMor(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("doc_id", 10, 10),
+      col("doc_id").between(10, 10),
       Map("text" -> lit("patched"))) == 1L) // v2
     val upd = ManifestSink.readBack(spark, dest)
       .where("text = 'patched'")
@@ -3192,7 +3217,7 @@ class ManifestSinkSpec extends SparkSpec {
       .exists(_.getName.startsWith("mu")))
     // the escaped-space partition round-trips through an update too
     assert(ManifestSink.updateWhereMor(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("doc_id", 5, 5),
+      col("doc_id").between(5, 5),
       Map("text" -> lit("oi"))) == 1L) // v3
     assert(ManifestSink.readBack(spark, dest).where("text = 'oi'")
       .select("lang").as[String].collect().toSeq == Seq("pt br"))
@@ -3296,7 +3321,7 @@ class ManifestSinkSpec extends SparkSpec {
     // a COW rewrite drops the rewritten file's bloom (conservative);
     // untouched files keep theirs
     assert(ManifestSink.deleteWhere(spark, dest,
-      NumRange("id", 100, 149)) == 50L)
+      col("id").between(100, 149)) == 50L)
     assert(ManifestSink.readBackWherePred(spark, dest,
       StrEq("key", "k123")).count() == 0) // deleted
     val hit50 = ManifestSink.readBackWherePred(spark, dest,
@@ -3539,7 +3564,7 @@ class ManifestSinkSpec extends SparkSpec {
       ManifestSink.append(
         Seq((b.toLong, s"v$b")).toDF("id", "v").coalesce(1), dest, None)
     ManifestSink.deleteWhere(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 1, 1))
+      col("id").between(1, 1))
     assert(ManifestSink.readBack(spark, dest).count() == 1)
     val fs = new org.apache.hadoop.fs.Path(dest)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -3671,7 +3696,7 @@ class ManifestSinkSpec extends SparkSpec {
       statsCols = Seq("id"))
     // no partitionField: the updated row stays in 2024-01-02
     assert(ManifestSink.updateWhereMor(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 3, 3),
+      col("id").between(3, 3),
       Map("v" -> lit("C"))) == 1L)
     val sqlBack = spark.read.format("graft").load(dest)
     assert(sqlBack.where(col("id") === 3L)
@@ -3680,7 +3705,7 @@ class ManifestSinkSpec extends SparkSpec {
       .as[(String, String)].head() == (("C", "2024-01-02")))
     // with partitionField: update lands, partition value survives
     val n = ManifestSink.updateWhereMor(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 2, 2),
+      col("id").between(2, 2),
       Map("v" -> lit("B")), partitionField = Some("ts"))
     assert(n == 1L)
     val back = ManifestSink.readBack(spark, dest).orderBy("id")
@@ -3699,7 +3724,7 @@ class ManifestSinkSpec extends SparkSpec {
         .toDF("id", "v", "region"),
       dest2, Some("val(region)"))
     assert(ManifestSink.updateWhereMor(spark, dest2,
-      ManifestSink.SkipPredicate.NumRange("id", 1, 1),
+      col("id").between(1, 1),
       Map("v" -> lit("patched"))) == 1L)
     val g = ManifestSink.readBack(spark, dest2)
     assert(g.where("v = 'patched'").select("region")
@@ -3720,7 +3745,7 @@ class ManifestSinkSpec extends SparkSpec {
         s"\ntarget\tzone=x/$part")
     val ex = intercept[IllegalArgumentException] {
       ManifestSink.updateWhereMor(spark, dest2,
-        ManifestSink.SkipPredicate.NumRange("id", 1, 9),
+        col("id").between(1, 9),
         Map("v" -> lit("w")))
     }
     assert(ex.getMessage.contains("mixes partition layouts") ||
@@ -3750,11 +3775,11 @@ class ManifestSinkSpec extends SparkSpec {
     // heavy: 60 of file 1's rows; light: 5 of file 3's; full: all of
     // file 0's — three dv commits
     assert(ManifestSink.deleteWhereMor(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 100, 159)) == 60L)
+      col("id").between(100, 159)) == 60L)
     assert(ManifestSink.deleteWhereMor(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 300, 304)) == 5L)
+      col("id").between(300, 304)) == 5L)
     assert(ManifestSink.deleteWhereMor(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 0, 99)) == 100L)
+      col("id").between(0, 99)) == 100L)
     val expectIds = ManifestSink.readBack(spark, dest)
       .select("id").as[Long].collect().toSet
     assert(expectIds.size == 500 - 165)
@@ -3814,7 +3839,7 @@ class ManifestSinkSpec extends SparkSpec {
             .toDF("id", "v").coalesce(1), dest, None, Seq("id"))
       // v5: tombstones, so the checkpoint must carry dv lines too
       assert(ManifestSink.deleteWhereMor(spark, dest,
-        ManifestSink.SkipPredicate.NumRange("id", 12, 13)) == 2L)
+        col("id").between(12, 13)) == 2L)
       val full = ManifestSink.readBack(spark, dest)
         .select("id").as[Long].collect().toSet
       val v2 = ManifestSink.readVersion(spark, dest, 2)
@@ -4144,7 +4169,7 @@ class ManifestSinkSpec extends SparkSpec {
       > 0L)
     sizesComplete()
     ManifestSink.deleteWhereMor(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 0, 40))
+      col("id").between(0, 40))
     ManifestSink.purge(spark, dest, minLiveFraction = 0.99)
     sizesComplete()
     // checkpoint summarizes and later resolution still carries sizes

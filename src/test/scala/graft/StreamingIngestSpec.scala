@@ -1076,7 +1076,7 @@ class StreamingIngestSpec extends SparkSpec {
 
     // a content-changing commit in range refuses loudly
     ManifestSink.deleteWhereMor(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 40, 40))
+      col("id").between(40, 40))
     val err = intercept[IllegalArgumentException] { drain() }
     assert(err.getMessage.contains("content-changing"))
 
@@ -1236,7 +1236,7 @@ class StreamingIngestSpec extends SparkSpec {
       (0L until 20L).map(i => (i, s"v$i")).toDF("id", "v"),
       dest, None, Seq("id"))                                  // v0
     assert(ManifestSink.deleteWhereMor(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 3, 4)) == 2L) // v1
+      col("id").between(3, 4)) == 2L) // v1
     assert(drain() == Seq(0L, 1L))
     assert(seen.count(_._2 == "insert") == 20)
     assert(seen.filter(_._2 == "delete").map(r => (r._3, r._4))
@@ -1247,7 +1247,7 @@ class StreamingIngestSpec extends SparkSpec {
     // a mor update arrives as delete pre-image + insert post-image
     seen.clear()
     assert(ManifestSink.updateWhereMor(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 7, 7),
+      col("id").between(7, 7),
       Map("v" -> lit("NEW"))) == 1L)                          // v2
     assert(drain() == Seq(2L))
     assert(seen.sortBy(_._2) == Seq((2L, "delete", 7L, "v7"),
@@ -1260,7 +1260,7 @@ class StreamingIngestSpec extends SparkSpec {
     assert(drain().isEmpty)
     seen.clear()
     assert(ManifestSink.deleteWhereMor(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 10, 10)) == 1L) // v4
+      col("id").between(10, 10)) == 1L) // v4
     assert(drain() == Seq(4L))
     assert(seen.toSeq == Seq((4L, "delete", 10L, "v10")))
 
@@ -1268,7 +1268,7 @@ class StreamingIngestSpec extends SparkSpec {
     // the retry replays exactly the failed version, nothing else
     seen.clear()
     assert(ManifestSink.deleteWhereMor(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 11, 12)) == 2L) // v5
+      col("id").between(11, 12)) == 2L) // v5
     var boom = true
     intercept[RuntimeException] {
       StreamingIngest.changeFeedStream(spark, dest, ckpt) { (_, _) =>
@@ -1440,7 +1440,7 @@ class StreamingIngestSpec extends SparkSpec {
     // a content-changing commit fails the appends query LOUDLY (the
     // batch feed's refuse-on-COW contract, surfaced as a stream error)
     ManifestSink.deleteWhereMor(spark, dest,
-      ManifestSink.SkipPredicate.NumRange("id", 40, 40))
+      col("id").between(40, 40))
     val err = intercept[org.apache.spark.sql.streaming
         .StreamingQueryException] { drain() }
     assert(err.getMessage.contains("content-changing"))
@@ -1453,7 +1453,7 @@ class StreamingIngestSpec extends SparkSpec {
       (0L until 10L).map(i => (i, s"v$i")).toDF("id", "v"),
       dest2, None, Seq("id"))                                   // v0
     assert(ManifestSink.deleteWhereMor(spark, dest2,
-      ManifestSink.SkipPredicate.NumRange("id", 3, 4)) == 2L)   // v1
+      col("id").between(3, 4)) == 2L)   // v1
     val changes = scala.collection.mutable
       .ArrayBuffer[(Long, String, Long, String)]()
     def drainChanges(): Unit = {
@@ -1482,7 +1482,7 @@ class StreamingIngestSpec extends SparkSpec {
     assert(changes.length == 12)
     changes.clear()
     assert(ManifestSink.updateWhereMor(spark, dest2,
-      ManifestSink.SkipPredicate.NumRange("id", 7, 7),
+      col("id").between(7, 7),
       Map("v" -> lit("NEW"))) == 1L)                            // v2
     drainChanges()
     assert(changes.sortBy(_._2).toSeq == Seq(

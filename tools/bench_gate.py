@@ -12,7 +12,12 @@ bench_ref.json is the committed reference line (graft.Bench also writes its
 line to bench_out.json, but that path is gitignored by the driver).
 
 Both inputs are the one-line {"metric":"total",...,"queries":{...}} JSON the
-bench prints. Default gate ratio is 1.5x per query; total is gated at the
+bench prints. The line carries an "errors" object ({query: message}) ONLY
+when some query failed: it is omitted on a clean run to keep the line inside
+the capture's byte budget, so a missing field means {} (read it with
+doc.get("errors", {}), never doc["errors"]). A failed query still has its
+elapsed time in "queries"; this gate lists the new run's errors and trips on
+any. Default gate ratio is 1.5x per query; total is gated at the
 same ratio. Host timing noise on a shared box is real (BASELINE.md documents
 +-3x single-run swings; the bench already takes min-of-reps) — a tripped
 gate means "rerun to confirm, then investigate", not necessarily a code
@@ -62,6 +67,9 @@ def main():
     for name in sorted(set(pq) - set(nq)):
         print(f"GONE {name}: query disappeared from the bench")
         tripped.append((name, pq[name], None, None))
+    for name, msg in sorted(new.get("errors", {}).items()):
+        print(f"ERR  {name}: {msg}")
+        tripped.append((name, pq.get(name), nq.get(name), None))
     tr = new["value"] / prev["value"] if prev.get("value") else 1.0
     print(f"TOTAL {prev.get('value', 0):.2f}s -> {new['value']:.2f}s ({tr:.2f}x)")
     if tr > ratio:
