@@ -41,12 +41,15 @@ object GraftSession {
       .config("spark.sql.parquet.filterPushdown", "true")
       // file listing: above this many input paths Spark runs a CLUSTER
       // JOB just to list them (default 32 — tuned for slow object
-      // stores). The manifest engine passes explicit file lists per
-      // read, routinely 100s of paths on a local/HDFS-class fs where a
-      // driver listing is ~µs/path; a listing job costs a full
-      // scheduling round-trip per read at commit cadence. 1024 keeps
-      // the distributed listing for genuinely huge tables; tune down
-      // for high-latency object stores (SPARK_GRAFT_LIST_JOB_THRESHOLD)
+      // stores). Table reads (readBack, format("graft")) list nothing —
+      // their index is built from the manifest log — but the engine's
+      // internal maintenance reads (readFilesDv: DML rewrites, merges,
+      // optimize, change feeds) still pass explicit file lists,
+      // routinely 100s of paths on a local/HDFS-class fs where a driver
+      // listing is ~µs/path; a listing job costs a full scheduling
+      // round-trip per read at commit cadence. 1024 keeps the
+      // distributed listing for genuinely huge tables; tune down for
+      // high-latency object stores (SPARK_GRAFT_LIST_JOB_THRESHOLD)
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
         sys.env.getOrElse("SPARK_GRAFT_LIST_JOB_THRESHOLD", "1024"))
       // legacy testdata generations carry parquet TIMESTAMP(NANOS); the

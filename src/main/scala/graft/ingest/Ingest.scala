@@ -127,10 +127,15 @@ object Ingest {
   }
 
   /** Current destination schema if the table exists (minus the partition
-    * directory column we add on write).
+    * directory column we add on write). A [[ManifestSink]] destination
+    * answers from its log — the committed schema under logical names,
+    * no listing and no footer job; a plain directory infers it from a
+    * footer, which sees every file present, committed or not.
     */
   def destSchema(spark: SparkSession, destPath: String): Option[StructType] =
     if (!destExists(spark, destPath)) None
+    else if (ManifestSink.isTable(spark, destPath))
+      ManifestSink.planSchema(spark, destPath)
     else Some(StructType(spark.read.parquet(destPath)
       .schema.fields.filterNot(_.name == PartitionCol)))
 
@@ -216,7 +221,7 @@ object Ingest {
     * warehouse table (BucketToBigQuery.js:341–354); ours defaults to a
     * DAY-partitioned parquet layout, but a BigQuery-connector, Delta or
     * Iceberg sink drops in here without touching the pipeline: `loadTask`
-    * only ever calls [[append]] after planning and [[readBack]] for the
+    * only ever calls [[append]] after planning and [[rowCount]] for the
     * row-count metric.
     */
   trait DestinationSink {
@@ -230,6 +235,12 @@ object Ingest {
       * new wide files).
       */
     def readBack(spark: SparkSession, destPath: String): DataFrame
+
+    /** Rows in the destination. The default scans [[readBack]]; a sink
+      * whose metadata records row counts answers without one.
+      */
+    def rowCount(spark: SparkSession, destPath: String): Long =
+      readBack(spark, destPath).count()
 
     /** CRASH-IDEMPOTENT append: replaying the same `writeId` after a crash
       * anywhere between this call and [[finishCommit]] must leave the
@@ -639,7 +650,7 @@ object Ingest {
     Ledger.markImported(spark, plan.ledgerPath, plan.files)
     sink.finishCommit(spark, plan.destPath, plan.writeId)
 
-    val rows = sink.readBack(spark, plan.destPath).count()
+    val rows = sink.rowCount(spark, plan.destPath)
     // metric log lines, the reference's observability surface
     // (`METRIC B2BQ.*`, index.js:55-98)
     println(s"METRIC graft.files_loaded=${plan.files.length} " +

@@ -410,7 +410,7 @@ object ManifestSink extends Ingest.DestinationSink {
         case l if l.startsWith("checkpoint\t") => l.substring(11).toLong },
       statsLines = lines.filter(l =>
         l.startsWith("stats\t") || l.startsWith("stats2\t") ||
-          l.startsWith("fsize\t")),
+          l.startsWith("fsize\t") || l.startsWith("nrows\t")),
       bloomLines = lines.filter(l => l.startsWith("bloom\t") ||
         l.startsWith("bloomsc\t")),
       rawDvLines = lines.filter(_.startsWith("dv\t")),
@@ -662,60 +662,35 @@ object ManifestSink extends Ingest.DestinationSink {
   }
 
   /** Read exactly the committed file set — never a directory listing, so
-    * in-flight or rolled-back files are structurally invisible. basePath
-    * keeps the partition-directory column inference of the listing read.
-    * The file list is DEDUPED, which makes [[compact]] safe to race: a
-    * reader that sees both the snapshot manifest and not-yet-deleted old
-    * entries still reads each file once.
+    * in-flight or rolled-back files are structurally invisible. Every
+    * Scala read resolves like the SQL face (`format("graft")`): one
+    * [[snapshotHandle]] planned as [[GraftDataSource.relationFor]]'s
+    * relation over [[graft.sources.GraftFileIndex]] — file statuses
+    * and schema from the log (no stat per file, no footer sweep),
+    * partition columns typed by Spark's own partition-value inference,
+    * pushed filters pruned by the manifest stats and blooms, deletion
+    * vectors applied inside the scan.
     */
   override def readBack(spark: SparkSession, destPath: String): DataFrame =
-    readVersion(spark, destPath, Long.MaxValue)
+    readSnapshot(spark, snapshotHandle(spark, destPath))
 
   /** SNAPSHOT (time-travel) read: the table as of commit `version`
-    * (inclusive) — the union of files from manifests with version ≤ N.
+    * (inclusive) — the union of files from manifests with version ≤ N,
+    * under the schema and deletion vectors as of that version.
     * [[compact]] collapses history, so after a compaction only the
-    * snapshot version and later are reachable (the Delta-checkpoint
-    * trade, without retaining the tail).
+    * snapshot version and later are reachable; a version below the
+    * oldest surviving manifest or above the head refuses.
     */
   def readVersion(spark: SparkSession, destPath: String,
-      version: Long): DataFrame = {
-    val dest = new Path(destPath)
-    val fs = fsOf(spark, dest)
-    val full = manifests(fs, destPath)
-    if (full.isEmpty) return spark.emptyDataFrame
-    // guard against compacted-away history: a version below the oldest
-    // surviving manifest would otherwise return an empty DataFrame that is
-    // indistinguishable from "table was empty at that version"
-    val minV = full.map(_.getName.takeWhile(_.isDigit).toLong).min
-    require(version >= minV,
-      s"[graft] readVersion($version): history before v$minV was " +
-        s"compacted away; earliest readable snapshot is v$minV")
-    // checkpoint acceleration: valid whenever the cut is at or past the
-    // checkpointed version (the summary IS the state at its version);
-    // an older cut falls back to the full retained walk
-    val resolved = resolvedLog(fs, destPath)
-    val all =
-      if (resolved.headOption.exists(p =>
-          p.getName.endsWith(CkptSuffix) && vOfP(p) <= version)) resolved
-      else full
-    // snapshot semantics: the latest snapshot ≤ version supersedes every
-    // earlier manifest (so the window between an optimize/compact commit
-    // and its old-manifest cleanup never double-counts a replaced file)
-    val eligibleMfs = all
-      .filter(_.getName.takeWhile(_.isDigit).toLong <= version)
-    val eligible = eligibleMfs.map(mf => readManifest(fs, mf))
-    val lastSnap = eligible.lastIndexWhere(_._3)
-    val rels = (if (lastSnap >= 0) eligible.drop(lastSnap) else eligible)
-      .flatMap(_._2)
-      .distinct
-    if (rels.isEmpty) spark.emptyDataFrame
-    // deletion vectors committed at or before `version` apply; later
-    // ones must not (time travel sees the pre-delete rows) — and the
-    // READ SCHEMA is the one resolved AS OF the cut, so a version
-    // below an ALTER COLUMN TYPE widen reads at the pre-widen type
-    else readFilesDv(spark, destPath, rels,
-      effectiveDvsOf(fs, eligibleMfs), schemaCut = Some(eligibleMfs))
-  }
+      version: Long): DataFrame =
+    readSnapshot(spark,
+      snapshotHandle(spark, destPath, versionAsOf = Some(version)))
+
+  private def readSnapshot(spark: SparkSession, h: SnapshotHandle)
+      : DataFrame =
+    if (h.targets.isEmpty) spark.emptyDataFrame
+    else spark.baseRelationToDataFrame(
+      graft.sources.GraftDataSource.relationFor(spark, h))
 
   /** DESCRIBE HISTORY: one row per surviving log version —
     * `(version, commit_ts, kind, n_files, n_rows)`, all from manifest
@@ -723,8 +698,9 @@ object ManifestSink extends Ingest.DestinationSink {
     * (compact/optimize/rewrite/merge — versions that REPLACE history);
     * `n_files` is the version's own manifest's file count (for a
     * snapshot, the whole table at that point); `n_rows` comes from the
-    * version's stats lines when every listed file carries a row count,
-    * null otherwise — never a scan, never a wrong number. The driver-
+    * version's recorded per-file row counts ([[fileRowsOf]]) when every
+    * listed file has one, null otherwise (legacy commits) — never a
+    * scan, never a wrong number. The driver-
     * side cost is O(surviving manifests), the same listing every read
     * already performs.
     */
@@ -738,10 +714,7 @@ object ManifestSink extends Ingest.DestinationSink {
       val ts = new java.sql.Timestamp(
         fs.getFileStatus(mf).getModificationTime)
       val (_, targets, snap) = readManifest(fs, mf)
-      val stats = fileStatsOf(fs, Seq(mf))
-      val rowsByTgt: Map[String, Long] = stats.toSeq.groupBy(_._1._1)
-        .flatMap { case (t, es) =>
-          es.map(_._2.rows).find(_ >= 0).map(t -> _) }
+      val rowsByTgt = fileRowsOf(fs, Seq(mf))
       val nRows: Option[Long] =
         if (targets.nonEmpty && targets.forall(rowsByTgt.contains))
           Some(targets.map(rowsByTgt).sum)
@@ -769,25 +742,9 @@ object ManifestSink extends Ingest.DestinationSink {
     * (the [[readVersion]] "earliest readable" contract).
     */
   def readAsOf(spark: SparkSession, destPath: String,
-      tsMillis: Long): DataFrame = {
-    val dest = new Path(destPath)
-    val fs = fsOf(spark, dest)
-    val all = manifests(fs, destPath)
-    if (all.isEmpty) return spark.emptyDataFrame
-    val stamped = all.map(p =>
-      (p.getName.takeWhile(_.isDigit).toLong,
-        fs.getFileStatus(p).getModificationTime))
-    stamped.filter(_._2 <= tsMillis).map(_._1).maxOption match {
-      case Some(v) => readVersion(spark, destPath, v)
-      case None =>
-        val earliest = stamped.minBy(_._2)
-        throw new IllegalArgumentException(
-          s"[graft] readAsOf($tsMillis): earliest surviving commit is " +
-            s"v${earliest._1} at t=${earliest._2} — older history (if " +
-            "any) was compacted away; read a version explicitly or use " +
-            "a later timestamp")
-    }
-  }
+      tsMillis: Long): DataFrame =
+    readSnapshot(spark,
+      snapshotHandle(spark, destPath, timestampAsOf = Some(tsMillis)))
 
   /** Read-path seam for [[graft.sources.GraftDataSource]]: ONE log
     * resolution captured as an immutable handle — committed file set,
@@ -836,6 +793,23 @@ object ManifestSink extends Ingest.DestinationSink {
       * pre-fsize commits are absent (callers fall back to one RPC).
       */
     lazy val sizes: Map[String, (Long, Long)] = fileSizesOf(fs, mfs)
+    /** Per-file physical row counts recorded at commit
+      * ([[fileRowsOf]]); files from pre-`nrows` commits without stats
+      * are absent.
+      */
+    lazy val fileRows: Map[String, Long] = fileRowsOf(fs, mfs)
+    /** The live row count from the log alone — recorded per-file
+      * counts minus deletion-vector tombstones (exact: the write path
+      * only records positions live at write time, so they are
+      * disjoint). None when any file lacks a recorded count.
+      */
+    lazy val liveRows: Option[Long] =
+      if (!targets.forall(fileRows.contains)) None
+      else {
+        val live = targets.toSet
+        Some(targets.map(fileRows).sum - dvs.collect {
+          case (t, es) if live.contains(t) => es.map(_._2).sum }.sum)
+      }
     /** The data-file schema resolved from the log's `schemaj` lines;
       * None = fall back to a footer sweep.
       */
@@ -851,6 +825,27 @@ object ManifestSink extends Ingest.DestinationSink {
         .option("mergeSchema", "true")
         .parquet(targets.map(t => new Path(destPath, t).toString): _*)
         .schema)
+  }
+
+  /** True when `destPath` holds a manifest log. */
+  private[graft] def isTable(spark: SparkSession, destPath: String)
+      : Boolean =
+    fsOf(spark, new Path(destPath)).exists(logPath(destPath))
+
+  /** The committed schema an ingest plan evolves from: the head
+    * snapshot's data schema under LOGICAL names, without the layout
+    * (directory) columns — resolved from the log, so uncommitted or
+    * superseded files in the directory never reach the plan. None when
+    * nothing is committed.
+    */
+  private[graft] def planSchema(spark: SparkSession, destPath: String)
+      : Option[StructType] = {
+    val h = snapshotHandle(spark, destPath)
+    val layout = (layoutKeysOf(h.targets) :+ Ingest.PartitionCol).toSet
+    (if (h.targets.isEmpty) h.schemaOpt else Some(h.dataSchema))
+      .map(st => stripPhysical(
+        StructType(st.fields.filterNot(f => layout.contains(f.name)))))
+      .filter(_.nonEmpty)
   }
 
   /** Resolve a [[SnapshotHandle]] at the head, at `versionAsOf`, or at
@@ -889,14 +884,22 @@ object ManifestSink extends Ingest.DestinationSink {
           (p.getName.takeWhile(_.isDigit).toLong,
             fs.getFileStatus(p).getModificationTime))
         stamped.filter(_._2 <= ts).map(_._1).maxOption.getOrElse {
-          throw new IllegalArgumentException(
+          if (all.isEmpty) -1L // no commits: legitimately empty
+          else throw new IllegalArgumentException(
             s"[graft] timestampAsOf($ts): every surviving commit is " +
               "later — older history (if any) was compacted away")
         }
       case (None, None) => Long.MaxValue
     }
-    new SnapshotHandle(fs, destPath,
-      all.filter(_.getName.takeWhile(_.isDigit).toLong <= cut))
+    // a cut at or past the newest checkpoint resolves through it (the
+    // summary IS the state at its version); older cuts walk the full
+    // retained log
+    val resolved = resolvedLog(fs, destPath)
+    val base =
+      if (resolved.headOption.exists(p =>
+          p.getName.endsWith(CkptSuffix) && vOfP(p) <= cut)) resolved
+      else all
+    new SnapshotHandle(fs, destPath, base.filter(vOfP(_) <= cut))
   }
 
   /** The CDC tail's one-poll feed: every APPEND version in
@@ -971,7 +974,7 @@ object ManifestSink extends Ingest.DestinationSink {
     // per-version frames read under the CURRENT log schema so a
     // consumer unioning across an ALTER COLUMN TYPE widen sees one
     // type per column (legacy logs keep the footer union)
-    lazy val rdSchema = logReadSchema(spark, destPath, None)
+    lazy val rdSchema = logReadSchema(spark, destPath)
     (feed.map { case (v, targets) =>
       (v, () => {
         val rd = logSchemaReader(spark, rdSchema)
@@ -2065,6 +2068,7 @@ object ManifestSink extends Ingest.DestinationSink {
     val moves = scala.collection.mutable.ArrayBuffer[(Path, String)]()
     val newStats = scala.collection.mutable.ArrayBuffer[String]()
     val newBlooms = scala.collection.mutable.ArrayBuffer[String]()
+    val insRows = scala.collection.mutable.Map.empty[String, Long]
     var dvLines = Seq.empty[String]
     try {
       val relOfName: Map[String, String] =
@@ -2106,9 +2110,14 @@ object ManifestSink extends Ingest.DestinationSink {
         }
         // empty writer tasks leave zero-row parts — skip them (a
         // no-append sync must not commit an empty file per layout dir)
-        if (footerRowCount(conf, new Path(insOut, rel)) == 0L) None
-        else Some((rel, s"$dir$writeId-${moves.length}-" +
-          s"${insStaged.indexOf(rel)}.parquet"))
+        val n = footerRowCount(conf, new Path(insOut, rel))
+        if (n == 0L) None
+        else {
+          val tgt = s"$dir$writeId-${moves.length}-" +
+            s"${insStaged.indexOf(rel)}.parquet"
+          insRows(tgt) = n
+          Some((rel, tgt))
+        }
       }
       if (statsCols.nonEmpty && insTargets.nonEmpty)
         newStats ++= statsLinesFor(spark, fs, insOut,
@@ -2159,14 +2168,10 @@ object ManifestSink extends Ingest.DestinationSink {
     }
     val newTgts = moves.map(_._2)
       .filterNot(t => t == dvRel || t == bloomRel).toSeq
-    val schemaLn = newTgts.headOption.flatMap { tg =>
-      try Some(schemaLineOf(
-        parquetFooterSchema(fs, new Path(dest, tg))))
-      catch { case scala.util.control.NonFatal(_) => None }
-    }.toSeq
     val body = (Seq(s"writeid\t$writeId") ++
       newTgts.map("target\t" + _) ++ newStats ++
-      fsizeLinesForNew(fs, dest, newTgts) ++ schemaLn ++
+      newFileLines(fs, dest, newTgts,
+        rowsOfStatsLines(newStats.toSeq) ++ insRows) ++
       newBlooms.toSeq ++ dvLines).mkString("\n")
     val lp = logPath(destPath)
     fs.mkdirs(lp)
@@ -2256,7 +2261,7 @@ object ManifestSink extends Ingest.DestinationSink {
     // a range spanning an ALTER COLUMN TYPE widen mixes physical
     // types — read under the log-resolved schema (upcasts per file);
     // renamed columns scan physical and surface logical
-    val logSchema = logReadSchema(spark, destPath, None)
+    val logSchema = logReadSchema(spark, destPath)
     val rd = logSchemaReader(spark, logSchema)
     val df = rd.option("basePath", destPath).parquet(files: _*)
     logSchema.map(toLogicalDf(df, _)).getOrElse(df)
@@ -2693,22 +2698,19 @@ object ManifestSink extends Ingest.DestinationSink {
     if (i < 0) rel else rel.substring(i + 1)
   }
 
-  /** The READ schema for a set of committed files, resolved from the
-    * LOG (`schemaevo` commits rebase it — the type-widening contract:
-    * a file written before `ALTER COLUMN ... TYPE` upcasts to the
-    * widened type at scan time, where a footer `mergeSchema` union
-    * would refuse the int-vs-long conflict outright). `cut` scopes the
-    * resolution for time travel (the schema AS OF that version's
-    * manifests); None resolves the current log. A None RESULT (legacy
-    * logs without schema lines) falls back to the footer union — those
-    * tables cannot have widened (the widen verb itself establishes the
-    * log schema), so `mergeSchema` remains sound there.
+  /** The READ schema for the committed files, resolved from the
+    * current LOG (`schemaevo` commits rebase it — the type-widening
+    * contract: a file written before `ALTER COLUMN ... TYPE` upcasts to
+    * the widened type at scan time, where a footer `mergeSchema` union
+    * would refuse the int-vs-long conflict outright). A None RESULT
+    * (legacy logs without schema lines) falls back to the footer union
+    * — those tables cannot have widened (the widen verb itself
+    * establishes the log schema), so `mergeSchema` remains sound there.
     */
-  private def logReadSchema(spark: SparkSession, destPath: String,
-      cut: Option[Seq[Path]]): Option[StructType] = {
-    val dest = new Path(destPath)
-    val fs = fsOf(spark, dest)
-    effectiveSchemaOf(fs, cut.getOrElse(resolvedLog(fs, destPath)))
+  private def logReadSchema(spark: SparkSession, destPath: String)
+      : Option[StructType] = {
+    val fs = fsOf(spark, new Path(destPath))
+    effectiveSchemaOf(fs, resolvedLog(fs, destPath))
   }
 
   /** Refuse NEW partition directories whose value does not ROUND-TRIP
@@ -2805,10 +2807,9 @@ object ManifestSink extends Ingest.DestinationSink {
     */
   private def readFilesDvMeta(spark: SparkSession, destPath: String,
       rels: Seq[String], dvs: Map[String, Seq[(String, Long)]],
-      withBase: Boolean = true,
-      schemaCut: Option[Seq[Path]] = None): DataFrame = {
+      withBase: Boolean = true): DataFrame = {
     val dest = new Path(destPath)
-    val logSchema = logReadSchema(spark, destPath, schemaCut)
+    val logSchema = logReadSchema(spark, destPath)
     // scan under PHYSICAL names (what the files carry); renamed
     // columns surface under their logical names after the read
     val rd = logSchemaReader(spark, logSchema)
@@ -2894,18 +2895,17 @@ object ManifestSink extends Ingest.DestinationSink {
     */
   private def readFilesDv(spark: SparkSession, destPath: String,
       rels: Seq[String], dvs: Map[String, Seq[(String, Long)]],
-      withBase: Boolean = true,
-      schemaCut: Option[Seq[Path]] = None): DataFrame = {
+      withBase: Boolean = true): DataFrame = {
     val dest = new Path(destPath)
     val relSet = rels.toSet
     if (!dvs.exists { case (t, _) => relSet.contains(t) }) {
-      val logSchema = logReadSchema(spark, destPath, schemaCut)
+      val logSchema = logReadSchema(spark, destPath)
       val rd = logSchemaReader(spark, logSchema)
       val df = (if (withBase) rd.option("basePath", destPath) else rd)
         .parquet(rels.map(rel => new Path(dest, rel).toString): _*)
       logSchema.map(toLogicalDf(df, _)).getOrElse(df)
-    } else readFilesDvMeta(spark, destPath, rels, dvs, withBase,
-      schemaCut).drop("__graft_fn", "__graft_pos")
+    } else readFilesDvMeta(spark, destPath, rels, dvs, withBase)
+      .drop("__graft_fn", "__graft_pos")
   }
 
   /** Rebuild the raw `dv` manifest lines for the given SURVIVING
@@ -3172,6 +3172,72 @@ object ManifestSink extends Ingest.DestinationSink {
             _: java.nio.file.NoSuchFileException => None
       }
     }
+
+  /** One `nrows` TSV line: a file's physical row count (deletion
+    * vectors not subtracted), recorded next to its `fsize` line at
+    * commit from a footer the commit reads anyway, and carried with it
+    * (same statsLines family) — what [[metadataCount]] and
+    * [[rowCount]] answer from without a scan.
+    */
+  private def nrowsLine(tgt: String, n: Long): String =
+    s"nrows\t$tgt\t$n"
+
+  /** Per-target row counts carried by `stats2` lines (every stats
+    * column records the file's row count).
+    */
+  private def rowsOfStatsLines(lines: Seq[String]): Map[String, Long] =
+    lines.flatMap { l =>
+      l.split('\t') match {
+        case Array("stats2", tgt, _, _, _, _, _, rows) if rows.toLong >= 0 =>
+          Some(tgt -> rows.toLong)
+        case _ => None
+      }
+    }.toMap
+
+  /** The metadata lines of files a commit just moved into `dest`:
+    * `fsize` and `nrows` per file plus the commit's `schemaj` line
+    * (from the first file — one write job writes one schema). Each
+    * file's footer is opened at most once, and not at all when
+    * `knownRows` (counts the stats lane already read) covers it and it
+    * is not the schema source. A footer that cannot be read leaves
+    * that file without a count (readers then scan) or the commit
+    * without a schema line (readers sweep footers).
+    */
+  private def newFileLines(fs: FileSystem, dest: Path, tgts: Seq[String],
+      knownRows: Map[String, Long] = Map.empty): Seq[String] = {
+    def footer(t: String) =
+      try Some(readFooter(fs.getConf, new Path(dest, t)))
+      catch { case scala.util.control.NonFatal(_) => None }
+    val first = tgts.headOption.flatMap(footer)
+    val rows = tgts.zipWithIndex.flatMap { case (t, i) =>
+      (if (i == 0) first.map(footerRows)
+       else knownRows.get(t).orElse(footer(t).map(footerRows)))
+        .map(nrowsLine(t, _))
+    }
+    val schemaLn = first.flatMap { md =>
+      try Some(schemaLineOf(footerSchemaOf(md, fs.getConf)))
+      catch { case scala.util.control.NonFatal(_) => None }
+    }
+    fsizeLinesForNew(fs, dest, tgts) ++ rows ++ schemaLn.toSeq
+  }
+
+  /** Per-file physical row counts resolved like [[fileSizesOf]]:
+    * `nrows` lines, else the count a `stats2` line records. Files
+    * committed with neither are absent.
+    */
+  private[graft] def fileRowsOf(fs: FileSystem, mfs: Seq[Path])
+      : Map[String, Long] = {
+    val parsed = mfs.map(mf => readManifest(fs, mf))
+    val lastSnap = parsed.lastIndexWhere(_._3)
+    val lines = (if (lastSnap >= 0) mfs.drop(lastSnap) else mfs)
+      .flatMap(rawStatsLines(fs, _))
+    rowsOfStatsLines(lines) ++ lines.flatMap { l =>
+      l.split('\t') match {
+        case Array("nrows", tgt, n) => Some(tgt -> n.toLong)
+        case _ => None
+      }
+    }
+  }
 
   /** Per-file (bytes, mtime) from the `fsize` lines, resolved like
     * [[fileStatsOf]] (from the last snapshot onward). Files committed
@@ -3577,36 +3643,33 @@ object ManifestSink extends Ingest.DestinationSink {
   private def mappingFor(fs: FileSystem, mfs: Seq[Path])
       : Map[String, String] = mappingOf(effectiveSchemaOf(fs, mfs))
 
-  /** Schema of one parquet file via a direct parquet-mr footer read —
+  /** Schema of one parquet file from its footer ([[readFooter]]) —
     * ~5 ms against `spark.read.parquet(...).schema`'s ~100 ms
     * DataSource resolution, which matters because this runs inside
     * EVERY commit. Spark-written files carry their exact StructType
     * JSON in the footer metadata; the type converter is the fallback
     * for files from other writers.
     */
-  private def parquetFooterSchema(fs: FileSystem, p: Path): StructType = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(p, fs.getConf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      val md = reader.getFooter.getFileMetaData
-      Option(md.getKeyValueMetaData
-          .get("org.apache.spark.sql.parquet.row.metadata"))
-        .flatMap { json =>
-          // defense in depth for the column-mapping metadata: a footer
-          // NEVER legitimately records `graft.physical` (the mapping
-          // lives only in the log's evo/snapshot lines) — a frame that
-          // smuggled it in must not poison this commit's schema line
-          try Some(stripPhysical(
-            org.apache.spark.sql.types.DataType.fromJson(json)
-              .asInstanceOf[StructType]))
-          catch { case scala.util.control.NonFatal(_) => None }
-        }
-        .getOrElse(
-          new org.apache.spark.sql.execution.datasources.parquet
-            .ParquetToSparkSchemaConverter(fs.getConf)
-            .convert(md.getSchema))
-    } finally reader.close()
+  private def footerSchemaOf(
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
+      conf: org.apache.hadoop.conf.Configuration): StructType = {
+    val md = footer.getFileMetaData
+    Option(md.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      .flatMap { json =>
+        // defense in depth for the column-mapping metadata: a footer
+        // NEVER legitimately records `graft.physical` (the mapping
+        // lives only in the log's evo/snapshot lines) — a frame that
+        // smuggled it in must not poison this commit's schema line
+        try Some(stripPhysical(
+          org.apache.spark.sql.types.DataType.fromJson(json)
+            .asInstanceOf[StructType]))
+        catch { case scala.util.control.NonFatal(_) => None }
+      }
+      .getOrElse(
+        new org.apache.spark.sql.execution.datasources.parquet
+          .ParquetToSparkSchemaConverter(conf)
+          .convert(md.getSchema))
   }
 
   private def fileStatsOf(fs: FileSystem, mfs: Seq[Path])
@@ -4630,9 +4693,7 @@ object ManifestSink extends Ingest.DestinationSink {
     if (targets.isEmpty) return 0L
     val stats = fileStatsOf(fs, mfs)
     val dvs = effectiveDvsOf(fs, mfs)
-    val rowsByTgt: Map[String, Long] = stats.toSeq.groupBy(_._1._1)
-      .flatMap { case (t, es) =>
-        es.map(_._2.rows).find(_ >= 0).map(t -> _) }
+    val rowsByTgt = fileRowsOf(fs, mfs)
     def rowsOf(t: String): Option[Long] = rowsByTgt.get(t)
     var credited = 0L
     val scanList = scala.collection.mutable.ArrayBuffer[String]()
@@ -5508,14 +5569,9 @@ object ManifestSink extends Ingest.DestinationSink {
       s"dv\t${relOfName(n)}\t$dvRel\t$cnt"
     }
     val newTgts = moves.map(_._2).filterNot(_ == dvRel).toSeq
-    val schemaLn = newTgts.headOption.flatMap { t =>
-      try Some(schemaLineOf(
-        parquetFooterSchema(fs, new Path(dest, t))))
-      catch { case scala.util.control.NonFatal(_) => None }
-    }.toSeq
     val body = (Seq(s"writeid\t$writeId") ++
-      newTgts.map("target\t" + _) ++
-      newStats ++ fsizeLinesForNew(fs, dest, newTgts) ++ schemaLn ++
+      newTgts.map("target\t" + _) ++ newStats ++
+      newFileLines(fs, dest, newTgts, rowsOfStatsLines(newStats.toSeq)) ++
       dvLines).mkString("\n")
     val lp = logPath(destPath)
     fs.mkdirs(lp)
@@ -6106,18 +6162,29 @@ object ManifestSink extends Ingest.DestinationSink {
     }
   }
 
-  /** One parquet file's exact row count from its FOOTER — a
-    * metadata-only read (no data pages), the cheapest truthful row
-    * count a file can give.
+  /** One parquet file's FOOTER — a metadata-only read (no data
+    * pages). Every commit-time footer consumer (schema line, row
+    * counts, stats lane) works from one of these per file.
     */
-  private[graft] def footerRowCount(
-      conf: org.apache.hadoop.conf.Configuration, file: Path): Long = {
-    import scala.jdk.CollectionConverters._
+  private def readFooter(conf: org.apache.hadoop.conf.Configuration,
+      file: Path): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
-    val footer = try reader.getFooter finally reader.close()
-    footer.getBlocks.asScala.map(_.getRowCount).sum
+    try reader.getFooter finally reader.close()
   }
+
+  private def footerRows(
+      md: org.apache.parquet.hadoop.metadata.ParquetMetadata): Long = {
+    import scala.jdk.CollectionConverters._
+    md.getBlocks.asScala.map(_.getRowCount).sum
+  }
+
+  /** One parquet file's exact row count from its footer — the
+    * cheapest truthful row count a file can give.
+    */
+  private[graft] def footerRowCount(
+      conf: org.apache.hadoop.conf.Configuration, file: Path): Long =
+    footerRows(readFooter(conf, file))
 
   /** Total rows committed under `writeId`, from the committing
     * manifest's target files' footers; None when no surviving manifest
@@ -6145,14 +6212,11 @@ object ManifestSink extends Ingest.DestinationSink {
     * statistics. Runs on the driver for small commits and inside
     * executor tasks for large ones (object + serializable args only).
     */
-  private[graft] def footerStatsOfFile(
-      conf: org.apache.hadoop.conf.Configuration, file: Path,
+  private def footerStatsOf(
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
       kinds: Seq[(String, String)]): Option[Seq[(String, ColStats)]] = {
     import scala.jdk.CollectionConverters._
     import org.apache.parquet.column.{statistics => pqs}
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
-    val footer = try reader.getFooter finally reader.close()
     val schema = footer.getFileMetaData.getSchema
     val blocks = footer.getBlocks.asScala.toSeq
     val rows = blocks.map(_.getRowCount).sum
@@ -6219,97 +6283,108 @@ object ManifestSink extends Ingest.DestinationSink {
     Some(out.result())
   }
 
+  /** Driver-side footer cap by scheme: a LOCAL footer read is ~1 ms,
+    * so the 8-wide driver pool clears even a 1-2k-file commit in
+    * ~100-250 ms where the executor fan-out pays a full job's
+    * scheduling latency (measured 0.64 s for 720 files); object-store
+    * footers are 20-50 ms HEAD+GET each, so remote schemes keep the
+    * lower cap and fan out.
+    */
+  private def footerDriverCap(fs: FileSystem): Int =
+    if (fs.getScheme == "file")
+      math.max(FooterStatsMaxFiles, FooterStatsLocalCap)
+    else FooterStatsMaxFiles
+
+  /** The commit's FOOTER LANE: every staged file's footer opened once
+    * and reduced by `f` where it was read — on the driver (sequential
+    * up to 8 files, an 8-thread pool up to [[footerDriverCap]]) or as
+    * one tiny job over the FILE LIST beyond it (zero data bytes
+    * read). `first` is the caller's already-read footer of
+    * `rels.head`. A file whose footer cannot be read is absent.
+    */
+  private def footerLane[T: scala.reflect.ClassTag](spark: SparkSession,
+      fs: FileSystem, staged: Path, rels: Seq[String],
+      first: Option[org.apache.parquet.hadoop.metadata.ParquetMetadata])
+      (f: org.apache.parquet.hadoop.metadata.ParquetMetadata => T)
+      : Map[String, T] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val stagedStr = fs.makeQualified(staged).toString
+    val head = for (md <- first; r <- rels.headOption) yield r -> f(md)
+    val rest = if (head.isDefined) rels.tail else rels
+    def one(rel: String): Option[(String, T)] =
+      try Some(rel -> f(readFooter(conf, new Path(stagedStr, rel))))
+      catch { case scala.util.control.NonFatal(_) => None }
+    val read: Seq[(String, T)] =
+      if (rest.length <= footerDriverCap(fs) && rest.length <= 8)
+        rest.flatMap(one)
+      else if (rest.length <= footerDriverCap(fs)) {
+        // driver mode, but not SEQUENTIAL: a 250-file commit pays
+        // ~1 ms/footer serially — a small pool overlaps the reads
+        // (same pattern as optimize's rewrite units)
+        import scala.concurrent.{Await, ExecutionContext, Future}
+        import scala.concurrent.duration.Duration
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+        implicit val ec: ExecutionContext =
+          ExecutionContext.fromExecutor(pool)
+        try Await.result(Future.traverse(rest)(rel => Future(one(rel))),
+          Duration.Inf).flatten
+        finally pool.shutdown()
+      } else {
+        val confEntries: Array[(String, String)] = {
+          val it = conf.iterator()
+          val buf = scala.collection.mutable.ArrayBuffer[(String, String)]()
+          while (it.hasNext) {
+            val e = it.next(); buf += ((e.getKey, e.getValue))
+          }
+          buf.toArray
+        }
+        val nPart = math.min(32, (rest.length + 63) / 64)
+        spark.sparkContext.parallelize(rest, nPart)
+          .mapPartitions { it =>
+            val c = new org.apache.hadoop.conf.Configuration(false)
+            confEntries.foreach { case (k, v) => c.set(k, v) }
+            it.flatMap { rel =>
+              try Some(rel -> f(readFooter(c, new Path(stagedStr, rel))))
+              catch { case scala.util.control.NonFatal(_) => None }
+            }
+          }.collect().toSeq
+      }
+    (head.toSeq ++ read).toMap
+  }
+
   private def footerStatsLines(spark: SparkSession, fs: FileSystem,
       staged: Path, relToTarget: Map[String, String],
-      statsCols: Seq[String]): Option[Seq[String]] = {
+      statsCols: Seq[String],
+      first: Option[org.apache.parquet.hadoop.metadata.ParquetMetadata])
+      : Option[Seq[String]] = {
     if (relToTarget.isEmpty || FooterStatsMaxFiles <= 0) return None
     if (statsCols.exists(_.contains('.'))) return None
     import scala.jdk.CollectionConverters._
     try {
-      val conf = spark.sparkContext.hadoopConfiguration
-      // scheme-aware driver cap: a LOCAL footer read is ~1 ms, so the
-      // 8-wide driver pool clears even a 1-2k-file commit in ~100-250 ms
-      // where the executor fan-out pays a full job's scheduling latency
-      // (measured 0.64 s for 720 files); object-store footers are
-      // 20-50 ms HEAD+GET each, so remote schemes keep the lower cap
-      // and fan out
-      val driverCap =
-        if (fs.getScheme == "file")
-          math.max(FooterStatsMaxFiles, FooterStatsLocalCap)
-        else FooterStatsMaxFiles
       val rels = relToTarget.keys.toSeq.sorted
-      // the kind gate reads ONE footer (a staged commit is one write
-      // job: uniform schema; per-file re-validation catches drift)
+      val head = first.getOrElse(readFooter(
+        spark.sparkContext.hadoopConfiguration, new Path(staged, rels.head)))
+      // the kind gate reads the FIRST footer (a staged commit is one
+      // write job: uniform schema; per-file re-validation catches drift)
       val kinds: Seq[(String, String)] = {
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new Path(staged, rels.head), conf))
-        val schema =
-          try reader.getFooter.getFileMetaData.getSchema
-          finally reader.close()
+        val schema = head.getFileMetaData.getSchema
         statsCols.sorted.map { c =>
           val f = schema.getFields.asScala.find(_.getName == c)
             .getOrElse(return None)
           c -> footerKindOf(f).getOrElse(return None)
         }
       }
-      val perFile: Seq[(String, Option[Seq[(String, ColStats)]])] =
-        if (rels.length <= driverCap) {
-          // driver mode, but not SEQUENTIAL: a 250-file commit pays
-          // ~1 ms/footer serially — a small pool overlaps the reads
-          // (same pattern as optimize's rewrite units)
-          if (rels.length <= 8)
-            rels.map(rel =>
-              rel -> footerStatsOfFile(conf, new Path(staged, rel),
-                kinds))
-          else {
-            import scala.concurrent.{Await, ExecutionContext, Future}
-            import scala.concurrent.duration.Duration
-            val pool = java.util.concurrent.Executors
-              .newFixedThreadPool(8)
-            implicit val ec: ExecutionContext =
-              ExecutionContext.fromExecutor(pool)
-            try Await.result(Future.traverse(rels)(rel => Future(
-              rel -> footerStatsOfFile(conf, new Path(staged, rel),
-                kinds))), Duration.Inf)
-            finally pool.shutdown()
-          }
-        } else {
-          // large commit: fan the FOOTER reads out as one tiny job
-          // over the file list — still zero data bytes re-read
-          val stagedStr = fs.makeQualified(staged).toString
-          val confEntries: Array[(String, String)] = {
-            val it = conf.iterator()
-            val buf = scala.collection.mutable
-              .ArrayBuffer[(String, String)]()
-            while (it.hasNext) {
-              val e = it.next(); buf += ((e.getKey, e.getValue))
-            }
-            buf.toArray
-          }
-          val nPart = math.min(32, (rels.length + 63) / 64)
-          spark.sparkContext.parallelize(rels, nPart)
-            .mapPartitions { it =>
-              val c = new org.apache.hadoop.conf.Configuration(false)
-              confEntries.foreach { case (k, v) => c.set(k, v) }
-              it.map { rel =>
-                rel -> (try footerStatsOfFile(c,
-                    new Path(stagedStr, rel), kinds)
-                  catch {
-                    case scala.util.control.NonFatal(_) => None
-                  })
-              }
-            }.collect().toSeq
-        }
-      if (perFile.exists(_._2.isEmpty)) return None
-      val out = perFile.sortBy(_._1).flatMap { case (rel, sts) =>
-        sts.get.map { case (c, cs) =>
+      val perFile = footerLane(spark, fs, staged, rels, Some(head))(
+        footerStatsOf(_, kinds))
+      if (rels.exists(r => perFile.get(r).forall(_.isEmpty))) return None
+      val out = rels.flatMap { rel =>
+        perFile(rel).get.map { case (c, cs) =>
           statsLine(relToTarget(rel), c, cs)
         }
       }
       println(s"METRIC graft.stats.footer_path=1 " +
         s"files=${rels.length} cols=${statsCols.length} mode=" +
-        (if (rels.length <= driverCap) "driver"
+        (if (rels.length - 1 <= footerDriverCap(fs)) "driver"
          else "distributed"))
       Some(out)
     } catch { case scala.util.control.NonFatal(_) => None }
@@ -6317,8 +6392,11 @@ object ManifestSink extends Ingest.DestinationSink {
 
   private def statsLinesFor(spark: SparkSession, fs: FileSystem,
       staged: Path, relToTarget: Map[String, String],
-      statsCols: Seq[String]): Seq[String] = {
-    footerStatsLines(spark, fs, staged, relToTarget, statsCols) match {
+      statsCols: Seq[String],
+      first: Option[org.apache.parquet.hadoop.metadata.ParquetMetadata] =
+        None): Seq[String] = {
+    footerStatsLines(spark, fs, staged, relToTarget, statsCols,
+        first) match {
       case Some(lines) => return lines
       case None => ()
     }
@@ -6404,6 +6482,15 @@ object ManifestSink extends Ingest.DestinationSink {
         case None => fsizeLinesForNew(fs, dest, Seq(t)).headOption
       }
     }
+    // row counts the same way: carried, else the count the caller's
+    // stats lines recorded for a rewritten file, else its footer
+    val knownRows = fileRowsOf(fs, old) ++ rowsOfStatsLines(statsLines)
+    val nrowsLines: Seq[String] = survivors.flatMap { t =>
+      knownRows.get(t).orElse(
+        try Some(footerRowCount(fs.getConf, new Path(dest, t)))
+        catch { case scala.util.control.NonFatal(_) => None })
+        .map(nrowsLine(t, _))
+    }
     // ONE canonical schema line for the snapshot (it REDEFINES state):
     // the CARRIED resolved schema is authoritative — a snapshot only
     // rearranges bytes or edits values, never widens the schema (a
@@ -6416,7 +6503,7 @@ object ManifestSink extends Ingest.DestinationSink {
       effectiveSchemaOf(fs, old).map(schemaLineOf).toSeq
     var curBase = baseVersion
     var curSurvivors = survivors
-    var curLines = statsLines ++ fsizeLines ++ schemaCarry
+    var curLines = statsLines ++ fsizeLines ++ nrowsLines ++ schemaCarry
     var attempts = 0
     while (attempts < 4) {
       attempts += 1
@@ -6933,14 +7020,10 @@ object ManifestSink extends Ingest.DestinationSink {
           throw e
       }
       val newTgts = moves.map(_._2).filterNot(_ == dvRel).toSeq
-      val schemaLn = newTgts.headOption.flatMap { t =>
-        try Some(schemaLineOf(
-          parquetFooterSchema(fs, new Path(dest, t))))
-        catch { case scala.util.control.NonFatal(_) => None }
-      }.toSeq
       val body = (Seq(s"writeid\t$writeId") ++
         newTgts.map("target\t" + _) ++ newStats ++
-        fsizeLinesForNew(fs, dest, newTgts) ++ schemaLn ++
+        newFileLines(fs, dest, newTgts,
+          rowsOfStatsLines(newStats.toSeq)) ++
         dvLines).mkString("\n")
       val lp = logPath(destPath)
       fs.mkdirs(lp)
@@ -7197,20 +7280,11 @@ object ManifestSink extends Ingest.DestinationSink {
     else statsAppend(df, destPath, partitionField, statsCols)
   }
 
-  /** METADATA-ONLY aggregates: COUNT(*), numeric MIN/MAX, and null
-    * counts answered purely from the manifest's per-file stats lines —
-    * ZERO scan tasks, the query a lakehouse answers before an executor
-    * spins up. Each returns None whenever any committed file lacks the
-    * needed stats (legacy lines with unknown counts, statsless appends,
-    * a column the file never recorded) — the caller falls back to a
-    * real scan; a wrong fast answer is never returned. MIN/MAX skip
-    * all-null files and return None if every file is all-null.
-    */
   /** DESCRIBE DETAIL (Delta's `DESCRIBE DETAIL`): one metadata row
     * summarizing the table's current state — version, file count,
     * total bytes (from the manifest `fsize` lines; one `getFileStatus`
-    * fallback per pre-fsize file), live row count when every file
-    * carries stats (dv tombstones subtracted, None-able like
+    * fallback per pre-fsize file), live row count from the recorded
+    * per-file counts (dv tombstones subtracted, None-able like
     * [[metadataCount]]), partition values present in the layout,
     * columns with skipping stats, columns with bloom filters, files
     * carrying live deletion vectors, and whether the change feed is
@@ -7281,9 +7355,7 @@ object ManifestSink extends Ingest.DestinationSink {
         .toDF("partition", "num_files", "num_rows")
     val mfs = resolvedLog(fs, destPath)
     val targets = effectiveTargetsOf(fs, mfs)
-    val stats = fileStatsOf(fs, mfs)
-    val rowsByFile = stats.toSeq.groupBy(_._1._1)
-      .view.mapValues(_.map(_._2.rows).filter(_ >= 0).headOption).toMap
+    val rowsByFile = fileRowsOf(fs, mfs)
     val dvRows: Map[String, Long] = effectiveDvsOf(fs, mfs)
       .map { case (t, es) => t -> es.map(_._2).sum }
     // the partition identity is the file's FULL directory prefix (all
@@ -7293,7 +7365,7 @@ object ManifestSink extends Ingest.DestinationSink {
       if (i < 0) "" else t.substring(0, i)
     }
     targets.groupBy(partOf).toSeq.sortBy(_._1).map { case (p, ts) =>
-      val per = ts.map(t => rowsByFile.getOrElse(t, None))
+      val per = ts.map(rowsByFile.get)
       val rows =
         if (per.exists(_.isEmpty)) None
         else Some(per.flatten.sum -
@@ -7302,28 +7374,25 @@ object ManifestSink extends Ingest.DestinationSink {
     }.toDF("partition", "num_files", "num_rows")
   }
 
+  /** METADATA-ONLY aggregates: COUNT(*) from the per-file row counts
+    * every commit records, numeric MIN/MAX and null counts from the
+    * stats lines — ZERO scan tasks, the query a lakehouse answers
+    * before an executor spins up. Each returns None whenever any
+    * committed file lacks what it needs (a legacy commit without
+    * counts, a column the file never recorded) — the caller falls back
+    * to a real scan; a wrong fast answer is never returned. MIN/MAX
+    * skip all-null files and return None if every file is all-null.
+    */
   def metadataCount(spark: SparkSession, destPath: String)
-      : Option[Long] = {
-    val dest = new Path(destPath)
-    val fs = fsOf(spark, dest)
-    if (!fs.exists(dest)) return Some(0L)
-    val mfs = resolvedLog(fs, destPath)
-    val targets = effectiveTargetsOf(fs, mfs)
-    if (targets.isEmpty) return Some(0L)
-    val stats = fileStatsOf(fs, mfs)
-    val rowsByFile = stats.toSeq.groupBy(_._1._1)
-      .view.mapValues(_.map(_._2.rows).filter(_ >= 0).headOption)
-    val per = targets.map(t => rowsByFile.getOrElse(t, None))
-    if (per.exists(_.isEmpty)) None
-    else {
-      // deletion-vector rows subtract EXACTLY: the write path only
-      // records positions live at write time, so counts are disjoint
-      val dvRows = effectiveDvsOf(fs, mfs)
-        .filter { case (t, _) => targets.contains(t) }
-        .values.flatten.map(_._2).sum
-      Some(per.flatten.sum - dvRows)
-    }
-  }
+      : Option[Long] =
+    snapshotHandle(spark, destPath).liveRows
+
+  /** The live row count: from the log ([[metadataCount]]) when every
+    * file records one, a scan only for legacy files that do not.
+    */
+  override def rowCount(spark: SparkSession, destPath: String): Long =
+    metadataCount(spark, destPath)
+      .getOrElse(readBack(spark, destPath).count())
 
   /** Numeric (min, max) of `column` from stats alone; see
     * [[metadataCount]] for the None contract.
@@ -7497,7 +7566,7 @@ object ManifestSink extends Ingest.DestinationSink {
         // the sidecar stays under PHYSICAL names (like data files);
         // the feed reader surfaces logical
         val rdPre =
-          logSchemaReader(spark, logReadSchema(spark, destPath, None))
+          logSchemaReader(spark, logReadSchema(spark, destPath))
         val pre = rdPre
           .option("basePath", destPath)
           .parquet(dropped.toSeq.sorted
@@ -7730,15 +7799,21 @@ object ManifestSink extends Ingest.DestinationSink {
       val (len, mtime) = sizeOfRel(rel)
       fsizeLine(tgt, len, mtime)
     }
-    // the commit's FILE schema rides the manifest too (one staged
-    // footer read at write time — a single write job produces one
-    // schema), so readers resolve the table schema from the LOG
-    // instead of a mergeSchema footer sweep over every committed file
-    val schemaLine: Seq[String] = staged.headOption.flatMap { rel =>
-      try {
-        val st = parquetFooterSchema(fs, new Path(staging, rel))
-        Some("schemaj\t" + b64(st.json))
-      } catch { case scala.util.control.NonFatal(_) => None }
+    // the commit's FILE schema and every file's ROW COUNT ride the
+    // manifest too, so readers resolve the table schema and its count
+    // from the LOG instead of a footer sweep or a scan. Each staged
+    // footer opens at most once: the first gives the schema (a single
+    // write job produces one schema) and seeds the stats lane, whose
+    // stats lines carry the counts; without stats a footer lane reads
+    // them.
+    val conf = fs.getConf
+    val firstFooter = staged.headOption.flatMap { rel =>
+      try Some(readFooter(conf, new Path(staging, rel)))
+      catch { case scala.util.control.NonFatal(_) => None }
+    }
+    val schemaLine: Seq[String] = firstFooter.flatMap { md =>
+      try Some(schemaLineOf(footerSchemaOf(md, conf)))
+      catch { case scala.util.control.NonFatal(_) => None }
     }.toSeq
     // optional per-file typed stats for [[readBackWherePred]]'s metadata
     // pruning — ONE distributed job over the staged files, keyed back to
@@ -7746,7 +7821,19 @@ object ManifestSink extends Ingest.DestinationSink {
     // partition column lives in the directory name, not the file)
     val statsLines: Seq[String] =
       if (statsCols.isEmpty) Nil
-      else statsLinesFor(spark, fs, staging, targets.toMap, statsCols)
+      else statsLinesFor(spark, fs, staging, targets.toMap, statsCols,
+        firstFooter)
+    val rowsOfTarget: Map[String, Long] =
+      if (statsCols.nonEmpty) rowsOfStatsLines(statsLines)
+      else {
+        val byRel = footerLane(spark, fs, staging, staged, firstFooter)(
+          footerRows)
+        targets.flatMap { case (rel, t) => byRel.get(rel).map(t -> _) }
+          .toMap
+      }
+    val nrowsLines: Seq[String] = targets.flatMap { case (_, t) =>
+      rowsOfTarget.get(t).map(nrowsLine(t, _))
+    }
     // bloom filters build EXECUTOR-SIDE and land in a per-commit
     // sidecar; the manifest carries slim pointer lines. The sidecar
     // part stages here and moves with the data files; the `sidecar`
@@ -7768,7 +7855,7 @@ object ManifestSink extends Ingest.DestinationSink {
       snapshotBase.map(_ => "snapshot\t1").toSeq ++
       sourceUris.map("uri\t" + _) ++
       targets.map { case (_, t) => "target\t" + t } ++
-      statsLines ++ fsizeLines ++ schemaLine ++ bloomLines ++
+      statsLines ++ fsizeLines ++ nrowsLines ++ schemaLine ++ bloomLines ++
       bloomPart.map(_ => s"sidecar\t$bloomRel").toSeq).mkString("\n")
     writeFile(fs, new Path(staging, WaManifest), body)
     phase("wa_manifest")

@@ -15,15 +15,18 @@ import org.apache.spark.sql.types._
   * BucketToBigQuery.js:361–365): callers append to the ledger only AFTER the
   * destination write action returns.
   *
-  * Scale posture: the ledger is a plain parquet table; appends are file-
-  * granular and the anti-join re-dedups duplicate ledger rows exactly like
-  * the reference's `SELECT DISTINCT uri` (BucketToBigQuery.js:386), so
-  * non-transactional parquet appends are safe at file granularity. The
-  * anti-join carries NO broadcast hint: the ledger grows without bound, and
-  * a LEFT ANTI join can only broadcast its right (ledger) side — forcing
-  * that would ship the whole ledger to every task forever. Size stats + AQE
-  * broadcast it only while it is genuinely small, then fall back to a
-  * shuffled join keyed on uri.
+  * Scale posture: the ledger is a plain parquet table, one file per
+  * loaded batch. Planning never joins against it: [[filterNew]] scans
+  * only its `uri` column with the candidate set pushed into the scan as
+  * an `InSet` filter (parquet skips row groups whose min/max cannot hold
+  * a candidate) and collects the matches — no shuffle, and the collected
+  * rows are bounded by the candidates that were already imported, not
+  * by the ledger's size. Duplicate ledger rows (non-transactional
+  * appends) only repeat a match, so the answer is the reference's
+  * `SELECT DISTINCT uri … WHERE uri IN (…)` (BucketToBigQuery.js:386).
+  * [[newFiles]] keeps the relational anti-join for frame-shaped
+  * callers; it carries NO broadcast hint (a LEFT ANTI join can only
+  * broadcast the ever-growing ledger side), so size stats + AQE decide.
   */
 object Ledger {
 
@@ -43,8 +46,8 @@ object Ledger {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** Distinct URIs already imported (reference's ledger query,
-    * BucketToBigQuery.js:384–388, sans the IN-list — the join below does
-    * the restriction relationally instead of via string-built SQL).
+    * BucketToBigQuery.js:384–388, sans the IN-list — [[filterNew]]
+    * pushes that into the scan instead of building SQL strings).
     */
   def importedUris(spark: SparkSession, ledgerPath: String): DataFrame =
     read(spark, ledgerPath).select("uri").distinct()
@@ -56,20 +59,29 @@ object Ledger {
   def newFiles(candidates: DataFrame, ledger: DataFrame): DataFrame =
     candidates.join(ledger.select("uri").distinct(), Seq("uri"), "left_anti")
 
-  /** Driver-side convenience for planning: which of these file URIs are new. */
+  /** Which of these file URIs are new, in caller order (duplicates
+    * kept, like [[newFiles]]): one scan of the ledger's `uri` column
+    * with the distinct candidates pushed down as an `InSet` filter, the
+    * already-imported matches collected to the driver.
+    */
   def filterNew(
       spark: SparkSession, ledgerPath: String,
       candidates: Seq[String]): Seq[String] = {
     if (candidates.isEmpty) return Nil
     if (!exists(spark, ledgerPath)) return candidates
-    import spark.implicits._
-    val cand = candidates.toDF("uri")
-    val nf = newFiles(cand, read(spark, ledgerPath))
-      .as[String].collect().toSet
-    candidates.filter(nf) // preserve caller order
+    import org.apache.spark.sql.catalyst.expressions.InSet
+    import org.apache.spark.sql.graftbridge.Bridge
+    import org.apache.spark.unsafe.types.UTF8String
+    val uri = col("uri")
+    val probe = InSet(Bridge.expression(uri),
+      candidates.distinct.map(UTF8String.fromString).toSet[Any])
+    val imported = read(spark, ledgerPath).select(uri)
+      .where(Bridge.column(probe))
+      .collect().map(_.getString(0)).toSet
+    candidates.filterNot(imported)
   }
 
-  /** Append one row per loaded URI, stamped now (S5,
+  /** Append one row per loaded URI, stamped now, as one file (S5,
     * BucketToBigQuery.js:390–397). Call only after the destination write
     * succeeds.
     */
@@ -79,6 +91,7 @@ object Ledger {
     import spark.implicits._
     uris.toDF("uri")
       .select(current_timestamp().as("imported_at"), col("uri"))
+      .coalesce(1) // one ledger file per batch
       .write.mode("append").parquet(ledgerPath)
   }
 }

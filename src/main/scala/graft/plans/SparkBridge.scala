@@ -42,6 +42,14 @@ object Bridge {
       ds.queryExecution.toRdd, data.schema, isStreaming = false)
   }
 
+  /** Block until every listener event posted so far has been delivered
+    * (`listenerBus` is `private[spark]`) — lets a caller read a
+    * listener's counts right after an action without sleeping.
+    */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession,
+      timeoutMs: Long = 60000L): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
+
   /** Register a function builder into a live session's registry (the
     * public path is SparkSessionExtensions, which only applies at session
     * build time; this covers sessions the library did not create).

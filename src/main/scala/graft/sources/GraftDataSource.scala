@@ -178,10 +178,10 @@ class GraftDataSource extends RelationProvider
 
 object GraftDataSource {
 
-  /** Build the committed-snapshot relation: resolve schemas from the
-    * committed files' footers (mergeSchema — the prefix/superset
-    * evolution contract), derive the partition layout from the target
-    * paths, and pick the file format by dv presence.
+  /** Build the committed-snapshot relation every table read plans
+    * (`format("graft")` and [[ManifestSink.readBack]]/`readVersion`/
+    * `readAsOf`): schema from the log, partition layout from the target
+    * paths, file format by dv presence and column mapping.
     */
   private[graft] def relationFor(spark: SparkSession,
       handle: ManifestSink.SnapshotHandle): BaseRelation = {
@@ -236,16 +236,15 @@ final class GraftFileIndex(spark: SparkSession,
   private val fs = destPath.getFileSystem(
     spark.sparkContext.hadoopConfiguration)
 
-  /** (relative target, FileStatus, partition segment values by column).
-    * Statuses come from the manifest's recorded per-file sizes — the
-    * log IS the metadata, so building the index costs ZERO stat RPCs
-    * for files committed with `fsize` lines (at 100k files on an
-    * object store, the difference between a log read and minutes of
-    * driver HEAD calls). Pre-fsize files fall back to one
-    * getFileStatus each; the snapshot is immutable either way, so no
-    * re-listing per query.
+  /** (relative target, FileStatus, relative directory). Statuses come
+    * from the manifest's recorded per-file sizes — the log IS the
+    * metadata, so building the index costs ZERO stat RPCs for files
+    * committed with `fsize` lines (at 100k files on an object store,
+    * the difference between a log read and minutes of driver HEAD
+    * calls). Pre-fsize files fall back to one getFileStatus each; the
+    * snapshot is immutable either way, so no re-listing per query.
     */
-  private val entries: Seq[(String, FileStatus, Map[String, String])] = {
+  private val entries: Seq[(String, FileStatus, String)] = {
     val sizes = handle.sizes
     val blockSize = fs.getDefaultBlockSize(destPath)
     // pre-fsize files (legacy logs) fall back to the filesystem — ONE
@@ -259,10 +258,7 @@ final class GraftFileIndex(spark: SparkSession,
         if (missing.length > 1)
           println(s"METRIC graft.fileindex.legacy_stat_files=" +
             s"${missing.length} dest=${handle.destPath}")
-        missing.map { rel =>
-          val i = rel.lastIndexOf('/')
-          if (i < 0) "" else rel.substring(0, i)
-        }.distinct.flatMap { dir =>
+        missing.map(dirOf).distinct.flatMap { dir =>
           val d = if (dir.isEmpty) destPath else new Path(destPath, dir)
           val prefix = if (dir.isEmpty) "" else dir + "/"
           try fs.listStatus(d).toSeq
@@ -278,64 +274,54 @@ final class GraftFileIndex(spark: SparkSession,
           new FileStatus(len, false, 1, blockSize, mtime, p)
         case None => listed.getOrElse(rel, fs.getFileStatus(p))
       }
-      // hive-UNESCAPE the directory value (a generic partition value
-      // like "a:b" lands as "a%3Ab"; the derived date/hour values
-      // never escape, so this is the identity for them) — Spark's own
-      // partition discovery does the same
-      val parts = rel.split('/').init.collect {
-        case seg if seg.contains('=') =>
-          val i = seg.indexOf('=')
-          seg.substring(0, i) ->
-            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-              .unescapePathName(seg.substring(i + 1))
-      }.toMap
-      (rel, st, parts)
+      (rel, st, dirOf(rel))
     }
   }
 
-  /** Partition columns in first-seen order; DateType when every value
-    * parses as an ISO date (the sink's `to_date` layout), StringType
-    * otherwise. `__HIVE_DEFAULT_PARTITION__` is the null marker.
-    */
-  override val partitionSchema: StructType = {
-    val cols = entries.flatMap(_._3.keys).distinct
-    StructType(cols.map { c =>
-      val vals = entries.flatMap(_._3.get(c))
-        .filterNot(_ == "__HIVE_DEFAULT_PARTITION__")
-      // type like Spark's own partition-value inference: int before
-      // long before date before string — so the p_hour level (and
-      // shard dirs) read the SAME type through this index and through
-      // plain spark.read.parquet, and an int-range overflow (a shard
-      // value beyond 2^31) widens to long instead of failing at
-      // lookup time
-      val isInt = vals.nonEmpty && vals.forall(v =>
-        scala.util.Try(v.toInt).isSuccess)
-      val isLong = !isInt && vals.nonEmpty && vals.forall(v =>
-        scala.util.Try(v.toLong).isSuccess)
-      val isDate = !isInt && !isLong && vals.nonEmpty &&
-        vals.forall(v =>
-          scala.util.Try(java.time.LocalDate.parse(v)).isSuccess)
-      StructField(c,
-        if (isInt) IntegerType
-        else if (isLong) LongType
-        else if (isDate) DateType else StringType,
-        nullable = true)
-    })
+  private def dirOf(rel: String): String = {
+    val i = rel.lastIndexOf('/')
+    if (i < 0) "" else rel.substring(0, i)
   }
 
-  private def partitionRow(parts: Map[String, String]): InternalRow =
-    InternalRow.fromSeq(partitionSchema.map { f =>
-      parts.get(f.name) match {
-        case None | Some("__HIVE_DEFAULT_PARTITION__") => null
-        case Some(v) => f.dataType match {
-          case DateType =>
-            java.time.LocalDate.parse(v).toEpochDay.toInt
-          case IntegerType => v.toInt
-          case LongType    => v.toLong
-          case _ => UTF8String.fromString(v)
-        }
-      }
-    })
+  /** Partition columns and each directory's typed values, inferred by
+    * Spark's own partition discovery over the committed directories
+    * (no listing): the types a `spark.read.parquet` of these files with
+    * `basePath` infers, under the same session conf. Each column infers
+    * over its own distinct values, so a directory lacking a level (a
+    * table that gained `p_hour` later, or files at the root) reads null
+    * there instead of failing Spark's one-layout check.
+    */
+  private val (inferredSchema: StructType,
+      valuesOfDir: Map[String, InternalRow]) = {
+    val base = fs.makeQualified(destPath)
+    val dirs = entries.map(_._3).distinct
+    val segs: Map[String, Map[String, String]] = dirs.map { d =>
+      d -> d.split('/').collect {
+        case seg if seg.contains('=') =>
+          val i = seg.indexOf('=')
+          seg.substring(0, i) -> seg.substring(i + 1)
+      }.toMap
+    }.toMap
+    val cols = dirs.flatMap(_.split('/').filter(_.contains('='))
+      .map(seg => seg.substring(0, seg.indexOf('=')))).distinct
+    val typed: Seq[(StructField, Map[String, Any])] = cols.map { c =>
+      val raw = dirs.flatMap(segs(_).get(c)).distinct
+      val spec = org.apache.spark.sql.execution.datasources.graftbridge
+        .PartitionBridge.parse(spark, base,
+          raw.map(v => new Path(base, s"$c=$v")))
+      val f = spec.partitionColumns.head
+      val byPath = spec.partitions.map(p => p.path -> p.values).toMap
+      (f.copy(nullable = true), raw.map(v =>
+        v -> byPath(new Path(base, s"$c=$v")).get(0, f.dataType)).toMap)
+    }
+    (StructType(typed.map(_._1)), dirs.map { d =>
+      d -> InternalRow.fromSeq(cols.zip(typed).map { case (c, (_, vs)) =>
+        segs(d).get(c).map(vs).orNull
+      })
+    }.toMap)
+  }
+
+  override val partitionSchema: StructType = inferredSchema
 
   override def rootPaths: Seq[Path] = Seq(destPath)
 
@@ -360,8 +346,8 @@ final class GraftFileIndex(spark: SparkSession,
     val grouped = entries
       .filter { case (rel, _, _) => kept.contains(rel) }
       .groupBy(_._3)
-    val dirs = grouped.toSeq.flatMap { case (parts, es) =>
-      val row = partitionRow(parts)
+    val dirs = grouped.toSeq.flatMap { case (dir, es) =>
+      val row = valuesOfDir(dir)
       if (bound.forall(_.eval(row)))
         Some(PartitionDirectory(row,
           es.map(e => FileStatusWithMetadata(e._2))))
@@ -374,7 +360,7 @@ final class GraftFileIndex(spark: SparkSession,
   }
 
   override def inputFiles: Array[String] =
-    entries.map(e => new Path(destPath, e._1).toString).toArray
+    entries.map(_._2.getPath.toString).toArray // qualified, like Spark's
 
   override def refresh(): Unit = () // snapshot semantics: immutable cut
 

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ingest.Ingest
+import graft.ingest.{Ingest, ManifestSink, NotificationIngest}
 import graft.ledger.Ledger
 import graft.model.Manifest
 
@@ -543,5 +543,140 @@ class IngestSpec extends SparkSpec {
     intercept[graft.schema.SchemaEvolution.SchemaMismatchException] {
       Ingest.loadTask(spark, task, root, s"$root/wh")
     }
+  }
+
+  private def writeCsv(dir: String, name: String, body: String): Unit = {
+    new java.io.File(dir).mkdirs()
+    val w = new java.io.PrintWriter(new java.io.File(dir, name))
+    try w.write(body) finally w.close()
+  }
+
+  test("ledger probe: filterNew equals the newFiles anti-join — " +
+      "duplicate candidates, duplicate ledger rows, re-landed URIs, an " +
+      "absent ledger — and a 20k-URI listing probe") {
+    import spark.implicits._
+    val root = tmpDir("ledger_probe_")
+    val ledger = s"$root/wh/ds/t_imported"
+    def antiJoin(cands: Seq[String]): Seq[String] =
+      Ledger.newFiles(cands.toDF("uri"), Ledger.read(spark, ledger))
+        .as[String].collect().toSeq.sorted
+    def parity(cands: Seq[String]): Seq[String] = {
+      val probed = Ledger.filterNew(spark, ledger, cands)
+      assert(probed.sorted == antiJoin(cands), s"candidates $cands")
+      assert(probed == cands.filter(probed.toSet), "caller order kept")
+      probed
+    }
+    // absent ledger: everything is new, duplicates kept
+    assert(parity(Seq("u1", "u2", "u2")) == Seq("u1", "u2", "u2"))
+    // duplicate ledger rows: u1 ledgered by two batches
+    Ledger.markImported(spark, ledger, Seq("u1", "u3"))
+    Ledger.markImported(spark, ledger, Seq("u1"))
+    assert(new java.io.File(ledger).listFiles()
+      .count(_.getName.endsWith(".parquet")) == 2,
+      "one ledger file per batch")
+    // duplicate candidates and a re-landed (already ledgered) URI
+    assert(parity(Seq("u3", "u2", "u1", "u2", "u4")) ==
+      Seq("u2", "u2", "u4"))
+    assert(parity(Seq("u1", "u3")).isEmpty)
+    // the listing path: 20k candidates against a ledger holding half
+    val many = (0 until 20000).map(i => f"gs://b/in/$i%06d.csv")
+    Ledger.markImported(spark, ledger, many.filter(_.hashCode % 2 == 0))
+    val t0 = System.nanoTime()
+    val fresh = Ledger.filterNew(spark, ledger, many)
+    val ms = (System.nanoTime() - t0) / 1e6
+    println(f"METRIC graft.ledger.probe_ms=$ms%.0f candidates=20000")
+    assert(fresh == many.filter(_.hashCode % 2 != 0))
+    assert(fresh.sorted == antiJoin(many))
+  }
+
+  test("planning a ManifestSink destination ignores stray files: an " +
+      "uncommitted parquet file with an extra column leaves the plan " +
+      "schema equal to the log schema") {
+    import spark.implicits._
+    val root = tmpDir("ingest_stray_")
+    writeCsv(s"$root/in", "a.csv", "timestamp,utc_offset,location\n" +
+      "2026-01-01 00:00:00,1.0,x\n")
+    val task = Manifest.parse(manifestJson).tasks.head
+    val r1 = Ingest.loadTask(spark, task, root, s"$root/wh",
+      ManifestSink)
+    val logSchema = ManifestSink.snapshotHandle(spark, r1.destPath)
+      .dataSchema
+    // a stray writer drops a wider file into the table directory, in
+    // the earliest partition — the footer a directory-listing schema
+    // inference reads first
+    Seq(("2026-01-01 00:00:00", 1.0f, "x", "boom"))
+      .toDF("timestamp", "utc_offset", "location", "phantom")
+      .write.parquet(s"${r1.destPath}/p_date=1999-01-01")
+    val planned = Ingest.destSchema(spark, r1.destPath).get
+    assert(planned.fieldNames.toSeq == logSchema.fieldNames.toSeq)
+    assert(!planned.fieldNames.contains("phantom"))
+    writeCsv(s"$root/in", "b.csv", "timestamp,utc_offset,location\n" +
+      "2026-01-02 00:00:00,1.0,y\n")
+    val plan = Ingest.planTask(spark, task, root, s"$root/wh")
+    assert(plan.schema.fieldNames.toSeq ==
+      Seq("timestamp", "utc_offset", "location"))
+  }
+
+  test("planning a column-mapped ManifestSink destination uses the " +
+      "logical names") {
+    val root = tmpDir("ingest_mapped_")
+    writeCsv(s"$root/in", "a.csv", "timestamp,utc_offset,location\n" +
+      "2026-01-01 00:00:00,1.0,x\n")
+    val task = Manifest.parse(manifestJson).tasks.head
+    val dest = Ingest.loadTask(spark, task, root, s"$root/wh",
+      ManifestSink).destPath
+    ManifestSink.renameColumn(spark, dest, "location", "site")
+    assert(Ingest.destSchema(spark, dest).get.fieldNames.toSeq ==
+      Seq("timestamp", "utc_offset", "site"))
+    // a file under the logical header plans and lands as `site`
+    writeCsv(s"$root/in", "b.csv", "timestamp,utc_offset,site\n" +
+      "2026-01-02 00:00:00,2.0,y\n")
+    val r2 = Ingest.loadTask(spark, task, root, s"$root/wh", ManifestSink)
+    assert(r2.schema.fieldNames.toSeq ==
+      Seq("timestamp", "utc_offset", "site"))
+    assert(r2.rows == 2L)
+    assert(ManifestSink.readBack(spark, dest).select("site")
+      .collect().map(_.getString(0)).sorted.toSeq == Seq("x", "y"))
+  }
+
+  test("one notification batch into a ManifestSink destination runs at " +
+      "most 5 Spark jobs, plan plus execute") {
+    import spark.implicits._
+    val root = tmpDir("ingest_jobs_")
+    val bucket = s"$root/in"
+    val task = Manifest.parse(manifestJson).tasks.head
+    def batch(name: String, seq: Long): Ingest.LoadResult = {
+      writeCsv(bucket, name, "timestamp,utc_offset,location\n" +
+        s"2026-01-0$seq 00:00:00,1.0,x\n2026-01-0$seq 01:00:00,1.0,y\n")
+      val json = s"""{"kind":"storage#object","selfLink":"$bucket/$name",""" +
+        s""""bucket":"$bucket","name":"$name"}"""
+      val notifs = Seq(("OBJECT_FINALIZE", json, seq))
+        .toDF("eventType", "json", "seq")
+        .withColumn("data", base64(col("json").cast("binary")))
+      val plan = NotificationIngest.planNotified(spark, task, notifs,
+        s"$root/wh", orderCols = Seq(col("seq")), scheme = "file://")
+      Ingest.executePlan(spark, plan, ManifestSink)
+    }
+    // steady state: the table and the ledger already exist
+    batch("a.csv", 1L)
+    val group = s"ingest-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "one notification batch")
+      val r = try batch("b.csv", 2L) finally sc.clearJobGroup()
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark)
+      assert(r.loadedFiles.length == 1 && r.rows == 4L)
+      println(s"METRIC graft.ingest.batch_jobs=${jobs.get()}")
+      assert(jobs.get() <= 5, s"${jobs.get()} jobs for one batch")
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -1797,17 +1797,19 @@ class ManifestSinkSpec extends SparkSpec {
     val h1 = ManifestSink.history(spark, dest).orderBy("version")
       .as[(Long, java.sql.Timestamp, String, Int, Option[Long])]
       .collect().toSeq
+    // every commit records its files' row counts (`nrows`), stats or
+    // not; a log without them reads null (the row-count spec)
     assert(h1.map(r => (r._1, r._3, r._4, r._5)) ==
-      Seq((0L, "append", 1, Some(3L)), (1L, "append", 1, None)))
+      Seq((0L, "append", 1, Some(3L)), (1L, "append", 1, Some(2L))))
     assert(h1(0)._2.getTime <= h1(1)._2.getTime)
     // a log compaction collapses history to one snapshot row covering
-    // the whole table; the statsless v1 file keeps n_rows unknowable
+    // the whole table, its counts carried
     ManifestSink.compact(spark, dest)
     val h2 = ManifestSink.history(spark, dest)
       .as[(Long, java.sql.Timestamp, String, Int, Option[Long])]
       .collect().toSeq
     assert(h2.map(r => (r._3, r._4, r._5)) ==
-      Seq(("snapshot", 2, None)))
+      Seq(("snapshot", 2, Some(5L))))
     // with stats on EVERY file, the snapshot's n_rows is exact
     val dest2 = s"$root/wh/t2"
     ManifestSink.statsAppend(Seq((1L, "a")).toDF("id", "v").coalesce(1),
@@ -2034,10 +2036,11 @@ class ManifestSinkSpec extends SparkSpec {
     assert(ManifestSink.metadataCount(spark, dest) == Some(302L))
     assert(ManifestSink.metadataMinMax(spark, dest, "id")
       == Some((0.0, 901.0)))
-    // one statsless append poisons every fast path to None
+    // one statsless append poisons the stats fast paths to None; its
+    // row count rides the log regardless
     ManifestSink.append(Seq((999L, Some(1.0)))
       .toDF("id", "v"), dest, None)
-    assert(ManifestSink.metadataCount(spark, dest).isEmpty)
+    assert(ManifestSink.metadataCount(spark, dest) == Some(303L))
     assert(ManifestSink.metadataMinMax(spark, dest, "id").isEmpty)
     assert(ManifestSink.metadataNullCount(spark, dest, "v").isEmpty)
   }
@@ -4231,5 +4234,131 @@ class ManifestSinkSpec extends SparkSpec {
     assert(spark.read.format("graft").load(dest)
       .schema.fieldNames.toSeq == Seq("id", "v"))
     assert(spark.read.format("graft").load(dest).count() == 20L)
+  }
+
+  test("nrows lines: every commit path records per-file row counts, so " +
+      "metadataCount, rowCount and history answer without a scan — " +
+      "carried through appends, ingest, merges, optimize, purge, " +
+      "checkpoints and restore, exact against the data") {
+    val dest = s"${tmpDir("nrows_")}/t"
+    def countsExact(): Unit = {
+      val h = ManifestSink.snapshotHandle(spark, dest)
+      val conf = spark.sessionState.newHadoopConf()
+      h.targets.foreach { t =>
+        assert(h.fileRows.get(t).contains(ManifestSink.footerRowCount(
+          conf, new org.apache.hadoop.fs.Path(s"$dest/$t"))),
+          s"$t records ${h.fileRows.get(t)}")
+      }
+      val scanned = ManifestSink.readBack(spark, dest).count()
+      assert(ManifestSink.metadataCount(spark, dest).contains(scanned))
+      assert(ManifestSink.rowCount(spark, dest) == scanned)
+    }
+    def lastHistoryRows(): Option[Long] =
+      ManifestSink.history(spark, dest).orderBy(col("version").desc)
+        .select("n_rows").as[Option[Long]].head()
+    // plain, stats, and ingest (staged, ledger-keyed) appends
+    ManifestSink.append(
+      (0L until 30L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(2),
+      dest, None)
+    assert(lastHistoryRows().contains(30L))
+    countsExact()
+    ManifestSink.statsAppend(
+      (30L until 80L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(3),
+      dest, None, Seq("id"))
+    countsExact()
+    ManifestSink.stagedAppend(
+      (80L until 90L).map(i => (i, s"v$i")).toDF("id", "v"), dest, None,
+      "ingest1", Seq("gs://b/f1"))
+    ManifestSink.finishCommit(spark, dest, "ingest1")
+    assert(lastHistoryRows().contains(10L))
+    countsExact()
+    // MOR merge: deletion vectors subtract, inserted files record
+    ManifestSink.mergeCdc(spark, dest,
+      Seq((10L, "up", "u"), (95L, "new", "u"), (11L, "x", "d"))
+        .toDF("id", "v", "op"),
+      "id", col("op") === "d", directiveCols = Seq("op"),
+      statsCols = Seq("id"), mor = true)
+    countsExact()
+    val versionBeforeOptimize = ManifestSink.snapshotHandle(spark, dest)
+      .version
+    // snapshot paths: optimize repack, then a purge after gutting
+    assert(ManifestSink.optimize(spark, dest, targetBytes = 1L << 30)
+      > 0L)
+    countsExact()
+    ManifestSink.deleteWhereMor(spark, dest, col("id").between(0, 40))
+    countsExact()
+    ManifestSink.purge(spark, dest, minLiveFraction = 0.99)
+    countsExact()
+    ManifestSink.checkpoint(spark, dest)
+    countsExact()
+    ManifestSink.restore(spark, dest, versionBeforeOptimize)
+    countsExact()
+    assert(ManifestSink.readBack(spark, dest).count() == 90L)
+
+    // a legacy log without `nrows` lines answers None (and rowCount
+    // falls back to a scan); history reads null
+    val legacy = s"${tmpDir("nrows_legacy_")}/t"
+    ManifestSink.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v"),
+      legacy, None)
+    ManifestSink.append(Seq((3L, "c")).toDF("id", "v"), legacy, None)
+    new java.io.File(s"$legacy/_log").listFiles()
+      .filter(_.getName.endsWith(".manifest")).foreach { mf =>
+        val kept = new java.util.ArrayList[String]()
+        java.nio.file.Files.readAllLines(mf.toPath)
+          .forEach(l => if (!l.startsWith("nrows\t")) kept.add(l))
+        java.nio.file.Files.write(mf.toPath, kept)
+      }
+    ManifestSink.invalidateMfCache()
+    assert(ManifestSink.metadataCount(spark, legacy).isEmpty)
+    assert(ManifestSink.rowCount(spark, legacy) == 3L)
+    assert(ManifestSink.history(spark, legacy).select("n_rows")
+      .as[Option[Long]].collect().forall(_.isEmpty))
+  }
+
+  test("readBack plans through the SQL relation with Spark's partition " +
+      "types: generic, date, hour and null partitions read the same " +
+      "schema and rows as a basePath parquet read of the committed " +
+      "files") {
+    val root = tmpDir("partinfer_")
+    val ts = (i: Long) =>
+      new java.sql.Timestamp(1767225600000L + i * 5400000L) // +1.5 h
+    def sameAsParquet(dest: String): Unit = {
+      val files = ManifestSink.snapshotHandle(spark, dest).targets
+        .map(t => s"$dest/$t")
+      val viaParquet = spark.read.option("basePath", dest).parquet(files: _*)
+      def shape(df: org.apache.spark.sql.DataFrame) =
+        df.schema.map(f => (f.name, f.dataType))
+      val back = ManifestSink.readBack(spark, dest)
+      assert(shape(back) == shape(viaParquet), dest)
+      assert(shape(spark.read.format("graft").load(dest)) ==
+        shape(viaParquet), dest)
+      val cols = viaParquet.columns.map(col)
+      assert(back.select(cols: _*).orderBy("id").collect().toSeq ==
+        viaParquet.select(cols: _*).orderBy("id").collect().toSeq, dest)
+    }
+    // generic values that infer as DOUBLE, plus a null partition
+    val generic = s"$root/generic"
+    ManifestSink.append(
+      Seq((1L, Some("1.5")), (2L, Some("2.25")), (3L, None))
+        .toDF("id", "g"), generic, Some("val(g)"))
+    assert(ManifestSink.readBack(spark, generic).schema("g").dataType ==
+      org.apache.spark.sql.types.DoubleType)
+    sameAsParquet(generic)
+    // derived date and date/hour layouts
+    val rows = (0L until 20L).map(i => (i, ts(i)))
+    val day = s"$root/day"
+    ManifestSink.append(rows.toDF("id", "ts"), day, Some("ts"))
+    sameAsParquet(day)
+    val hourly = s"$root/hour"
+    ManifestSink.append(rows.toDF("id", "ts"), hourly, Some("ts/hour()"))
+    assert(ManifestSink.readBack(spark, hourly).schema("p_hour").dataType
+      == org.apache.spark.sql.types.IntegerType)
+    sameAsParquet(hourly)
+    // the session's inference switch applies to the log-built index too
+    spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled",
+      "false")
+    try sameAsParquet(generic)
+    finally spark.conf.unset(
+      "spark.sql.sources.partitionColumnTypeInference.enabled")
   }
 }
