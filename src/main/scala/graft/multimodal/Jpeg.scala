@@ -1,20 +1,14 @@
 package graft.multimodal
 
-/** Pure-JVM JPEG codec (ITU T.81): baseline sequential DCT (SOF0) and
-  * progressive (SOF2, Annex G — spectral selection + successive
-  * approximation), 8-bit grayscale or interleaved YCbCr color (JFIF
-  * matrix) with 4:4:4, 4:2:2 and 4:2:0 subsampling and DRI/RSTn
-  * restart intervals. Lossless/arithmetic/hierarchical frames return
-  * None (callers fall back to the header probe + stub), which keeps
-  * every shipped claim honest: what decodes, decodes for real —
-  * markers, canonical Huffman tables, per-component differential DC,
-  * AC run-length, EOB runs, refinement bits, zigzag, dequantization
-  * and the full 2-D IDCT.
-  *
-  * The IDCT is the SEPARABLE factored form over a precomputed
-  * scaled-cosine basis (two 8-term passes per output, no trig in the
-  * loop, all-zero coefficient rows skipped); the AAN butterfly would cut
-  * the multiply count further without touching anything else here.
+/** JPEG (ITU T.81) planting encoder: baseline sequential (SOF0) and
+  * progressive (SOF2) files with KNOWN pixel content for tests and oracle
+  * queries — 8-bit grayscale or interleaved YCbCr (4:4:4, or 4:2:0 for
+  * baseline), optional DRI/RSTn restart intervals, canonical Huffman
+  * tables, differential DC, and for progressive files the Annex-G DC
+  * first/refinement and AC first/refinement scans with EOB runs. Planted
+  * coefficients are quant multiples, so a conforming decoder reproduces
+  * the planted pixels exactly. Decoding goes through the JDK's reader
+  * ([[Multimodal.decodeImage]]).
   */
 object Jpeg {
 
@@ -29,723 +23,17 @@ object Jpeg {
     58, 59, 52, 45, 38, 31, 39, 46,
     53, 60, 61, 54, 47, 55, 62, 63)
 
-  /** Canonical Huffman table (T.81 Annex C): 16 length counts + symbols
-    * in code order.
-    */
-  private final class HuffTable(counts: Array[Int], symbols: Array[Int]) {
-    val minCode = new Array[Int](17)
-    val maxCode = new Array[Int](17) // -1 = no codes at this length
-    val valPtr = new Array[Int](17)
-    locally {
-      var code = 0
-      var k = 0
-      var l = 1
-      while (l <= 16) {
-        if (counts(l - 1) == 0) { maxCode(l) = -1 }
-        else {
-          valPtr(l) = k
-          minCode(l) = code
-          code += counts(l - 1); k += counts(l - 1)
-          maxCode(l) = code - 1
-        }
-        code <<= 1
-        l += 1
-      }
-    }
-    def symbol(length: Int, code: Int): Int =
-      symbols(valPtr(length) + code - minCode(length))
-  }
-
-  /** MSB-first entropy-coded-segment reader with 0xFF00 unstuffing. */
-  private final class BitReader(d: Array[Byte], var pos: Int) {
-    private var acc = 0
-    private var nBits = 0
-    var bad = false
-    def nextBit(): Int = {
-      if (nBits == 0) {
-        if (pos >= d.length) { bad = true; return 0 }
-        var b = d(pos) & 0xff; pos += 1
-        if (b == 0xff) {
-          if (pos >= d.length) { bad = true; return 0 }
-          val m = d(pos) & 0xff
-          if (m == 0x00) pos += 1 // stuffed literal FF
-          else { bad = true; return 0 } // a real marker: scan ended early
-        }
-        acc = b; nBits = 8
-      }
-      nBits -= 1
-      (acc >> nBits) & 1
-    }
-    def receive(n: Int): Int = {
-      var v = 0; var i = 0
-      while (i < n) { v = (v << 1) | nextBit(); i += 1 }
-      v
-    }
-    def decode(t: HuffTable): Int = {
-      var code = nextBit()
-      var l = 1
-      while (l <= 16) {
-        if (t.maxCode(l) >= 0 && code <= t.maxCode(l) &&
-            code >= t.minCode(l))
-          return t.symbol(l, code)
-        code = (code << 1) | nextBit()
-        l += 1
-      }
-      bad = true; 0
-    }
-    /** Byte-align and consume the next restart marker, scanning past pad
-      * bytes (incl. a stuffed FF00 the 1-bit padding can produce).
-      * Returns the marker's low nibble (0-7), or -1 on anything else.
-      */
-    def restartMarker(): Int = {
-      nBits = 0 // discard pad bits
-      while (pos + 1 < d.length) {
-        val b = d(pos) & 0xff
-        if (b != 0xff) { pos += 1 } // pad byte
-        else {
-          val m = d(pos + 1) & 0xff
-          if (m == 0x00) pos += 2 // stuffed FF pad
-          else if (m >= 0xd0 && m <= 0xd7) { pos += 2; return m - 0xd0 }
-          else return -1
-        }
-      }
-      -1
-    }
-  }
-
-  /** T.81 F.2.2.1 EXTEND: map the s received bits to the signed value. */
-  private def extend(v: Int, s: Int): Int =
-    if (s == 0) 0 else if (v < (1 << (s - 1))) v - (1 << s) + 1 else v
-
-  /** Decode a baseline grayscale JPEG to `(width, height, pixels)`. */
+  /** Decode a grayscale JPEG to `(width, height, pixels)`. */
   def decodeGray(p: Array[Byte]): Option[(Int, Int, Array[Byte])] =
     decode(p).collect { case (w, h, 1, px) => (w, h, px) }
 
-  /** Decode a baseline JPEG to `(width, height, channels, pixels)` —
-    * grayscale (1 ch) or interleaved YCbCr color (3 ch, converted to RGB
-    * with the JFIF matrix). Sampling factors 1 and 2 are supported per
-    * component, which covers the layouts that exist in practice — 4:4:4,
-    * 4:2:0 (the dominant one: luma 2x2, chroma 1x1 per MCU) and 4:2:2 —
-    * with chroma upsampled by sample replication. Restart intervals
-    * (DRI/RSTn) are consumed with per-marker DC reset. Progressive
-    * (SOF2) files route through [[decodeProgressive]]'s Annex-G
-    * multi-scan path.
+  /** Decode a baseline or progressive JPEG ([[Multimodal.decodeImage]]
+    * restricted to JPEG) to `(width, height, channels, pixels)` —
+    * grayscale (1 ch) or YCbCr converted to RGB (3 ch).
     */
-  def decode(p: Array[Byte]): Option[(Int, Int, Int, Array[Byte])] = {
-    def u8(i: Int) = p(i) & 0xff
-    def be16(i: Int) = (u8(i) << 8) | u8(i + 1)
-    if (p.length < 4 || u8(0) != 0xff || u8(1) != 0xd8) return None
-    var i = 2
-    val qt = new Array[Array[Int]](4)
-    val dcT = new Array[HuffTable](4)
-    val acT = new Array[HuffTable](4)
-    var w = 0; var h = 0; var ncomp = 0
-    var compQ: Array[Int] = null  // per-component quant selector
-    var compH: Array[Int] = null  // per-component sampling factors
-    var compV: Array[Int] = null
-    var compId: Array[Int] = null // per-component id (SOF order)
-    var scanDc: Array[Int] = null // per-component table ids (SOF order)
-    var scanAc: Array[Int] = null
-    var scanStart = -1
-    var restartInterval = 0
-    while (scanStart < 0) {
-      if (i + 4 > p.length || u8(i) != 0xff) return None
-      val m = u8(i + 1)
-      val len = be16(i + 2)
-      if (len < 2 || i + 2 + len > p.length) return None
-      val seg = i + 4
-      val segEnd = i + 2 + len
-      m match {
-        case 0xdb => // DQT: one or more tables
-          var j = seg
-          while (j < segEnd) {
-            val pq = u8(j) >> 4; val tq = u8(j) & 15
-            if (pq != 0 || tq > 3 || j + 65 > segEnd) return None
-            val t = new Array[Int](64)
-            var k = 0
-            while (k < 64) { t(ZigZag(k)) = u8(j + 1 + k); k += 1 }
-            qt(tq) = t
-            j += 65
-          }
-        case 0xc4 => // DHT: one or more tables
-          var j = seg
-          while (j < segEnd) {
-            if (j + 17 > segEnd) return None
-            val tc = u8(j) >> 4; val th = u8(j) & 15
-            if (tc > 1 || th > 3) return None
-            val counts = Array.tabulate(16)(k => u8(j + 1 + k))
-            val n = counts.sum
-            if (n == 0 || n > 256 || j + 17 + n > segEnd) return None
-            val syms = Array.tabulate(n)(k => u8(j + 17 + k))
-            val t = new HuffTable(counts, syms)
-            if (tc == 0) dcT(th) = t else acT(th) = t
-            j += 17 + n
-          }
-        case 0xc0 => // SOF0 baseline
-          if (seg + 6 > segEnd) return None // truncated frame header
-          if (u8(seg) != 8) return None // precision
-          h = be16(seg + 1); w = be16(seg + 3)
-          ncomp = u8(seg + 5)
-          if (ncomp != 1 && ncomp != 3) return None
-          if (seg + 6 + 3 * ncomp > segEnd) return None
-          compId = new Array[Int](ncomp); compQ = new Array[Int](ncomp)
-          compH = new Array[Int](ncomp); compV = new Array[Int](ncomp)
-          for (c <- 0 until ncomp) {
-            compId(c) = u8(seg + 6 + 3 * c)
-            compH(c) = u8(seg + 7 + 3 * c) >> 4
-            compV(c) = u8(seg + 7 + 3 * c) & 15
-            if (compH(c) < 1 || compH(c) > 2 ||
-                compV(c) < 1 || compV(c) > 2) return None
-            compQ(c) = u8(seg + 8 + 3 * c)
-            if (compQ(c) > 3) return None // qt has 4 slots (B.2.2)
-          }
-          if (w <= 0 || h <= 0 || w.toLong * h > (1L << 24)) return None
-        case 0xc2 => // SOF2 progressive: hand the whole file to Annex G
-          return decodeProgressive(p)
-        case 0xc1 | 0xc3 | 0xc5 | 0xc6 | 0xc7 | 0xc9 | 0xca |
-            0xcb | 0xcd | 0xce | 0xcf =>
-          return None // lossless/arithmetic/hierarchical: out of scope
-        case 0xdd => // DRI: restart every n MCUs
-          if (len != 4) return None
-          restartInterval = be16(seg)
-        case 0xda => // SOS
-          if (seg + 1 > segEnd) return None // truncated scan header
-          if (ncomp == 0 || u8(seg) != ncomp) return None
-          // component selectors + Ss/Se/Ah-Al must fit the segment
-          if (seg + 1 + 2 * ncomp + 3 > segEnd) return None
-          scanDc = new Array[Int](ncomp); scanAc = new Array[Int](ncomp)
-          for (c <- 0 until ncomp) {
-            val sel = u8(seg + 1 + 2 * c)
-            val sofIdx = compId.indexOf(sel)
-            if (sofIdx < 0) return None
-            scanDc(sofIdx) = u8(seg + 2 + 2 * c) >> 4
-            scanAc(sofIdx) = u8(seg + 2 + 2 * c) & 15
-            // table ids are 4-bit on the wire but the slot arrays have 4
-            // entries (B.2.3) — reject instead of indexing out of bounds
-            if (scanDc(sofIdx) > 3 || scanAc(sofIdx) > 3) return None
-          }
-          scanStart = segEnd
-        case _ => () // APPn/COM/etc: skip
-      }
-      i = segEnd
-    }
-    if (w == 0) return None
-    for (c <- 0 until ncomp)
-      if (qt(compQ(c)) == null || dcT(scanDc(c)) == null ||
-          acT(scanAc(c)) == null) return None
-    val hmax = compH.max; val vmax = compV.max
-    val mcuW = (w + 8 * hmax - 1) / (8 * hmax)
-    val mcuH = (h + 8 * vmax - 1) / (8 * vmax)
-    // per-component plane dims (A.1.1: ceil(dim * sampling / max))
-    val pw = Array.tabulate(ncomp)(c => (w * compH(c) + hmax - 1) / hmax)
-    val ph = Array.tabulate(ncomp)(c => (h * compV(c) + vmax - 1) / vmax)
-    val planes = Array.tabulate(ncomp)(c => new Array[Byte](pw(c) * ph(c)))
-    val r = new BitReader(p, scanStart)
-    val coef = new Array[Int](64)
-    val pred = new Array[Int](ncomp)
-    var mcuDone = 0
-    var my = 0
-    while (my < mcuH) {
-      var mx = 0
-      while (mx < mcuW) {
-        // restart boundary: byte-align, consume RSTn (cycling 0-7),
-        // reset every DC predictor (T.81 F.2.1.3.1)
-        if (restartInterval > 0 && mcuDone > 0 &&
-            mcuDone % restartInterval == 0) {
-          val m = r.restartMarker()
-          if (m != (mcuDone / restartInterval - 1) % 8) return None
-          java.util.Arrays.fill(pred, 0)
-        }
-        var c = 0
-        while (c < ncomp) { // interleaved MCU: hi x vi blocks per comp
-          val q = qt(compQ(c))
-          var v = 0
-          while (v < compV(c)) {
-            var u = 0
-            while (u < compH(c)) {
-              java.util.Arrays.fill(coef, 0)
-              // DC: category + extend bits, differential per component
-              val t = r.decode(dcT(scanDc(c)))
-              if (t > 11 || r.bad) return None
-              pred(c) += extend(r.receive(t), t)
-              coef(0) = pred(c) * q(0)
-              // AC: run-length of zigzag coefficients
-              var k = 1
-              var eob = false
-              while (k < 64 && !eob) {
-                val rs = r.decode(acT(scanAc(c)))
-                if (r.bad) return None
-                val run = rs >> 4; val s = rs & 15
-                if (s == 0) {
-                  if (run == 15) k += 16 // ZRL
-                  else eob = true
-                } else {
-                  k += run
-                  if (k > 63) return None
-                  coef(ZigZag(k)) = extend(r.receive(s), s) * q(ZigZag(k))
-                  k += 1
-                }
-              }
-              if (r.bad) return None
-              idctBlock(coef, planes(c), pw(c), ph(c),
-                (mx * compH(c) + u) * 8, (my * compV(c) + v) * 8)
-              u += 1
-            }
-            v += 1
-          }
-          c += 1
-        }
-        mcuDone += 1
-        mx += 1
-      }
-      my += 1
-    }
-    Some(toPixels(w, h, ncomp, planes, pw, compH, compV, hmax, vmax))
-  }
-
-  /** Assemble decoded component planes into the output tuple: grayscale
-    * passthrough, or JFIF YCbCr → RGB (rounded and clamped) with
-    * subsampled chroma upsampled by sample replication (x·hi/hmax maps
-    * 1:1 when the component is full-resolution). Shared by the baseline
-    * and progressive paths.
-    */
-  private def toPixels(w: Int, h: Int, ncomp: Int,
-      planes: Array[Array[Byte]], pw: Array[Int], compH: Array[Int],
-      compV: Array[Int], hmax: Int,
-      vmax: Int): (Int, Int, Int, Array[Byte]) = {
-    if (ncomp == 1) (w, h, 1, planes(0))
-    else {
-      val out = new Array[Byte](w * h * 3)
-      def clamp(v: Long): Byte =
-        (if (v < 0) 0 else if (v > 255) 255 else v.toInt).toByte
-      def sample(c: Int, x: Int, y: Int): Int =
-        planes(c)((y * compV(c) / vmax) * pw(c) + x * compH(c) / hmax) & 0xff
-      var y0 = 0
-      while (y0 < h) {
-        var x0 = 0
-        while (x0 < w) {
-          val k = y0 * w + x0
-          val y = sample(0, x0, y0)
-          val cb = sample(1, x0, y0) - 128
-          val cr = sample(2, x0, y0) - 128
-          out(k * 3) = clamp(math.round(y + 1.402 * cr))
-          out(k * 3 + 1) =
-            clamp(math.round(y - 0.344136 * cb - 0.714136 * cr))
-          out(k * 3 + 2) = clamp(math.round(y + 1.772 * cb))
-          x0 += 1
-        }
-        y0 += 1
-      }
-      (w, h, 3, out)
-    }
-  }
-
-  /** Decode a PROGRESSIVE JPEG (SOF2, T.81 Annex G): multiple scans,
-    * each carrying one spectral band (Ss..Se) of one or all components
-    * at one successive-approximation precision (Ah/Al) — first DC scans
-    * with point-transformed differentials, DC refinement bits, AC first
-    * scans with end-of-band (EOBn) runs spanning blocks, and AC
-    * refinement scans that insert ±1·2^Al coefficients and correct
-    * already-nonzero ones with interleaved correction bits (G.1.2.3).
-    * Coefficients for the whole image accumulate across scans (the
-    * inherent memory cost of progressive decoding — ~4 B/coefficient),
-    * so the pixel cap is tighter than the baseline path's. Scans must
-    * be fully interleaved (all components) or single-component, which
-    * covers every mainstream encoder's output. Dequantization, IDCT and
-    * color conversion run once at EOI through the same machinery as the
-    * baseline path.
-    */
-  private def decodeProgressive(
-      p: Array[Byte]): Option[(Int, Int, Int, Array[Byte])] = {
-    def u8(i: Int) = p(i) & 0xff
-    def be16(i: Int) = (u8(i) << 8) | u8(i + 1)
-    if (p.length < 4 || u8(0) != 0xff || u8(1) != 0xd8) return None
-    var i = 2
-    val qt = new Array[Array[Int]](4)
-    val dcT = new Array[HuffTable](4)
-    val acT = new Array[HuffTable](4)
-    var w = 0; var h = 0; var ncomp = 0
-    var compQ: Array[Int] = null; var compId: Array[Int] = null
-    var compH: Array[Int] = null; var compV: Array[Int] = null
-    var restartInterval = 0
-    var hmax = 0; var vmax = 0; var mcuW = 0; var mcuH = 0
-    var pw: Array[Int] = null; var ph: Array[Int] = null
-    var bw: Array[Int] = null // block grid padded to MCU boundary
-    var nbw: Array[Int] = null; var nbh: Array[Int] = null // ceil(plane/8)
-    var coefs: Array[Array[Int]] = null // per comp, natural order, 64/block
-    var nScans = 0
-    while (true) {
-      if (i + 2 > p.length || u8(i) != 0xff) return None
-      val m = u8(i + 1)
-      if (m == 0xd9) { // EOI: dequantize + IDCT + assemble
-        if (coefs == null || nScans == 0) return None
-        for (c <- 0 until ncomp) if (qt(compQ(c)) == null) return None
-        val planes = Array.tabulate(ncomp)(c => new Array[Byte](pw(c) * ph(c)))
-        val block = new Array[Int](64)
-        var c = 0
-        while (c < ncomp) {
-          val q = qt(compQ(c))
-          var by = 0
-          while (by < nbh(c)) {
-            var bx = 0
-            while (bx < nbw(c)) {
-              val off = (by * bw(c) + bx) * 64
-              var k = 0
-              while (k < 64) { block(k) = coefs(c)(off + k) * q(k); k += 1 }
-              idctBlock(block, planes(c), pw(c), ph(c), bx * 8, by * 8)
-              bx += 1
-            }
-            by += 1
-          }
-          c += 1
-        }
-        return Some(toPixels(w, h, ncomp, planes, pw, compH, compV,
-          hmax, vmax))
-      }
-      if (i + 4 > p.length) return None
-      val len = be16(i + 2)
-      if (len < 2 || i + 2 + len > p.length) return None
-      val seg = i + 4
-      val segEnd = i + 2 + len
-      var nextI = segEnd
-      m match {
-        case 0xdb => // DQT (tables may arrive between scans)
-          var j = seg
-          while (j < segEnd) {
-            val pq = u8(j) >> 4; val tq = u8(j) & 15
-            if (pq != 0 || tq > 3 || j + 65 > segEnd) return None
-            val t = new Array[Int](64)
-            var k = 0
-            while (k < 64) { t(ZigZag(k)) = u8(j + 1 + k); k += 1 }
-            qt(tq) = t
-            j += 65
-          }
-        case 0xc4 => // DHT (scans routinely redefine tables)
-          var j = seg
-          while (j < segEnd) {
-            if (j + 17 > segEnd) return None
-            val tc = u8(j) >> 4; val th = u8(j) & 15
-            if (tc > 1 || th > 3) return None
-            val counts = Array.tabulate(16)(k => u8(j + 1 + k))
-            val n = counts.sum
-            if (n == 0 || n > 256 || j + 17 + n > segEnd) return None
-            val syms = Array.tabulate(n)(k => u8(j + 17 + k))
-            val t = new HuffTable(counts, syms)
-            if (tc == 0) dcT(th) = t else acT(th) = t
-            j += 17 + n
-          }
-        case 0xdd => // DRI
-          if (len != 4) return None
-          restartInterval = be16(seg)
-        case 0xc2 => // SOF2: allocate full-image coefficient storage
-          if (coefs != null) return None // one frame per file
-          if (seg + 6 > segEnd) return None
-          if (u8(seg) != 8) return None
-          h = be16(seg + 1); w = be16(seg + 3)
-          ncomp = u8(seg + 5)
-          if (ncomp != 1 && ncomp != 3) return None
-          if (seg + 6 + 3 * ncomp > segEnd) return None
-          compId = new Array[Int](ncomp); compQ = new Array[Int](ncomp)
-          compH = new Array[Int](ncomp); compV = new Array[Int](ncomp)
-          for (c <- 0 until ncomp) {
-            compId(c) = u8(seg + 6 + 3 * c)
-            compH(c) = u8(seg + 7 + 3 * c) >> 4
-            compV(c) = u8(seg + 7 + 3 * c) & 15
-            if (compH(c) < 1 || compH(c) > 2 ||
-                compV(c) < 1 || compV(c) > 2) return None
-            compQ(c) = u8(seg + 8 + 3 * c)
-            if (compQ(c) > 3) return None // qt has 4 slots (B.2.2)
-          }
-          if (w <= 0 || h <= 0 || w.toLong * h > (1L << 22)) return None
-          hmax = compH.max; vmax = compV.max
-          mcuW = (w + 8 * hmax - 1) / (8 * hmax)
-          mcuH = (h + 8 * vmax - 1) / (8 * vmax)
-          pw = Array.tabulate(ncomp)(c => (w * compH(c) + hmax - 1) / hmax)
-          ph = Array.tabulate(ncomp)(c => (h * compV(c) + vmax - 1) / vmax)
-          bw = Array.tabulate(ncomp)(c => mcuW * compH(c))
-          val bh = Array.tabulate(ncomp)(c => mcuH * compV(c))
-          nbw = Array.tabulate(ncomp)(c => (pw(c) + 7) / 8)
-          nbh = Array.tabulate(ncomp)(c => (ph(c) + 7) / 8)
-          coefs = Array.tabulate(ncomp)(c => new Array[Int](bw(c) * bh(c) * 64))
-        case 0xc0 | 0xc1 | 0xc3 | 0xc5 | 0xc6 | 0xc7 | 0xc9 | 0xca |
-            0xcb | 0xcd | 0xce | 0xcf =>
-          return None // a second frame type inside a progressive file
-        case 0xda => // SOS: one scan of one band at one precision
-          if (coefs == null) return None
-          if (seg + 1 > segEnd) return None
-          val ns = u8(seg)
-          if (ns < 1 || ns > ncomp) return None
-          if (seg + 1 + 2 * ns + 3 > segEnd) return None
-          val scanComp = new Array[Int](ns)
-          val scanDc = new Array[Int](ns); val scanAc = new Array[Int](ns)
-          for (j <- 0 until ns) {
-            val sel = u8(seg + 1 + 2 * j)
-            val idx = compId.indexOf(sel)
-            if (idx < 0) return None
-            scanComp(j) = idx
-            scanDc(j) = u8(seg + 2 + 2 * j) >> 4
-            scanAc(j) = u8(seg + 2 + 2 * j) & 15
-            // 4-bit wire ids vs 4-entry slot arrays (B.2.3): reject here
-            // rather than index dcT/acT out of bounds below
-            if (scanDc(j) > 3 || scanAc(j) > 3) return None
-          }
-          val ss = u8(seg + 1 + 2 * ns)
-          val se = u8(seg + 2 + 2 * ns)
-          val ah = u8(seg + 3 + 2 * ns) >> 4
-          val al = u8(seg + 3 + 2 * ns) & 15
-          // G.1.1.1: DC band is exactly {0}; AC bands are single-component
-          // and within 1..63; approximation steps lower one bit at a time
-          if (ss == 0 && se != 0) return None
-          if (ss > 0 && (ns != 1 || se < ss || se > 63)) return None
-          if (ns != 1 && ns != ncomp) return None
-          if (al > 13 || (ah != 0 && ah != al + 1)) return None
-          if (ss == 0 && ah == 0)
-            for (j <- 0 until ns)
-              if (dcT(scanDc(j)) == null) return None
-          if (ss > 0 && acT(scanAc(0)) == null) return None
-          val r = new BitReader(p, segEnd)
-          val pred = new Array[Int](ns)
-          var eobrun = 0
-          var bad = false
-
-          // one AC data unit, first pass (Ah = 0): run-length with EOBn
-          def acFirst(arr: Array[Int], off: Int): Unit = {
-            if (eobrun > 0) { eobrun -= 1; return }
-            var k = ss
-            while (k <= se) {
-              val rs = r.decode(acT(scanAc(0)))
-              if (r.bad) { bad = true; return }
-              val run = rs >> 4; val s = rs & 15
-              if (s == 0) {
-                if (run < 15) {
-                  eobrun = (1 << run) - 1 +
-                    (if (run > 0) r.receive(run) else 0)
-                  return
-                }
-                k += 16 // ZRL
-              } else {
-                k += run
-                if (k > se) { bad = true; return }
-                arr(off + ZigZag(k)) = extend(r.receive(s), s) << al
-                k += 1
-              }
-            }
-          }
-
-          // one AC data unit, refinement pass (G.1.2.3): insert ±2^Al,
-          // correct nonzero-history coefficients with one bit each
-          def acRefine(arr: Array[Int], off: Int): Unit = {
-            val p1 = 1 << al; val m1 = -1 << al
-            def correct(idx: Int): Unit =
-              if (r.receive(1) == 1 && (arr(idx) & p1) == 0)
-                arr(idx) += (if (arr(idx) >= 0) p1 else m1)
-            var k = ss
-            if (eobrun == 0) {
-              var atEob = false
-              while (!atEob && k <= se) {
-                val rs = r.decode(acT(scanAc(0)))
-                if (r.bad) { bad = true; return }
-                var run = rs >> 4; val s = rs & 15
-                var newVal = 0
-                if (s == 0) {
-                  if (run < 15) {
-                    eobrun = (1 << run) +
-                      (if (run > 0) r.receive(run) else 0)
-                    atEob = true
-                  } // run == 15: ZRL — skip 16 zero-history positions
-                } else {
-                  if (s != 1) { bad = true; return } // only ±1 insertable
-                  newVal = if (r.nextBit() == 1) p1 else m1
-                }
-                if (!atEob) {
-                  // advance run zero-history positions, correcting
-                  // nonzero ones along the way, then place newVal
-                  var placed = false
-                  while (!placed && k <= se) {
-                    val idx = off + ZigZag(k)
-                    if (arr(idx) != 0) correct(idx)
-                    else if (run == 0) {
-                      if (newVal != 0) arr(idx) = newVal
-                      placed = true
-                    } else run -= 1
-                    k += 1
-                    if (r.bad) { bad = true; return }
-                  }
-                  if (!placed && newVal != 0) { bad = true; return }
-                }
-              }
-            }
-            if (eobrun > 0) {
-              // inside an EOB run every remaining nonzero coefficient of
-              // the band still receives its correction bit
-              while (k <= se) {
-                val idx = off + ZigZag(k)
-                if (arr(idx) != 0) {
-                  correct(idx)
-                  if (r.bad) { bad = true; return }
-                }
-                k += 1
-              }
-              eobrun -= 1
-            }
-          }
-
-          // one DC data unit (scan slot j, block offset off)
-          def dcUnit(j: Int, arr: Array[Int], off: Int): Unit = {
-            if (ah == 0) {
-              val t = r.decode(dcT(scanDc(j)))
-              if (t > 11 || r.bad) { bad = true; return }
-              pred(j) += extend(r.receive(t), t)
-              arr(off) = pred(j) << al
-            } else {
-              arr(off) |= r.nextBit() << al // next magnitude bit (G.1.2.1)
-            }
-            if (r.bad) bad = true
-          }
-
-          def restartBoundary(done: Int): Unit =
-            if (restartInterval > 0 && done > 0 &&
-                done % restartInterval == 0) {
-              val mk = r.restartMarker()
-              if (mk != (done / restartInterval - 1) % 8) bad = true
-              java.util.Arrays.fill(pred, 0)
-              eobrun = 0
-            }
-
-          if (ns > 1) {
-            // fully interleaved scan (DC only: AC bands force ns == 1):
-            // MCU order with sampling-factor geometry, as in baseline
-            var mcuDone = 0
-            var my = 0
-            while (my < mcuH && !bad) {
-              var mx = 0
-              while (mx < mcuW && !bad) {
-                restartBoundary(mcuDone)
-                var j = 0
-                while (j < ns && !bad) {
-                  val c = scanComp(j)
-                  var v = 0
-                  while (v < compV(c) && !bad) {
-                    var u = 0
-                    while (u < compH(c) && !bad) {
-                      val off = ((my.toLong * compV(c) + v) * bw(c) +
-                        mx * compH(c) + u).toInt * 64
-                      dcUnit(j, coefs(c), off)
-                      u += 1
-                    }
-                    v += 1
-                  }
-                  j += 1
-                }
-                mcuDone += 1
-                mx += 1
-              }
-              my += 1
-            }
-          } else {
-            // non-interleaved: raster over the component's own block grid
-            // (no MCU padding — T.81 A.2.2), restart counts data units
-            val c = scanComp(0)
-            var done = 0
-            var by = 0
-            while (by < nbh(c) && !bad) {
-              var bx = 0
-              while (bx < nbw(c) && !bad) {
-                restartBoundary(done)
-                val off = (by * bw(c) + bx) * 64
-                if (ss == 0) dcUnit(0, coefs(c), off)
-                else if (ah == 0) acFirst(coefs(c), off)
-                else acRefine(coefs(c), off)
-                done += 1
-                bx += 1
-              }
-              by += 1
-            }
-          }
-          if (bad || r.bad) return None
-          nScans += 1
-          // scan entropy data ends at r.pos; resync to the next marker
-          // (skipping stuffed FF00s and any stray pad bytes)
-          var j = r.pos
-          var found = -1
-          while (found < 0 && j + 1 < p.length) {
-            if (u8(j) == 0xff) {
-              val mm = u8(j + 1)
-              if (mm == 0x00 || (mm >= 0xd0 && mm <= 0xd7)) j += 2
-              else found = j
-            } else j += 1
-          }
-          if (found < 0) return None
-          nextI = found
-        case _ => () // APPn/COM: skip
-      }
-      i = nextI
-    }
-    None // unreachable: the loop exits via return
-  }
-
-  /** Direct 2-D type-III DCT (T.81 A.3.3) + level shift + clamp, written
-    * into the image at (ox, oy) with edge clipping.
-    */
-  /** Precomputed scaled-cosine basis `T(x)(u) = cu·cos((2x+1)uπ/16)`
-    * (cu = 1/√2 at u = 0) — shared by both separable IDCT passes.
-    */
-  private val IdctT: Array[Array[Double]] = Array.tabulate(8, 8) { (x, u) =>
-    (if (u == 0) 0.7071067811865476 else 1.0) *
-      math.cos((2 * x + 1) * u * math.Pi / 16)
-  }
-
-  /** SEPARABLE 2-D type-III DCT (T.81 A.3.3, factored row/column passes
-    * over the precomputed [[IdctT]] basis — 8 terms per output per pass
-    * instead of the direct form's 64, and no trig calls in the loop) +
-    * level shift + clamp, written into the image at (ox, oy) with edge
-    * clipping. All-zero coefficient rows are skipped in both passes, so
-    * the dominant DC-only block costs ~2 passes over one row.
-    */
-  private def idctBlock(coef: Array[Int], out: Array[Byte], w: Int,
-      h: Int, ox: Int, oy: Int): Unit = {
-    val tmp = new Array[Double](64) // row pass result, [v][x]
-    val rowNz = new Array[Boolean](8)
-    var v = 0
-    while (v < 8) {
-      var any = false
-      var u = 0
-      while (u < 8) { if (coef(v * 8 + u) != 0) any = true; u += 1 }
-      if (any) {
-        rowNz(v) = true
-        var x = 0
-        while (x < 8) {
-          var s = 0.0
-          var uu = 0
-          while (uu < 8) {
-            val c = coef(v * 8 + uu)
-            if (c != 0) s += IdctT(x)(uu) * c
-            uu += 1
-          }
-          tmp(v * 8 + x) = s
-          x += 1
-        }
-      }
-      v += 1
-    }
-    var y = 0
-    while (y < 8 && oy + y < h) {
-      var x = 0
-      while (x < 8 && ox + x < w) {
-        var sum = 0.0
-        var vv = 0
-        while (vv < 8) {
-          if (rowNz(vv)) sum += IdctT(y)(vv) * tmp(vv * 8 + x)
-          vv += 1
-        }
-        val s = math.round(sum / 4).toInt + 128
-        out((oy + y) * w + ox + x) =
-          (if (s < 0) 0 else if (s > 255) 255 else s).toByte
-        x += 1
-      }
-      y += 1
-    }
-  }
+  def decode(p: Array[Byte]): Option[(Int, Int, Int, Array[Byte])] =
+    Multimodal.decodeImage(p, "jpeg")
+      .map { case (w, h, c, px, _) => (w, h, c, px) }
 
   // ---- encoder (for planting known content in tests/oracles) -----------
 

@@ -1,6 +1,14 @@
 package graft.multimodal
 
+import java.awt.color.ColorSpace
+import java.awt.image.IndexColorModel
 import java.security.MessageDigest
+import javax.imageio.{ImageIO, ImageReader}
+import javax.imageio.event.IIOReadWarningListener
+import javax.imageio.spi.ImageReaderSpi
+import javax.imageio.stream.ImageInputStream
+
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -8,15 +16,15 @@ import org.apache.spark.sql.functions._
 /** Multimodal column handling: images/audio/video travel as opaque `binary`
   * columns with typed metadata extracted by a per-partition decode pass.
   *
-  * The decode itself is a STUB (no image/audio codecs in this
-  * environment): [[decodeStub]] derives deterministic fake metadata from
-  * the payload's md5, so the pipeline is fully testable and
-  * oracle-reproducible. The Spark-side plumbing is real and is the part
-  * that matters at 100 TB:
+  * Still images (PNG, JPEG, GIF) decode to pixels through the JDK's
+  * `javax.imageio` readers ([[decodeImage]]); WAV/PCM, the AVI container
+  * and the PNG/JPEG/AVI header probes are parsed here. A payload nothing
+  * decodes gets [[decodeStub]]'s deterministic md5-derived metadata, so
+  * a poison payload never fails the batch and every output stays
+  * oracle-reproducible. The Spark-side plumbing is the part that matters
+  * at 100 TB:
   *  - payloads stay in `binary` columns end-to-end (no stringification);
-  *  - decode runs via `mapPartitions` over a typed Dataset — one decoder
-  *    instance per partition (the expensive codec init is amortized across
-  *    the whole batch, the exact shape a JNI/FFmpeg/Pillow bridge needs);
+  *  - decode runs via `mapPartitions` over a typed Dataset;
   *  - output is a typed case class → clean columnar schema for downstream
   *    relational ops.
   */
@@ -113,194 +121,124 @@ object Multimodal {
     b.array()
   }
 
-  /** REAL pure-JVM PNG PIXEL decode — no codec dependency, just the spec
-    * (RFC 2083): chunk walk → IDAT concat → `java.util.zip.Inflater` →
-    * per-scanline unfilter (all five filter types: None/Sub/Up/Average/
-    * Paeth, §6), both progressive-display layouts (non-interlaced and
-    * Adam7 seven-pass interlaced, §2.6 — each pass unfiltered as an
-    * independent sub-image, then scattered to its (x0 + c·dx, y0 + r·dy)
-    * grid positions). Supports the common 8-bit color types — grayscale
-    * (0, 1 ch), truecolor (2, 3 ch), indexed-palette (3, expanded
-    * through the PLTE chunk to 3 ch), truecolor+alpha (4 ch).
-    * Returns `(width, height, channels, pixels)` with pixels row-major
-    * channel-interleaved, or None for anything else (16-bit,
-    * truncated, corrupt) — callers fall back to the md5 stub, so a
-    * poison payload can never fail the batch. A decompressed-size guard
-    * (64 MiB) bounds memory against zip-bomb payloads; real deployments
-    * size it to the largest legitimate asset.
+  /** The largest image [[decodeImage]] allocates a raster for: 2^24
+    * pixels (a 64 MiB RGBA raster), checked against the header's
+    * `width·height` before any pixel buffer exists. Real deployments size
+    * it to the largest legitimate asset.
     */
-  def decodePixels(p: Array[Byte]): Option[(Int, Int, Int, Array[Byte])] = {
-    def u8(i: Int) = p(i) & 0xff
-    def be32(i: Int) =
-      (u8(i) << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
-    val PngSig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
-    if (p.length < 45 || !PngSig.indices.forall(i => u8(i) == PngSig(i)))
+  private val MaxDecodePixels: Long = 1L << 24
+
+  /** The JDK readers [[decodeImage]] may use, by format name. Only these
+    * three: the full `ImageIO.getImageReaders` probe would also accept
+    * BMP, TIFF and WBMP, and WBMP has no magic bytes, so arbitrary binary
+    * could false-positive (the risk [[probeImage]] guards against).
+    * Cache-file streams are switched off once, before the first decode.
+    */
+  private lazy val Readers: Map[String, ImageReaderSpi] = {
+    ImageIO.setUseCache(false)
+    Seq("png", "jpeg", "gif").map { f =>
+      f -> ImageIO.getImageReadersByFormatName(f).next().getOriginatingProvider
+    }.toMap
+  }
+
+  /** Still-image PIXEL decode through the JDK's `javax.imageio` reader
+    * for the first of `formats` whose magic bytes match. Returns
+    * `(width, height, channels, pixels, frames)` with pixels row-major
+    * channel-interleaved: 8-bit grayscale (1 ch, read from the raster —
+    * `getRGB` would apply a gray colour-space conversion), RGB (3 ch),
+    * RGBA (4 ch), or palette images expanded to RGB (3 ch); GIFs decode
+    * their first frame and count every frame. None for anything else —
+    * never an exception, so a poison payload cannot fail the batch —
+    * and on top of what the readers check themselves:
+    *  - the header declares more than [[MaxDecodePixels]];
+    *  - the reader raised any warning (a JPEG missing its EOI, an
+    *    out-of-sequence restart marker — libjpeg resyncs past both);
+    *  - a PNG raster index reaches past the file's PLTE entries (ImageIO
+    *    pads a short palette, so it would decode to a made-up colour);
+    *  - a GIF not ending in its `0x3B` trailer, or whose first frame does
+    *    not cover the logical screen.
+    */
+  private[multimodal] def decodeImage(p: Array[Byte], formats: String*)
+      : Option[(Int, Int, Int, Array[Byte], Int)] = {
+    val spis = formats.map(f => f -> Readers(f))
+    val in =
+      ImageIO.createImageInputStream(new java.io.ByteArrayInputStream(p))
+    try spis.find(_._2.canDecodeInput(in)).flatMap { case (f, spi) =>
+      val reader = spi.createReaderInstance()
+      try readImage(reader, in, p, gif = f == "gif")
+      finally reader.dispose()
+    } catch { case NonFatal(_) => None }
+    finally in.close()
+  }
+
+  private def readImage(reader: ImageReader, in: ImageInputStream,
+      p: Array[Byte],
+      gif: Boolean): Option[(Int, Int, Int, Array[Byte], Int)] = {
+    var warned = false
+    reader.addIIOReadWarningListener(new IIOReadWarningListener {
+      def warningOccurred(r: ImageReader, warning: String): Unit =
+        warned = true
+    })
+    reader.setInput(in, false, false)
+    if (reader.getWidth(0).toLong * reader.getHeight(0) > MaxDecodePixels)
       return None
-    var i = 8
-    var w = 0; var h = 0; var channels = 0; var paletted = false
-    var adam7 = false
-    var palette: Array[Byte] = null
-    var sawIhdr = false; var done = false
-    val idat = new java.io.ByteArrayOutputStream()
-    while (!done && i + 12 <= p.length) {
-      val len = be32(i)
-      if (len < 0 || i + 12 + len > p.length) return None
-      val typ = new String(p, i + 4, 4, "US-ASCII")
-      typ match {
-        case "IHDR" =>
-          if (len != 13) return None
-          w = be32(i + 8); h = be32(i + 12)
-          val (depth, color) = (u8(i + 16), u8(i + 17))
-          val (comp, filt, interlace) = (u8(i + 18), u8(i + 19), u8(i + 20))
-          if (depth != 8 || comp != 0 || filt != 0 || interlace > 1)
-            return None
-          adam7 = interlace == 1
-          channels = color match {
-            case 0 => 1
-            case 2 => 3
-            case 3 => paletted = true; 1 // 1 index byte/px in the stream
-            case 6 => 4
-            case _ => return None
-          }
-          if (w <= 0 || h <= 0 ||
-              (h.toLong * (1L + w.toLong * channels)) > (1L << 26))
-            return None
-          sawIhdr = true
-        case "PLTE" =>
-          if (len % 3 != 0 || len == 0 || len > 768) return None
-          palette = java.util.Arrays.copyOfRange(p, i + 8, i + 8 + len)
-        case "IDAT" => idat.write(p, i + 8, len)
-        case "IEND" => done = true
-        case _      => () // ancillary chunks are skippable by definition
-      }
-      i += 12 + len
-    }
-    if (!sawIhdr || idat.size == 0) return None
-    if (paletted && palette == null) return None
-    val stride = w * channels
-    // Adam7 pass grid (RFC 2083 §2.6): (x0, y0, dx, dy) per pass; a pass
-    // is empty when the image is too small to contain any of its lattice
-    // points, and empty passes contribute no scanlines (not even filter
-    // bytes) to the stream
-    val passes: Array[(Int, Int, Int, Int)] =
-      if (adam7) Array((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8),
-        (2, 0, 4, 4), (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
-      else Array((0, 0, 1, 1))
-    def passDims(p: (Int, Int, Int, Int)): (Int, Int) = {
-      val (x0, y0, dx, dy) = p
-      (if (w > x0) (w - x0 + dx - 1) / dx else 0,
-        if (h > y0) (h - y0 + dy - 1) / dy else 0)
-    }
-    val expect = passes.map { pp =>
-      val (pwp, php) = passDims(pp)
-      if (pwp == 0 || php == 0) 0 else php * (1 + pwp * channels)
-    }.sum
-    val raw = new Array[Byte](expect)
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(idat.toByteArray)
-      var off = 0
-      while (off < expect && !inf.finished()) {
-        val n = inf.inflate(raw, off, expect - off)
-        if (n == 0 && (inf.needsInput() || inf.needsDictionary()))
-          return None // truncated stream
-        off += n
-      }
-      if (off != expect) return None
-    } catch {
-      case _: java.util.zip.DataFormatException => return None
-    } finally inf.end()
-    // unfilter (RFC 2083 §6.3–6.6): each reconstructed byte depends on the
-    // already-reconstructed left/up/upper-left neighbours
-    def paeth(a: Int, b: Int, c: Int): Int = {
-      val est = a + b - c
-      val (pa, pb, pc) =
-        (math.abs(est - a), math.abs(est - b), math.abs(est - c))
-      if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
-    }
-    // unfilter one (sub-)image of pw x ph pixels starting at raw(off);
-    // left/up/upper-left neighbours are WITHIN the sub-image (each Adam7
-    // pass filters as an independent image)
-    def unfilterInto(off: Int, pw: Int, ph: Int,
-        img: Array[Byte]): Boolean = {
-      val st = pw * channels
-      var y = 0
-      while (y < ph) {
-        val ft = raw(off + y * (1 + st)) & 0xff
-        if (ft > 4) return false
-        val ro = off + y * (1 + st) + 1
-        val oo = y * st
-        var j = 0
-        while (j < st) {
-          val x = raw(ro + j) & 0xff
-          val left = if (j >= channels) img(oo + j - channels) & 0xff else 0
-          val up = if (y > 0) img(oo - st + j) & 0xff else 0
-          val ul =
-            if (y > 0 && j >= channels) img(oo - st + j - channels) & 0xff
-            else 0
-          val recon = ft match {
-            case 0 => x
-            case 1 => x + left
-            case 2 => x + up
-            case 3 => x + (left + up) / 2
-            case 4 => x + paeth(left, up, ul)
-          }
-          img(oo + j) = (recon & 0xff).toByte
-          j += 1
+    val img = reader.read(0)
+    val (w, h) = (img.getWidth, img.getHeight)
+    def le16(i: Int) = (p(i) & 0xff) | ((p(i + 1) & 0xff) << 8)
+    if (gif && (p.last != 0x3b || le16(6) != w || le16(8) != h)) return None
+    val frames = if (gif) reader.getNumImages(true) else 1
+    if (warned) return None
+    val raster = img.getRaster
+    (raster.getDataElements(0, 0, w, h, null), img.getColorModel) match {
+      case (idx: Array[Byte], icm: IndexColorModel) =>
+        val n = if (gif) icm.getMapSize
+          else math.min(icm.getMapSize, plteEntries(p))
+        val rgb = new Array[Byte](idx.length * 3)
+        var k = 0
+        while (k < idx.length) {
+          val c = idx(k) & 0xff
+          if (c >= n) return None
+          rgb(3 * k) = icm.getRed(c).toByte
+          rgb(3 * k + 1) = icm.getGreen(c).toByte
+          rgb(3 * k + 2) = icm.getBlue(c).toByte
+          k += 1
         }
-        y += 1
-      }
-      true
-    }
-    val out = new Array[Byte](h * stride)
-    if (!adam7) {
-      if (!unfilterInto(0, w, h, out)) return None
-    } else {
-      var off = 0
-      var pi = 0
-      while (pi < passes.length) {
-        val (x0, y0, dx, dy) = passes(pi)
-        val (pwp, php) = passDims(passes(pi))
-        if (pwp > 0 && php > 0) {
-          val img = new Array[Byte](php * pwp * channels)
-          if (!unfilterInto(off, pwp, php, img)) return None
-          var r = 0
-          while (r < php) {
-            var c = 0
-            while (c < pwp) {
-              val src = (r * pwp + c) * channels
-              val dst = ((y0 + r * dy) * w + (x0 + c * dx)) * channels
-              var ch = 0
-              while (ch < channels) {
-                out(dst + ch) = img(src + ch); ch += 1
-              }
-              c += 1
-            }
-            r += 1
-          }
-          off += php * (1 + pwp * channels)
-        }
-        pi += 1
-      }
-    }
-    if (!paletted) Some((w, h, channels, out))
-    else {
-      // expand PLTE indices to interleaved RGB; an out-of-range index
-      // means the file lies about its palette — reject, don't guess
-      val nColors = palette.length / 3
-      val rgb = new Array[Byte](w * h * 3)
-      var k = 0
-      while (k < w * h) {
-        val idx = out(k) & 0xff
-        if (idx >= nColors) return None
-        rgb(k * 3) = palette(idx * 3)
-        rgb(k * 3 + 1) = palette(idx * 3 + 1)
-        rgb(k * 3 + 2) = palette(idx * 3 + 2)
-        k += 1
-      }
-      Some((w, h, 3, rgb))
+        Some((w, h, 3, rgb, frames))
+      case (px: Array[Byte], cm) =>
+        val bands = raster.getNumBands
+        val space = cm.getColorSpace.getType
+        if ((bands == 1 || bands == 3 || bands == 4) &&
+            raster.getSampleModel.getSampleSize.forall(_ == 8) &&
+            (space == ColorSpace.TYPE_GRAY || space == ColorSpace.TYPE_RGB))
+          Some((w, h, bands, px, frames))
+        else None
+      case _ => None // 16-bit samples
     }
   }
+
+  /** Entries of a PNG's PLTE chunk, read from the file: ImageIO pads the
+    * palette to 2, 4, 16 or 256 entries in its colour model and in its
+    * metadata alike, so neither tells 3 colours from 4.
+    */
+  private def plteEntries(p: Array[Byte]): Int = {
+    val b = java.nio.ByteBuffer.wrap(p)
+    var i = 8
+    while (i + 8 <= p.length) {
+      val len = b.getInt(i)
+      if (b.getInt(i + 4) == 0x504c5445) return len / 3 // "PLTE"
+      if (len < 0 || len > p.length) return 0
+      i += 12 + len
+    }
+    0
+  }
+
+  /** PNG pixel decode ([[decodeImage]] restricted to PNG): every filter
+    * type and both interlace layouts; grayscale (1 ch), truecolor (3 ch),
+    * palette (expanded to 3 ch) and truecolor+alpha (4 ch) at 8 bits per
+    * sample. None for 16-bit, truncated or corrupt files.
+    */
+  def decodePixels(p: Array[Byte]): Option[(Int, Int, Int, Array[Byte])] =
+    decodeImage(p, "png").map { case (w, h, c, px, _) => (w, h, c, px) }
 
   /** Full well-formed PNG with KNOWN pixel content for planting in tests
     * and oracle queries: 8-bit truecolor, deflated IDAT, correct CRCs,
@@ -567,28 +505,26 @@ object Multimodal {
     out
   }
 
-  /** Feature extraction: resize dims, frame sampling, and an 8-dim
-    * embedding — CONTENT-derived for every payload class the repo can
-    * decode (PNG via [[decodePixels]], gray/color baseline JPEG via
-    * [[Jpeg.decode]], GIF first-frame pixels via [[decodeGif]], WAV/PCM
-    * samples via [[decodeWav]] → [[audioFeature]], MJPEG-in-AVI sampled
-    * frames via [[aviJpegFrames]] → [[videoFeature]]); the md5-arithmetic
-    * stub remains ONLY for genuinely undecodable bytes, so every payload
-    * gets a deterministic oracle-reproducible feature and a real learned
-    * encoder has exactly one seam to fill.
-    */
   /** Decode any still-image payload class the repo handles to
-    * `(width, height, channels, pixels)`: PNG ([[decodePixels]]), then
-    * baseline/progressive JPEG ([[Jpeg.decode]] — grayscale comes back
-    * 1-channel), then GIF first frame ([[decodeGif]], palette-expanded
-    * RGB). None for anything else.
+    * `(width, height, channels, pixels)`: one [[decodeImage]] over the
+    * PNG, JPEG (baseline or progressive; grayscale comes back 1-channel)
+    * and GIF (first frame, palette-expanded RGB) readers. None for
+    * anything else.
     */
   def decodeAnyPixels(
       payload: Array[Byte]): Option[(Int, Int, Int, Array[Byte])] =
-    decodePixels(payload)
-      .orElse(Jpeg.decode(payload))
-      .orElse(decodeGif(payload).map { case (w, h, _, px) => (w, h, 3, px) })
+    decodeImage(payload, "png", "jpeg", "gif")
+      .map { case (w, h, c, px, _) => (w, h, c, px) }
 
+  /** Feature extraction: resize dims, frame sampling, and an 8-dim
+    * embedding — CONTENT-derived for every payload class the repo can
+    * decode (PNG, JPEG and GIF first-frame pixels via [[decodeAnyPixels]],
+    * WAV/PCM samples via [[decodeWav]] → [[audioFeature]], MJPEG-in-AVI
+    * sampled frames via [[aviJpegFrames]] → [[videoFeature]]); the
+    * md5-arithmetic stub remains ONLY for genuinely undecodable bytes, so
+    * every payload gets a deterministic oracle-reproducible feature and a
+    * real learned encoder has exactly one seam to fill.
+    */
   def extractStub(id: Long, kind: String, payload: Array[Byte]): MediaFeatures = {
     val meta = decodeMeta(id, kind, payload)
     val scale = 256.0 / math.max(meta.width, meta.height)
@@ -711,9 +647,8 @@ object Multimodal {
     }
   }
 
-  /** RGB channel stats from a COLOR baseline-JPEG decode
-    * ([[Jpeg.decode]] — interleaved YCbCr 4:4:4 MCUs, per-component DC
-    * prediction, JFIF color conversion).
+  /** RGB channel stats from a COLOR JPEG decode
+    * ([[Jpeg.decode]]: YCbCr converted to RGB).
     */
   def jpegColorStats(media: Dataset[MediaRow]): Dataset[PixelStats] = {
     import media.sparkSession.implicits._
@@ -803,194 +738,17 @@ object Multimodal {
     if (samples == null) None else Some((rate, channels, samples))
   }
 
-  /** REAL GIF decode — pure-JVM LZW: logical-screen descriptor + global
-    * color table, image descriptors walked for the frame count, and the
-    * FIRST frame's LZW stream decoded (variable code width per the spec:
-    * after each dictionary add, width grows when the next code no longer
-    * fits, capped at 12 bits) and expanded through its color table to
-    * interleaved RGB. Returns `(width, height, nFrames, firstFrameRGB)`.
+  /** GIF decode ([[decodeImage]] restricted to GIF): the first frame's
+    * pixels expanded through its colour table to interleaved RGB, plus the
+    * file's frame count. Returns `(width, height, nFrames, firstFrameRGB)`.
     *
     * GIF's ASCII magic ("GIF89a") is exactly the false-positive class
     * [[probeImage]] excludes for header-only probing — here the LZW
-    * stream must DECODE to width×height pixels with in-range color
-    * indices, so a text document discussing GIFs cannot pass. Interlaced
-    * frames are de-interlaced through the four-pass row map;
-    * local-color-table-less-with-no-GCT and >8-bit-code files return
-    * None; callers fall back to the stub.
+    * stream must DECODE and the file must end in its trailer, so a text
+    * document discussing GIFs cannot pass. Callers fall back to the stub.
     */
-  def decodeGif(p: Array[Byte]): Option[(Int, Int, Int, Array[Byte])] = {
-    def u8(i: Int) = p(i) & 0xff
-    def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    if (p.length < 13) return None
-    val hdr = new String(p, 0, 6, "US-ASCII")
-    if (hdr != "GIF87a" && hdr != "GIF89a") return None
-    val w = le16(6); val h = le16(8)
-    if (w <= 0 || h <= 0 || w.toLong * h > (1L << 24)) return None
-    val packed = u8(10)
-    var gct: Array[Byte] = null
-    var i = 13
-    if ((packed & 0x80) != 0) {
-      val n = 2 << (packed & 0x07) // entries
-      if (i + 3 * n > p.length) return None
-      gct = java.util.Arrays.copyOfRange(p, i, i + 3 * n)
-      i += 3 * n
-    }
-    var frames = 0
-    var first: Array[Byte] = null
-    while (i < p.length) {
-      u8(i) match {
-        case 0x3b => // trailer
-          return if (frames > 0 && first != null)
-            Some((w, h, frames, first)) else None
-        case 0x21 => // extension: label + sub-blocks
-          i += 2
-          while (i < p.length && u8(i) != 0) {
-            i += 1 + u8(i)
-            if (i > p.length) return None
-          }
-          i += 1
-        case 0x2c => // image descriptor
-          if (i + 10 > p.length) return None
-          val (fw, fh) = (le16(i + 5), le16(i + 7))
-          val fpacked = u8(i + 9)
-          val interlaced = (fpacked & 0x40) != 0
-          i += 10
-          var table = gct
-          if ((fpacked & 0x80) != 0) {
-            val n = 2 << (fpacked & 0x07)
-            if (i + 3 * n > p.length) return None
-            table = java.util.Arrays.copyOfRange(p, i, i + 3 * n)
-            i += 3 * n
-          }
-          if (table == null) return None
-          if (i >= p.length) return None
-          val minCode = u8(i); i += 1
-          if (minCode < 2 || minCode > 8) return None
-          // gather the LZW payload from the data sub-blocks
-          val data = new java.io.ByteArrayOutputStream()
-          while (i < p.length && u8(i) != 0) {
-            val bl = u8(i)
-            if (i + 1 + bl > p.length) return None
-            data.write(p, i + 1, bl)
-            i += 1 + bl
-          }
-          if (i >= p.length) return None
-          i += 1 // block terminator
-          frames += 1
-          if (first == null) {
-            val stored = lzwDecode(data.toByteArray, minCode, fw * fh)
-              .getOrElse(return None)
-            // interlaced frames store rows in the four GIF passes
-            // (8/8, 8/8+4, 4/4+2, 2/2+1) — map back to display order
-            val idxs =
-              if (!interlaced) stored
-              else {
-                val order = (0 until fh by 8) ++ (4 until fh by 8) ++
-                  (2 until fh by 4) ++ (1 until fh by 2)
-                val t = new Array[Byte](fw * fh)
-                for ((actual, k) <- order.zipWithIndex)
-                  System.arraycopy(stored, k * fw, t, actual * fw, fw)
-                t
-              }
-            val nColors = table.length / 3
-            val rgb = new Array[Byte](fw * fh * 3)
-            var k = 0
-            while (k < fw * fh) {
-              val c = idxs(k) & 0xff
-              if (c >= nColors) return None
-              rgb(k * 3) = table(c * 3)
-              rgb(k * 3 + 1) = table(c * 3 + 1)
-              rgb(k * 3 + 2) = table(c * 3 + 2)
-              k += 1
-            }
-            // frame dims must match the screen for the flat RGB contract
-            if (fw != w || fh != h) return None
-            first = rgb
-          }
-        case _ => return None
-      }
-    }
-    None // no trailer: truncated
-  }
-
-  /** GIF-variant LZW decode (LSB-first bit packing, CLEAR/EOI codes,
-    * width grows after a dictionary add fills the current code space,
-    * 12-bit cap). Returns exactly `expect` indices or None.
-    */
-  private def lzwDecode(d: Array[Byte], minCode: Int,
-      expect: Int): Option[Array[Byte]] = {
-    val clear = 1 << minCode
-    val eoi = clear + 1
-    val out = new Array[Byte](expect)
-    var outN = 0
-    // dictionary as prefix links: suffix byte + prefix code per entry
-    val maxDict = 1 << 12
-    val prefix = new Array[Int](maxDict)
-    val suffix = new Array[Byte](maxDict)
-    var dictSize = eoi + 1
-    var codeSize = minCode + 1
-    var prev = -1
-    var acc = 0L; var nBits = 0; var pos = 0
-    val scratch = new Array[Byte](maxDict)
-    def emit(code: Int): Boolean = { // expand a code to output
-      var c = code; var n = 0
-      while (c >= clear + 2) { // walk the prefix chain
-        scratch(n) = suffix(c); n += 1; c = prefix(c)
-        if (n >= maxDict) return false
-      }
-      scratch(n) = c.toByte; n += 1 // root literal
-      if (outN + n > expect) return false
-      var k = n - 1
-      while (k >= 0) { out(outN) = scratch(k); outN += 1; k -= 1 }
-      true
-    }
-    def firstByteOf(code: Int): Byte = {
-      var c = code
-      while (c >= clear + 2) c = prefix(c)
-      c.toByte
-    }
-    while (pos < d.length || nBits >= codeSize) {
-      while (nBits < codeSize && pos < d.length) {
-        acc |= (d(pos) & 0xffL) << nBits; nBits += 8; pos += 1
-      }
-      if (nBits < codeSize) return None // truncated mid-code
-      val code = (acc & ((1 << codeSize) - 1)).toInt
-      acc >>= codeSize; nBits -= codeSize
-      if (code == clear) {
-        dictSize = eoi + 1; codeSize = minCode + 1; prev = -1
-      } else if (code == eoi) {
-        return if (outN == expect) Some(out) else None
-      } else if (prev == -1) {
-        if (code >= clear) return None // first code must be a literal
-        if (!emit(code)) return None
-        prev = code
-      } else {
-        if (code > dictSize || (code == dictSize && dictSize >= maxDict))
-          return None
-        val cur =
-          if (code < dictSize) code
-          else { // KwKwK case: code == dictSize, entry being defined
-            prefix(dictSize) = prev; suffix(dictSize) = firstByteOf(prev)
-            dictSize += 1
-            if (dictSize == (1 << codeSize) && codeSize < 12) codeSize += 1
-            if (!emit(dictSize - 1)) return None
-            prev = dictSize - 1
-            -1
-          }
-        if (cur >= 0) {
-          if (!emit(cur)) return None
-          if (dictSize < maxDict) {
-            prefix(dictSize) = prev; suffix(dictSize) = firstByteOf(cur)
-            dictSize += 1
-            if (dictSize == (1 << codeSize) && codeSize < 12) codeSize += 1
-          }
-          prev = cur
-        }
-      }
-      if (outN == expect) return Some(out) // EOI may follow; accept
-    }
-    None
-  }
+  def decodeGif(p: Array[Byte]): Option[(Int, Int, Int, Array[Byte])] =
+    decodeImage(p, "gif").map { case (w, h, _, px, n) => (w, h, n, px) }
 
   /** Real GIF with KNOWN pixel content for planting: genuine LZW
     * compression (dictionary strings, KwKwK cases included), with a
@@ -1200,7 +958,7 @@ object Multimodal {
   /** CONTENT-derived video feature: sample 4 evenly-spaced frames from
     * the `movi` list (the same `(j·n)/4` rule as [[extractStub]]'s
     * frame_ids), pixel-decode each through [[decodeAnyPixels]] (MJPEG
-    * frames hit the existing [[Jpeg.decode]]), and average the per-frame
+    * frames decode as JPEG), and average the per-frame
     * [[pixelFeature]]s — frame 0 plus every k-th, never the whole clip,
     * so cost is bounded by the sample count regardless of video length.
     * None unless at least one sampled frame pixel-decodes; a garbage
@@ -1480,8 +1238,7 @@ object Multimodal {
     }
   }
 
-  /** Grayscale stats from a REAL baseline-JPEG decode ([[Jpeg.decodeGray]]
-    * — markers, Huffman, differential DC, dequant, full IDCT); same
+  /** Grayscale stats from a REAL JPEG decode ([[Jpeg.decodeGray]]); same
     * exactness contract as [[PixelStats]] (planted coefficients are
     * quant multiples, so the IDCT output is exact integers).
     */

@@ -271,7 +271,8 @@ class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
               fail(s"UPDATE of partition column '$name' — partition " +
                 "values live in the directory layout; use the Scala " +
                 "API with partitionField")
-            name -> byName(storeAssign(a.value, a.key.dataType, name))
+            name -> byName(storeAssign(a.value, a.key.dataType,
+              s"UPDATE SET $name"))
           }.toMap
           GraftUpdateCommand(g.dest,
             cond.map(byName).getOrElse(lit(true)), set,
@@ -513,6 +514,13 @@ class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
         unsupported(s"ON condition must be a single target-source " +
           s"column equality, got ${other.sql}")
     }
+    // the source column an assignment takes, under the cast Spark's
+    // alignment wraps it in when the types differ
+    def sourceCol(as: Assignment): Option[AttributeReference] =
+      unaligned(as.value, as.key.dataType) match {
+        case v: AttributeReference => Some(v)
+        case _                     => None
+      }
     // "star-shaped": EVERY target column assigned its same-name source
     // column — the only shape that maps to mergeInto's whole-row
     // replacement (a partial SET would need per-column carry the Scala
@@ -520,12 +528,27 @@ class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
     def starAssigns(assigns: Seq[Assignment]): Boolean =
       assigns.length == m.targetTable.output.length &&
         assigns.forall { as =>
-          (as.key, as.value) match {
-            case (k: AttributeReference, v: AttributeReference) =>
+          (as.key, sourceCol(as)) match {
+            case (k: AttributeReference, Some(v)) =>
               srcOut.contains(v) && conf.resolver(k.name, v.name)
             case _ => false
           }
         }
+    // the star forms' merge source: each assigned source column stored
+    // at its target column's type
+    def starSource(act: MergeAction): LogicalPlan = act match {
+      case UpdateAction(_, assigns, _) =>
+        val stored = assigns.flatMap(as => sourceCol(as).map(v =>
+          v.exprId -> storeAssign(v, as.key.dataType,
+            s"MERGE UPDATE SET * ${v.name}"))).toMap
+        val out = m.sourceTable.output.map(a => stored.get(a.exprId) match {
+          case Some(e) if e != a => Alias(e, a.name)()
+          case _                 => a
+        })
+        if (out == m.sourceTable.output) m.sourceTable
+        else Project(out, m.sourceTable)
+      case _ => m.sourceTable
+    }
     def isStarUpdate(act: MergeAction): Boolean = act match {
       case UpdateStarAction(None)            => true
       case UpdateAction(None, assigns, _)    => starAssigns(assigns)
@@ -578,13 +601,14 @@ class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
             if (conf.resolver(keyCol, name))
               fail("WHEN NOT MATCHED BY SOURCE UPDATE cannot SET the " +
                 s"merge key '$name'")
-            name -> byName(a.value)
+            name -> byName(storeAssign(a.value, a.key.dataType,
+              s"WHEN NOT MATCHED BY SOURCE UPDATE SET $name"))
           }.toMap)
-          GraftMergeSyncCommand(g.dest, m.sourceTable, keyCol,
+          GraftMergeSyncCommand(g.dest, starSource(u), keyCol,
             m.targetTable.output.map(_.name), g.refreshTable,
             mergePartition, bsCond.map(byName), bsSet)
         } else
-          GraftMergeCommand(g.dest, m.sourceTable, keyCol, None,
+          GraftMergeCommand(g.dest, starSource(u), keyCol, None,
             m.targetTable.output.map(_.name), g.refreshTable,
             mergePartition)
       // WHEN MATCHED AND f THEN DELETE + UPDATE SET * + INSERT *
@@ -599,7 +623,7 @@ class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
           unsupported("WHEN MATCHED AND <cond> THEN DELETE condition " +
             "must reference only source columns (it marks source rows " +
             "as delete directives)")
-        GraftMergeCommand(g.dest, m.sourceTable, keyCol,
+        GraftMergeCommand(g.dest, starSource(u), keyCol,
           Some(byName(f)), m.targetTable.output.map(_.name),
           g.refreshTable, mergePartition)
       // WHEN MATCHED THEN DELETE, nothing else: delete the matched keys
@@ -647,24 +671,37 @@ class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
     * policy, as Spark's own UPDATE does (a DECIMAL literal into a DOUBLE
     * column must not write DECIMAL files into the table): ANSI (the
     * default) and STRICT refuse an unsafe pair here and raise on
-    * overflow at run time; LEGACY casts as the session does.
+    * overflow at run time; LEGACY casts as the session does. `what`
+    * names the assignment in the refusal. A cast Spark's MERGE
+    * alignment already put around `v` is replaced, so the policy judges
+    * the value's own type.
     */
-  private def storeAssign(v: Expression, to: DataType,
-      name: String): Expression = {
+  private def storeAssign(value: Expression, to: DataType,
+      what: String): Expression = {
     import org.apache.spark.sql.internal.SQLConf.StoreAssignmentPolicy._
+    val v = unaligned(value, to)
     val policy = conf.storeAssignmentPolicy
     val ok = policy match {
       case ANSI   => Cast.canANSIStoreAssign(v.dataType, to)
       case STRICT => Cast.canUpCast(v.dataType, to)
       case _      => true
     }
-    if (!ok) fail(s"UPDATE SET $name: cannot assign " +
+    if (!ok) fail(s"$what: cannot assign " +
       s"${v.dataType.simpleString} to a ${to.simpleString} column " +
       s"under spark.sql.storeAssignmentPolicy=$policy")
     val tz = Some(conf.sessionLocalTimeZone)
     if (v.dataType == to) v
     else if (policy == LEGACY) Cast(v, to, tz)
     else Cast(v, to, tz, EvalMode.ANSI)
+  }
+
+  /** `e` without the cast to `to` Spark's MERGE alignment wraps around
+    * an assigned value of another type; a user's own CAST stays.
+    */
+  private def unaligned(e: Expression, to: DataType): Expression = e match {
+    case c: Cast if c.dataType == to &&
+        c.getTagValue(Cast.USER_SPECIFIED_CAST).isEmpty => c.child
+    case _ => e
   }
 
   private def noSubquery(e: Expression, stmt: String): Unit =

@@ -1621,6 +1621,74 @@ class GraftDmlSpec extends SparkSpec {
     }
   }
 
+  test("MERGE values follow the store-assignment policy: UPDATE SET * " +
+      "/ INSERT * from a DECIMAL source column store DOUBLE into a " +
+      "DOUBLE column (sync, upsert and CDC forms), as does a BY SOURCE " +
+      "UPDATE SET literal; an unsafe pair is refused in both places") {
+    import org.apache.spark.sql.types.DoubleType
+    def liveFileTypes(dest: String): Set[String] =
+      ManifestSink.readBack(spark, dest).inputFiles.toSet.map { f: String =>
+        spark.read.parquet(f).schema("v").dataType.simpleString }
+    val forms = Seq(
+      "sync" -> """WHEN MATCHED THEN UPDATE SET *
+                   WHEN NOT MATCHED THEN INSERT *
+                   WHEN NOT MATCHED BY SOURCE THEN UPDATE SET v = -1.0""",
+      "upsert" -> """WHEN MATCHED THEN UPDATE SET *
+                     WHEN NOT MATCHED THEN INSERT *""",
+      "cdc" -> """WHEN MATCHED AND s.op = 'D' THEN DELETE
+                  WHEN MATCHED THEN UPDATE SET *
+                  WHEN NOT MATCHED THEN INSERT *""")
+    for ((form, clauses) <- forms; srcType <- Seq("DOUBLE", "DECIMAL(10, 2)")) {
+      val what = s"$form from $srcType"
+      val (dest, tbl) = freshTable("dml_merge_assign_")
+      (0L until 10L).map(i => (i, i.toDouble)).toDF("id", "v").coalesce(1)
+        .pipe(df => ManifestSink.statsAppend(df, dest, None, Seq("id")))
+      spark.sql(s"CREATE TABLE $tbl USING graft LOCATION '$dest'")
+      def source(vType: String): Unit =
+        spark.sql(s"SELECT id, CAST(id + 0.5 AS $vType) AS v, 'U' AS op " +
+          "FROM range(5, 15)").createOrReplaceTempView("dml_merge_assign_src")
+      def merge(): Unit = spark.sql(s"MERGE INTO $tbl t USING " +
+        s"dml_merge_assign_src s ON t.id = s.id $clauses").collect()
+      try {
+        source(srcType)
+        merge()
+        assert(liveFileTypes(dest) == Set("double"), what)
+        val fresh = spark.read.format("graft").load(dest)
+        assert(fresh.schema("v").dataType == DoubleType, what)
+        val want = (0L until 15L).map(i => (i,
+          if (i >= 5) i + 0.5 else if (form == "sync") -1.0
+          else i.toDouble))
+        assert(fresh.orderBy("id").as[(Long, Double)].collect().toSeq ==
+          want, what)
+        // STRING → DOUBLE is not a store assignment ANSI allows, from a
+        // source column or as a BY SOURCE SET value
+        source("STRING")
+        intercept[AnalysisException](merge())
+        source("DOUBLE")
+        val e = intercept[AnalysisException](spark.sql(
+          s"""MERGE INTO $tbl t USING dml_merge_assign_src s ON t.id = s.id
+              WHEN MATCHED THEN UPDATE SET *
+              WHEN NOT MATCHED THEN INSERT *
+              WHEN NOT MATCHED BY SOURCE THEN UPDATE SET v = 'gone'"""))
+        assert(e.getMessage.contains("storeAssignmentPolicy"), e.getMessage)
+        assert(spark.table(tbl).orderBy("id").as[(Long, Double)]
+          .collect().toSeq == want, what)
+        // a user's own CAST is the value the policy judges
+        spark.sql(
+          s"""MERGE INTO $tbl t USING dml_merge_assign_src s ON t.id = s.id
+              WHEN MATCHED THEN UPDATE SET *
+              WHEN NOT MATCHED THEN INSERT *
+              WHEN NOT MATCHED BY SOURCE THEN
+                UPDATE SET v = CAST('2.5' AS DOUBLE)""").collect()
+        assert(spark.table(tbl).where("id < 5").as[(Long, Double)]
+          .collect().map(_._2).toSet == Set(2.5), what)
+      } finally {
+        spark.sql(s"DROP TABLE $tbl")
+        spark.catalog.dropTempView("dml_merge_assign_src")
+      }
+    }
+  }
+
   private implicit class Piper[A](a: A) {
     def pipe[B](f: A => B): B = f(a)
   }

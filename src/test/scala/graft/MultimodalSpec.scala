@@ -985,4 +985,150 @@ class MultimodalSpec extends SparkSpec {
       }
     }
   }
+
+  /** Bytes the current thread allocated while `f` ran. */
+  private def allocatedBy[A](f: => A): (A, Long) = {
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val before = mx.getCurrentThreadAllocatedBytes
+    val out = f
+    (out, mx.getCurrentThreadAllocatedBytes - before)
+  }
+
+  private def markerAt(b: Array[Byte], m: Int): Int = {
+    val at = b.sliding(2).indexWhere(p =>
+      (p(0) & 0xff) == 0xff && (p(1) & 0xff) == m)
+    assert(at > 0); at
+  }
+
+  test("decode bound: a header declaring more than 2^24 pixels returns " +
+      "None before any pixel buffer is allocated — PNG IHDR, baseline " +
+      "and progressive JPEG SOF, GIF screen + image descriptor") {
+    import graft.multimodal.Jpeg
+    def be16(b: Array[Byte], i: Int, v: Int): Unit = {
+      b(i) = (v >> 8).toByte; b(i + 1) = v.toByte
+    }
+    def le16(b: Array[Byte], i: Int, v: Int): Unit = {
+      b(i) = v.toByte; b(i + 1) = (v >> 8).toByte
+    }
+    def block(dc: Int) = (_: Int, _: Int, _: Int) => {
+      val c = new Array[Int](64); c(0) = dc; c
+    }
+    // tiny bodies: each is a real 8x8 file whose header is patched
+    def oversized(dim: Int): Seq[(String, Array[Byte])] = {
+      val png = Multimodal.pngPixelBytes(8, 8, (x, y) => (x, y, 0))
+      java.nio.ByteBuffer.wrap(png).putInt(16, dim).putInt(20, dim)
+      val jpg = Jpeg.encodeBaseline(8, 8, 8, 1, block(8))
+      val sof = markerAt(jpg, 0xc0)
+      be16(jpg, sof + 5, dim); be16(jpg, sof + 7, dim)
+      val prog = Jpeg.encodeProgressive(8, 8, 8, 3, block(16))
+      val sof2 = markerAt(prog, 0xc2)
+      be16(prog, sof2 + 5, dim); be16(prog, sof2 + 7, dim)
+      val gif = Multimodal.gifBytes(8, 8,
+        Array.tabulate(12)(i => (i * 20).toByte), (x, y) => (x + y) % 4)
+      le16(gif, 6, dim); le16(gif, 8, dim)        // logical screen
+      le16(gif, 13 + 12 + 5, dim); le16(gif, 13 + 12 + 7, dim) // frame
+      Seq("png" -> png, "jpeg" -> jpg, "progressive" -> prog, "gif" -> gif)
+    }
+    // warm the readers so class initialization is not measured
+    assert(Multimodal.decodeAnyPixels(
+      Multimodal.pngPixelBytes(2, 2, (_, _) => (1, 2, 3))).isDefined)
+    // 4097² is the first square past 2^24: without the bound the
+    // readers allocate 17–72 MB here before the tiny body runs out
+    for (dim <- Seq(4097, 65535); (name, p) <- oversized(dim)) {
+      val (got, bytes) = allocatedBy(Multimodal.decodeAnyPixels(p))
+      assert(got.isEmpty, s"$name ${dim}x$dim")
+      assert(bytes < (4L << 20), s"$name ${dim}x$dim allocated $bytes B")
+      assert(Multimodal.dhash64(p).isEmpty)
+    }
+  }
+
+  test("decode rejects what the platform readers forgive: any reader " +
+      "warning (a baseline JPEG without EOI, like progressive), a " +
+      "palette index past the PLTE entry count, a GIF without its " +
+      "trailer or whose frame does not cover the screen") {
+    import graft.multimodal.Jpeg
+    // JPEG: one rule for both modes — the cut file raises a reader
+    // warning ("missing EOI"), which rejects even though every scan is
+    // present
+    val blocks = (_: Int, bx: Int, _: Int) => {
+      val c = new Array[Int](64); c(0) = 8 * (10 * bx - 87); c
+    }
+    for (jpg <- Seq(Jpeg.encodeBaseline(32, 8, 8, 1, blocks),
+        Jpeg.encodeProgressive(32, 8, 8, 1, blocks))) {
+      assert(Jpeg.decode(jpg).isDefined)
+      assert(Jpeg.decode(jpg.dropRight(2)).isEmpty)
+      assert(Multimodal.decodeAnyPixels(jpg.dropRight(2)).isEmpty)
+    }
+    // PNG palettes: ImageIO pads a short PLTE to 2^depth entries, so the
+    // entry count comes from the file — 3 colours, indices 0..2 decode,
+    // an index of 3 rejects
+    val pal3 = Array[Byte](10, 20, 30, 40, 50, 60, 70, 80, 90)
+    val ok = Multimodal.pngPaletteBytes(3, 3, pal3, (x, _) => x)
+    val Some((_, _, 3, px)) = Multimodal.decodePixels(ok)
+    assert(px.take(9).toSeq == pal3.toSeq)
+    assert(Multimodal.decodePixels(
+      Multimodal.pngPaletteBytes(4, 4, pal3, (x, _) => x)).isEmpty)
+    // GIF: the frame count is the file's, every frame walked
+    val pal = Array.tabulate(12)(i => (i * 20).toByte)
+    def gif(n: Int) = Multimodal.gifBytes(8, 8, pal, (x, y) => (x + y) % 4,
+      nFrames = n)
+    for (n <- 1 to 4)
+      assert(Multimodal.decodeGif(gif(n)).map(_._3).contains(n))
+    // a 3-frame GIF cut anywhere inside frame 3 (or just its trailer)
+    // rejects, and decodeMeta falls back to the stub
+    val three = gif(3)
+    for (cut <- Seq(1, 2, 5, 10, 20)) {
+      val c = three.dropRight(cut)
+      assert(Multimodal.decodeGif(c).isEmpty, s"cut $cut")
+      assert(Multimodal.decodeMeta(1L, "image", c) ==
+        Multimodal.decodeStub(1L, "image", c))
+    }
+    // a first frame smaller than the logical screen has no flat RGB
+    // layout at the screen's size
+    val wide = gif(1).clone()
+    wide(6) = 9 // screen width 9, frame still 8
+    assert(Multimodal.decodeGif(wide).isEmpty)
+  }
+
+  test("poison payloads: every decoder view returns None and never " +
+      "throws — truncated, garbage, text, empty, table selector out of " +
+      "range, oversized header, trailer-less GIF, out-of-palette PNG") {
+    import graft.multimodal.Jpeg
+    val png = Multimodal.pngPixelBytes(11, 16, (x, y) => (x, y, x + y))
+    val jpg = Jpeg.encodeGray(32, 8, 8, (bx, _) => {
+      val c = new Array[Int](64); c(0) = 8 * (10 * bx - 88); c
+    })
+    val gif = Multimodal.gifBytes(8, 8,
+      Array.tabulate(12)(i => (i * 20).toByte), (x, y) => (x + y) % 4)
+    def patched(b: Array[Byte], i: Int, v: Int) = {
+      val c = b.clone(); c(i) = v.toByte; c
+    }
+    val bigPng = png.clone()
+    java.nio.ByteBuffer.wrap(bigPng).putInt(16, 65535).putInt(20, 65535)
+    val poison = Seq(
+      "png truncated" -> png.dropRight(30),
+      "png header only" -> Multimodal.pngBytes(8, 8),
+      "png garbage" -> (png.take(16) ++ Array.fill(40)(7.toByte)),
+      "png oversized" -> bigPng,
+      "png out of palette" -> Multimodal.pngPaletteBytes(4, 4,
+        Array[Byte](1, 2, 3, 4, 5, 6), (x, y) => (x + y) % 4),
+      "jpeg truncated" -> jpg.dropRight(6),
+      "jpeg header only" -> Multimodal.jpegBytes(64, 32),
+      "jpeg garbage" -> (jpg.take(2) ++ Array.fill(40)(0x55.toByte)),
+      "jpeg quant table 4" -> patched(jpg, markerAt(jpg, 0xc0) + 12, 4),
+      "jpeg huffman table 4" -> patched(jpg, markerAt(jpg, 0xda) + 6, 0x40),
+      "gif without trailer" -> gif.dropRight(1),
+      "gif truncated" -> gif.dropRight(9),
+      "gif text" -> "GIF89a is an image format from 1989".getBytes("UTF-8"),
+      "text" -> "plain text".getBytes("UTF-8"),
+      "empty" -> Array.emptyByteArray)
+    for ((name, p) <- poison) {
+      assert(Multimodal.decodeAnyPixels(p).isEmpty, name)
+      assert(Multimodal.decodePixels(p).isEmpty, name)
+      assert(Jpeg.decode(p).isEmpty && Jpeg.decodeGray(p).isEmpty, name)
+      assert(Multimodal.decodeGif(p).isEmpty, name)
+      assert(Multimodal.dhash64(p).isEmpty, name)
+    }
+  }
 }
